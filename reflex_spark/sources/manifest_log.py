@@ -13,6 +13,12 @@ way Delta/Iceberg's transaction logs do, with two invariants:
    (no data scan) — on an object store this is the difference between a
    metadata GET and a full-table LIST+scan per append.
 
+A manifest entry is a commit record in the format EventLog publishes under
+``_commits/`` (``sources.commits``: ``{seq, min_id, max_id, files,
+commit_ts}``), written and read by the same code. Since the manifest names
+every visible file, ``run()`` polls small windows from it on the driver
+(``EventLog.poll_window``).
+
 Compaction commits by atomically repointing a ``CURRENT`` file at a new
 manifest generation (``manifest-<gen>/``), LevelDB-style: there is never a
 moment where the manifest is absent, so a concurrent ``head()``/``read()``
@@ -34,7 +40,6 @@ ShardedEventLog for write scale-out (it accepts any EventLog-shaped ctor).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import tempfile
@@ -43,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from reflex_spark.sources import commits
 from reflex_spark.sources.event_log import EVENT_SCHEMA, EventLog
 from reflex_spark.tables import empty_df
 
@@ -65,15 +71,23 @@ class ManifestEventLog(EventLog):
         return os.path.join(self.path, "manifest")
 
     def _entries(self) -> list[dict]:
-        mdir = self._manifest_dir
-        if not os.path.isdir(mdir):
-            return []
-        out = []
-        for name in sorted(os.listdir(mdir)):
-            if name.endswith(".json"):
-                with open(os.path.join(mdir, name)) as f:
-                    out.append(json.load(f))
-        return out
+        return commits.read_records(self._manifest_dir, self._records)
+
+    def _snapshot(self) -> list[dict]:
+        """The manifest is the visibility point: it always covers the log."""
+        return self._entries()
+
+    def _files(self, entries: list[dict]) -> list[str]:
+        return [p for e in entries for p in commits.record_files(self.path, e)]
+
+    def _parts(self, batch_dir: str) -> list[str]:
+        """A freshly written batch directory's data files, relative to the
+        log root (a commit record's ``files``)."""
+        return sorted(
+            os.path.relpath(os.path.join(batch_dir, f), self.path)
+            for f in os.listdir(batch_dir)
+            if f.startswith("part-")
+        )
 
     def head(self) -> int:
         entries = self._entries()
@@ -92,14 +106,8 @@ class ManifestEventLog(EventLog):
         )
         out.write.mode("overwrite").parquet(batch_dir)  # fully written first
         n = self.spark.read.parquet(batch_dir).count()
-        entry = {"seq": seq, "dir": batch_dir, "min_id": base + 1, "max_id": base + n}
-        mdir = self._manifest_dir
-        os.makedirs(mdir, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=mdir, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(entry, f)
         # the commit point: one atomic rename makes the whole batch visible
-        os.replace(tmp, os.path.join(mdir, f"{seq:08d}.json"))
+        commits.publish(self._manifest_dir, seq, base + 1, base + n, self._parts(batch_dir))
         return base + n
 
     def fill_noops(self, ids: list[int]) -> int:
@@ -116,10 +124,10 @@ class ManifestEventLog(EventLog):
     # -- consumer ----------------------------------------------------------
 
     def read(self) -> DataFrame:
-        entries = self._entries()
-        if not entries:
+        files = self._files(self._entries())
+        if not files:
             return empty_df(self.spark, EVENT_SCHEMA)
-        return self.spark.read.schema(EVENT_SCHEMA).parquet(*[e["dir"] for e in entries])
+        return self.spark.read.schema(EVENT_SCHEMA).parquet(*files)
 
     def read_stream(self, max_files_per_trigger: int | None = None) -> DataFrame:
         """Streaming over the batches tree. The file source's per-file
@@ -153,9 +161,7 @@ class ManifestEventLog(EventLog):
         new_dir = os.path.join(self._batches_dir, f"compact-{os.urandom(6).hex()}")
         df.coalesce(int(target_partitions or 1)).write.mode("overwrite").parquet(new_dir)
         new_mdir = os.path.join(self.path, f"manifest-{gen}")
-        os.makedirs(new_mdir, exist_ok=True)
-        with open(os.path.join(new_mdir, f"{0:08d}.json"), "w") as f:
-            json.dump({"seq": 0, "dir": new_dir, "min_id": 1, "max_id": head}, f)
+        commits.publish(new_mdir, 0, 1, head, self._parts(new_dir))
         # commit point: atomically repoint CURRENT at the new generation
         fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".tmp")
         with os.fdopen(fd, "w") as f:
@@ -164,5 +170,5 @@ class ManifestEventLog(EventLog):
         shutil.rmtree(old_mdir)
         # drop the now-unreferenced batch dirs; checkpointed streaming
         # readers have already processed them (their ledger is per-file)
-        for e in entries:
-            shutil.rmtree(e["dir"], ignore_errors=True)
+        for d in {os.path.dirname(p) for p in self._files(entries)}:
+            shutil.rmtree(d, ignore_errors=True)

@@ -11,11 +11,8 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
-from reflex_spark.sources.event_log import EVENT_SCHEMA, EventLog
-
-_APPEND_SCHEMA = StructType([f for f in EVENT_SCHEMA.fields if f.name != "event_id"])
+from reflex_spark.sources.event_log import EventLog, local_events
 
 EPOCH = datetime(2024, 1, 1)
 
@@ -26,12 +23,14 @@ def make_events(
     start: datetime = EPOCH,
     step_seconds: float = 1.0,
 ) -> DataFrame:
-    """rows = [(event_type, foreign_id), ...] with evenly spaced timestamps."""
-    data = [
-        (etype, fid, start + timedelta(seconds=i * step_seconds), None, None)
-        for i, (etype, fid) in enumerate(rows)
-    ]
-    return spark.createDataFrame(data, _APPEND_SCHEMA)
+    """rows = [(event_type, foreign_id), ...] with evenly spaced timestamps,
+    as a local DataFrame (what a producer's pandas/Arrow frame gives)."""
+    return local_events(
+        spark,
+        [etype for etype, _ in rows],
+        [fid for _, fid in rows],
+        [start + timedelta(seconds=i * step_seconds) for i in range(len(rows))],
+    )
 
 
 def seed_log(spark: SparkSession, path: str, rows: list[tuple[int, str]], **kwargs) -> EventLog:

@@ -15,6 +15,9 @@ stale (the prior design marked the ledger after the swap, so a crash
 between the two double-counted the batch; and its min-max batch key was
 not stable when a restarted stream re-batched with different boundaries).
 
+The ledger also records the Spark schema the table was written with, so
+reads skip Parquet schema inference (a Spark job of its own).
+
 Assumption (holds for both run() and run_stream() over an EventLog): events
 are delivered in non-decreasing event_id order across batches — redelivery
 replays a suffix, never an arbitrary subset. Rows at or below the watermark
@@ -29,8 +32,20 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _WATERMARK_FILE = "_watermark.json"  # "_" prefix → invisible to parquet scans
+
+#: Merges whose input (current rollup + fresh rows) Catalyst estimates at
+#: or below this many bytes run as one task without a shuffle. Measured
+#: faster at the benchmark backfill's 25-323 KB estimates (4 cores); larger
+#: merges keep the shuffle, whose parallelism was not measured against.
+ONE_TASK_MERGE_BYTES = 512 << 10
+
+
+def _plan_bytes(df: DataFrame) -> int:
+    """Catalyst's optimized-plan size estimate for ``df`` (no job runs)."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 class MaterializedCounts:
@@ -65,16 +80,22 @@ class MaterializedCounts:
 
     # -- consumer side -----------------------------------------------------
 
-    def watermark(self) -> int | None:
-        """Max event_id merged into the published table (None = nothing
-        merged yet — NOT 0: fixture-adapted logs may contain event_id 0,
-        and a zero sentinel would silently drop it on the first batch)."""
+    def _ledger(self) -> dict:
+        """The published table's ``_watermark.json`` ({} before the first
+        merge): ``max_event_id`` and the ``schema`` the table was written
+        with."""
         self._recover()
         wf = os.path.join(self.path, _WATERMARK_FILE)
         if os.path.exists(wf):
             with open(wf) as f:
-                return json.load(f)["max_event_id"]
-        return None
+                return json.load(f)
+        return {}
+
+    def watermark(self) -> int | None:
+        """Max event_id merged into the published table (None = nothing
+        merged yet — NOT 0: fixture-adapted logs may contain event_id 0,
+        and a zero sentinel would silently drop it on the first batch)."""
+        return self._ledger().get("max_event_id")
 
     def apply_batch(self, batch: DataFrame, meta: dict) -> None:
         """foreachBatch/poll consumer fn: merge one batch's partials.
@@ -85,40 +106,37 @@ class MaterializedCounts:
         """
         wm = self.watermark()
         fresh = batch if wm is None else batch.where(F.col("event_id") > wm)
-        hi = fresh.agg(F.max("event_id").alias("hi")).collect()[0]["hi"]
+        if batch.isLocal():
+            # a filter over a LocalRelation collects on the driver, no job
+            hi = max((r[0] for r in fresh.select("event_id").collect()), default=None)
+        else:
+            hi = fresh.agg(F.max("event_id").alias("hi")).collect()[0]["hi"]
         if hi is None:
             return  # fully redelivered batch — already merged
 
-        aggs = [F.count(F.lit(1)).alias("n_events")]
+        # One aggregation over the current rollup and the fresh rows: its
+        # map-side partial aggregate already pre-sums the batch per key.
+        cols = [*self.keys, F.lit(1).cast("long").alias("n_events")]
+        sums = [F.sum("n_events").cast("long").alias("n_events")]
         if self.value_col:
-            aggs.append(
-                F.sum(F.col(self.value_col).cast("decimal(18,6)")).alias("sum_value")
-            )
-        partial = fresh.groupBy(*self.keys).agg(*aggs)
-
+            cols.append(F.col(self.value_col).cast("decimal(18,6)").alias("sum_value"))
+            sums.append(F.sum("sum_value").cast("decimal(18,6)").alias("sum_value"))
+        rows = fresh.select(*cols)
         if os.path.exists(self.path):
-            current = self.read()
-            merged = (
-                current.unionByName(partial)
-                .groupBy(*self.keys)
-                .agg(
-                    F.sum("n_events").cast("long").alias("n_events"),
-                    *(
-                        [F.sum("sum_value").cast("decimal(18,6)").alias("sum_value")]
-                        if self.value_col
-                        else []
-                    ),
-                )
-            )
-        else:
-            merged = partial.withColumn("n_events", F.col("n_events").cast("long"))
+            # at its stored schema: no schema-inference job
+            rows = self.read().unionByName(rows)
+        if _plan_bytes(rows) <= ONE_TASK_MERGE_BYTES:
+            # Aggregate in one task without a shuffle: one Spark job
+            # instead of two.
+            rows = rows.coalesce(1)
+        merged = rows.groupBy(*self.keys).agg(*sums)
 
         tmp = self.path + ".staging"
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
         merged.write.mode("overwrite").parquet(tmp)
         with open(os.path.join(tmp, _WATERMARK_FILE), "w") as f:
-            json.dump({"max_event_id": int(hi)}, f)
+            json.dump({"max_event_id": int(hi), "schema": merged.schema.json()}, f)
         old = self.path + ".old"
         if os.path.exists(self.path):
             os.rename(self.path, old)
@@ -129,4 +147,10 @@ class MaterializedCounts:
     # -- query side --------------------------------------------------------
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        """The rollup, read at the schema it was written with (tables
+        written before the ledger kept it infer theirs)."""
+        schema = self._ledger().get("schema")
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(json.loads(schema)))
+        return reader.parquet(self.path)

@@ -19,11 +19,15 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import functions as F
 
 from reflex_spark.sources.event_log import (
     NOOP_FOREIGN_ID,
     NOOP_TYPE,
+    SCAN_SCHEMA,
     EventLog,
     without_noops,
 )
@@ -122,6 +126,59 @@ def _load_batch(spec: Spec, after: int, dense: bool = False):
     return df
 
 
+def _scan_window(spec: Spec, cursor: int):
+    """The Spark scan path of a poll: the cached window after the cursor
+    and its (count, max id, non-noop count) from one agg job."""
+    window = _load_batch(spec, cursor).cache()
+    try:
+        aggs = [F.max("event_id").alias("m"), F.count(F.lit(1)).alias("n")]
+        if spec.options.drop_noops:
+            # only reference the noop columns when filtering is on:
+            # adapted tables without foreign_id stream fine with
+            # drop_noops=False
+            is_noop = (F.col("foreign_id") == F.lit(NOOP_FOREIGN_ID)) & (
+                F.col("event_type") == F.lit(NOOP_TYPE)
+            )
+            aggs.append(F.count(F.when(~is_noop, 1)).alias("n_real"))
+        row = window.agg(*aggs).collect()[0]
+        if spec.options.require_dense and row["n"] and row["m"] != cursor + row["n"]:
+            # Hole inside the window (a reader racing a mid-commit
+            # multi-file append): fall back to the dense-truncated plan so
+            # only the contiguous prefix is delivered.
+            window.unpersist()
+            window = _load_batch(spec, cursor, dense=True).cache()
+            row = window.agg(*aggs).collect()[0]
+    except BaseException:
+        window.unpersist()
+        raise
+    return window, row["n"], row["m"], row["n_real"] if spec.options.drop_noops else row["n"]
+
+
+def _local_window(rows: pa.Table, cursor: int, opts: StreamOptions):
+    """The driver path of a poll over ``EventLog.poll_window``'s rows
+    (id-ordered, ids > cursor): ``_load_batch``'s dense-prefix and lag
+    truncation, then (rows to deliver, count, max id, non-noop count)."""
+    if opts.require_dense:
+        ids = rows["event_id"].to_numpy()
+        holes = np.flatnonzero(ids != cursor + 1 + np.arange(len(ids)))
+        if holes.size:
+            rows = rows.slice(0, int(holes[0]))
+    if opts.lag_seconds:
+        ts = rows["timestamp"]
+        cutoff = pa.scalar(int((time.time() - opts.lag_seconds) * 1e6), ts.type)
+        first_recent = pc.index(pc.greater(ts, cutoff), True).as_py()
+        if first_recent >= 0:
+            rows = rows.slice(0, first_recent)
+    n = rows.num_rows
+    m = rows["event_id"][-1].as_py() if n else None
+    if opts.drop_noops:  # without_noops, with the same null semantics
+        is_noop = pc.and_kleene(
+            pc.equal(rows["foreign_id"], NOOP_FOREIGN_ID), pc.equal(rows["event_type"], NOOP_TYPE)
+        )
+        rows = rows.filter(pc.invert(is_noop))
+    return rows, n, m, rows.num_rows
+
+
 def run(spec: Spec, max_batches: int | None = None) -> int:
     """The reference consume loop (run.go:16-105). Returns last cursor.
 
@@ -129,6 +186,14 @@ def run(spec: Spec, max_batches: int | None = None) -> int:
     crash between consume and set_cursor redelivers the batch (consumers
     must be idempotent — reference doc.go at-least-once contract).
     Fail-fast: any consumer/cursor error propagates and stops the loop.
+
+    Each poll first asks the log for a driver-side window
+    (``EventLog.poll_window``: the commit records cover the log and the
+    window is small). That window is trimmed, counted and handed to the
+    consumer as an Arrow-backed local DataFrame with no Spark job, and it
+    is pinned: an append landing mid-batch cannot grow it. Otherwise the
+    poll scans with Spark (``_load_batch`` + one agg job), and the batch
+    is bounded by the max id the cursor will commit.
     """
     name = spec.consumer.name
     cursor = spec.cstore.get_cursor(name)
@@ -137,6 +202,7 @@ def run(spec: Spec, max_batches: int | None = None) -> int:
         spec.cstore.set_cursor(name, cursor)
 
     notifier = getattr(spec.log, "notifier", None)
+    poll_window = getattr(spec.log, "poll_window", None)
     batches = 0
     try:
         while max_batches is None or batches < max_batches:
@@ -147,41 +213,34 @@ def run(spec: Spec, max_batches: int | None = None) -> int:
             # waiter wakes immediately (reference ch := notifier.C() before
             # the head re-check — no lost wakeups).
             sub = notifier.subscribe() if notifier is not None else None
-            # NOTE: read_after().limit(n) + max() needs one pass; collect the
-            # batch's max id via a tiny agg — the batch itself stays
-            # distributed through consume.
-            window = _load_batch(spec, cursor).cache()
+            window = None
             try:
-                aggs = [F.max("event_id").alias("m"), F.count(F.lit(1)).alias("n")]
-                if spec.options.drop_noops:
-                    # only reference the noop columns when filtering is on:
-                    # adapted tables without foreign_id stream fine with
-                    # drop_noops=False
-                    is_noop = (F.col("foreign_id") == F.lit(NOOP_FOREIGN_ID)) & (
-                        F.col("event_type") == F.lit(NOOP_TYPE)
+                try:
+                    rows = (
+                        poll_window(cursor, spec.options.batch_limit)
+                        if poll_window is not None
+                        else None
                     )
-                    aggs.append(F.count(F.when(~is_noop, 1)).alias("n_real"))
-                row = window.agg(*aggs).collect()[0]
-                if (
-                    spec.options.require_dense
-                    and row["n"]
-                    and row["m"] != cursor + row["n"]
-                ):
-                    # Hole inside the window (a reader racing a mid-commit
-                    # multi-file append): fall back to the dense-truncated
-                    # plan so only the contiguous prefix is delivered.
-                    window.unpersist()
-                    window = _load_batch(spec, cursor, dense=True).cache()
-                    row = window.agg(*aggs).collect()[0]
-                if row["n"] == 0:
+                except FileNotFoundError:
+                    continue  # a file went away under the read (compaction): re-poll
+                if rows is not None:
+                    # a hole can only explain an empty window if rows exist
+                    gap_possible = rows.num_rows > 0
+                    rows, n, m, n_real = _local_window(rows, cursor, spec.options)
+                else:
+                    gap_possible = True
+                    window, n, m, n_real = _scan_window(spec, cursor)
+                if n == 0:
                     # Empty dense read: either true head, or the stream is
                     # stuck behind an id hole. With gap listeners attached
                     # (sources.gapfill.fill_gaps), detect and emit — the
                     # filler unblocks the next poll (reference ListenGaps /
                     # FillGaps, rsql/gapfill.go:26-40). Detection is one
                     # ids-only agg and runs only on empty polls.
-                    if spec.options.require_dense and getattr(
-                        spec.log, "_gap_listeners", None
+                    if (
+                        spec.options.require_dense
+                        and gap_possible
+                        and getattr(spec.log, "_gap_listeners", None)
                     ):
                         gap = spec.log.detect_gap(cursor)
                         if gap is not None:
@@ -201,18 +260,27 @@ def run(spec: Spec, max_batches: int | None = None) -> int:
                     else:
                         time.sleep(spec.options.poll_backoff)
                     continue
-                n_deliver = row["n_real"] if spec.options.drop_noops else row["n"]
+                n_deliver = n_real if spec.options.drop_noops else n
                 if n_deliver:
-                    batch = without_noops(window) if spec.options.drop_noops else window
+                    if rows is not None:
+                        batch = spec.log.spark.createDataFrame(rows, SCAN_SCHEMA)
+                    else:
+                        # A concurrent append makes Spark re-cache ``window``
+                        # with the new rows; deliver only what the cursor
+                        # below commits.
+                        batch = window.where(F.col("event_id") <= m)
+                        if spec.options.drop_noops:
+                            batch = without_noops(batch)
                     spec.consumer.consume(batch, {"cursor": cursor, "batch": batches})
                     spec.consumer.stats["events"] += n_deliver
                     batches += 1
                 # Cursor advances over noops too (all-noop windows would
                 # otherwise livelock the poll loop re-reading forever).
-                cursor = row["m"]
+                cursor = m
                 spec.cstore.set_cursor(name, cursor)
             finally:
-                window.unpersist()
+                if window is not None:
+                    window.unpersist()
                 if sub is not None:
                     notifier.unsubscribe(sub)
     finally:

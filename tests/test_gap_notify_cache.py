@@ -52,6 +52,7 @@ def _consume_ids(spec, **kwargs) -> list[int]:
 def test_gap_blocks_without_filler_and_fills_with(spark, tmp_path):
     log = seed_log(spark, str(tmp_path / "log"), [(1, f"u{i}") for i in range(3)])
     _write_raw(spark, log.path, [5, 6])  # id 4 lost by a crashed writer
+    assert log.poll_window(0) is None  # the raw file is unrecorded: Spark scan
 
     # without a filler, the dense guard stops at the hole (G1 semantics)
     got = _consume_ids(

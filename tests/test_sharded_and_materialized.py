@@ -164,29 +164,41 @@ def test_materialized_first_batch_keeps_event_id_zero(spark, tmp_path):
     """Regression: watermark() returned 0 for "nothing merged yet", so the
     `event_id > wm` dedup filter silently dropped event_id 0 on the FIRST
     batch (fixture-adapted logs start at id 0; engine logs start at 1)."""
-    mat = MaterializedCounts(spark, str(tmp_path / "rollup"), keys=["event_type"])
-    batch = spark.createDataFrame([(0, "a"), (1, "a"), (2, "b")], "event_id long, event_type string")
-    assert mat.watermark() is None
-    mat.apply_batch(batch, {})
-    assert {r["event_type"]: r["n_events"] for r in mat.read().collect()} == {"a": 2, "b": 1}
-    assert mat.watermark() == 2
+    import pyarrow as pa
+
+    rows = [(0, "a"), (1, "a"), (2, "b")]
+    batches = {  # a non-local batch, and a local one (watermark from its ids)
+        "rdd": spark.createDataFrame(rows, "event_id long, event_type string"),
+        "local": spark.createDataFrame(
+            pa.table({"event_id": [r[0] for r in rows], "event_type": [r[1] for r in rows]})
+        ),
+    }
+    for name, batch in batches.items():
+        mat = MaterializedCounts(spark, str(tmp_path / f"rollup-{name}"), keys=["event_type"])
+        assert mat.watermark() is None
+        mat.apply_batch(batch, {})
+        assert {r["event_type"]: r["n_events"] for r in mat.read().collect()} == {"a": 2, "b": 1}
+        assert mat.watermark() == 2
 
 
 def test_append_guardrail_routes_to_sharded(spark, tmp_path):
     """Round-1 VERDICT #7: an oversized unsharded append refuses loudly
     (single-task id window) and points at ShardedEventLog; the sharded
-    path takes the same rows with per-shard dense ids."""
+    path takes the same rows with per-shard dense ids. The guard holds on
+    both append paths: a non-local input (Spark write) and a local one
+    (driver write)."""
     from reflex_spark.sources.event_log import EventLog
 
     rows = [(1, f"u{i}") for i in range(20)]
-    small = EventLog(spark, str(tmp_path / "log"), max_append_rows=10)
-    with pytest.raises(ValueError, match="ShardedEventLog"):
-        small.append(make_events(spark, rows))
-    assert small.head() == 0  # nothing written
+    for name, as_input in (("spark", lambda df: df.repartition(2)), ("driver", lambda df: df)):
+        small = EventLog(spark, str(tmp_path / name / "log"), max_append_rows=10)
+        with pytest.raises(ValueError, match="ShardedEventLog"):
+            small.append(as_input(make_events(spark, rows)))
+        assert small.head() == 0  # nothing written
 
-    # explicit opt-out accepts the batch
-    big_ok = EventLog(spark, str(tmp_path / "log2"), max_append_rows=100)
-    assert big_ok.append(make_events(spark, rows)) == 20
+        # explicit opt-out accepts the batch
+        big_ok = EventLog(spark, str(tmp_path / name / "log2"), max_append_rows=100)
+        assert big_ok.append(as_input(make_events(spark, rows))) == 20
 
     # the recommended path: sharded log, per-shard dense ids
     sl = ShardedEventLog(spark, str(tmp_path / "slog"), n_shards=4)

@@ -901,51 +901,55 @@ def test_stamp_commit_order_never_restamps_earlier_commits(spark, tmp_path):
     commit's files — even when their mtimes sit past any threshold (the
     old BASE+100M heuristic broke exactly there: once head seq crossed
     100M, every stamped file looked 'unstamped' again and commit
-    ordering collapsed)."""
+    ordering collapsed). Holds for both append paths: a non-local input
+    (Spark write) and a local one (driver write)."""
     import os
 
     from reflex_spark.sources.event_log import EventLog
     from reflex_spark.sources.memory import make_events
 
-    log = EventLog(spark, str(tmp_path / "log"))
-    log.append(make_events(spark, [(1, f"a{i}") for i in range(5)]))
-    first = {p: os.path.getmtime(p) for p in log._data_files()}
-    assert first  # sanity
+    for name, as_input in (("spark", lambda df: df.repartition(2)), ("driver", lambda df: df)):
+        log = EventLog(spark, str(tmp_path / name))
+        log.append(as_input(make_events(spark, [(1, f"a{i}") for i in range(5)])))
+        first = {p: os.path.getmtime(p) for p in log._data_files()}
+        assert first  # sanity
 
-    # adversarial: push the first commit's mtimes way past the old
-    # cutoff, as a log whose head seq exceeded 100M would legitimately be
-    big = float(EventLog._MTIME_BASE + 150_000_000)
-    for p in first:
-        os.utime(p, (big, big))
+        # adversarial: push the first commit's mtimes way past the old
+        # cutoff, as a log whose head seq exceeded 100M would legitimately be
+        big = float(EventLog._MTIME_BASE + 150_000_000)
+        for p in first:
+            os.utime(p, (big, big))
 
-    log.append(make_events(spark, [(1, f"b{i}") for i in range(5)]))
-    after = {p: os.path.getmtime(p) for p in log._data_files()}
-    for p in first:
-        assert after[p] == big, "earlier commit re-stamped"
-    new = set(after) - set(first)
-    assert new and all(
-        after[p] == float(EventLog._MTIME_BASE + 10) for p in new
-    ), "new files carry this commit's logical mtime"
+        log.append(as_input(make_events(spark, [(1, f"b{i}") for i in range(5)])))
+        after = {p: os.path.getmtime(p) for p in log._data_files()}
+        for p in first:
+            assert after[p] == big, f"{name}: earlier commit re-stamped"
+        new = set(after) - set(first)
+        assert new and all(
+            after[p] == float(EventLog._MTIME_BASE + 10) for p in new
+        ), f"{name}: new files carry this commit's logical mtime"
 
 
 def test_stamp_commit_order_is_monotonic_across_appends(spark, tmp_path):
     """Three appends → three strictly increasing logical mtime groups
     (BASE + head), so the file stream source replays them in commit
-    order regardless of filesystem clock granularity."""
+    order regardless of filesystem clock granularity — for Spark-path
+    (non-local input) and driver-path (local input) appends alike."""
     import os
 
     from reflex_spark.sources.event_log import EventLog
     from reflex_spark.sources.memory import make_events
 
-    log = EventLog(spark, str(tmp_path / "log"))
-    groups = []
-    seen: set[str] = set()
-    for n in (3, 4, 5):
-        log.append(make_events(spark, [(1, f"x{n}_{i}") for i in range(n)]))
-        fresh = log._data_files() - seen
-        seen |= fresh
-        groups.append({os.path.getmtime(p) for p in fresh})
-    assert max(groups[0]) < min(groups[1]) <= max(groups[1]) < min(groups[2])
+    for name, as_input in (("spark", lambda df: df.repartition(2)), ("driver", lambda df: df)):
+        log = EventLog(spark, str(tmp_path / name))
+        groups = []
+        seen: set[str] = set()
+        for n in (3, 4, 5):
+            log.append(as_input(make_events(spark, [(1, f"x{n}_{i}") for i in range(n)])))
+            fresh = log._data_files() - seen
+            seen |= fresh
+            groups.append({os.path.getmtime(p) for p in fresh})
+        assert max(groups[0]) < min(groups[1]) <= max(groups[1]) < min(groups[2]), name
 
 
 def test_compact_stamps_output_into_logical_mtime_domain(spark, tmp_path):
@@ -961,6 +965,7 @@ def test_compact_stamps_output_into_logical_mtime_domain(spark, tmp_path):
 
     from reflex_spark.sources.event_log import EventLog
     from reflex_spark.sources.memory import make_events
+    from reflex_spark.streaming import Consumer, ErrHeadReached, Spec, StreamOptions, run
 
     log = EventLog(spark, str(tmp_path / "log"))
     log.append(make_events(spark, [(1, f"a{i}") for i in range(4)]))
@@ -978,6 +983,18 @@ def test_compact_stamps_output_into_logical_mtime_domain(spark, tmp_path):
     assert newer
     # every post-compaction file sorts strictly AFTER the compacted set
     assert min(os.path.getmtime(p) for p in newer) > max(compacted.values())
+    # the compacted files are unrecorded: polls scan with Spark, correctly
+    assert log.poll_window(0) is None
+    seen = []
+    spec = Spec(
+        log,
+        MemCursorStore(),
+        Consumer("c", lambda df, m: seen.extend(r["event_id"] for r in df.select("event_id").collect())),
+        StreamOptions(to_head=True, batch_limit=5),
+    )
+    with pytest.raises(ErrHeadReached):
+        run(spec)
+    assert seen == list(range(1, 13))
 
 
 def test_blob_bucket_csv_decoder_and_gzip(spark, tmp_path):

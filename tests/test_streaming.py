@@ -8,6 +8,7 @@ from datetime import datetime, timedelta
 import pytest
 from pyspark.sql import functions as F
 
+from reflex_spark.sources import event_log
 from reflex_spark.sources.event_log import EventLog, without_noops
 from reflex_spark.sources.memory import EPOCH, make_events, seed_log
 from reflex_spark.streaming import (
@@ -74,14 +75,16 @@ def test_noop_insert_rejected_and_filtered(spark, tmp_path):
 # --- run loop (run.go semantics) ------------------------------------------
 
 
-def test_run_consumes_all_and_advances_cursor(spark, tmp_path):
+def test_run_consumes_all_and_advances_cursor(spark, tmp_path, monkeypatch):
     log = seed_log(spark, str(tmp_path / "log"), [(1, str(i)) for i in range(7)])
-    store, seen = MemCursorStore(), []
-    spec = Spec(log, store, collecting_consumer("c1", seen), StreamOptions(to_head=True, batch_limit=3))
-    with pytest.raises(ErrHeadReached):
-        run(spec)
-    assert seen == [1, 2, 3, 4, 5, 6, 7]
-    assert store.get_cursor("c1") == 7
+    for driver_rows in (event_log.DRIVER_WINDOW_ROWS, 2):  # 2: Spark scans every window
+        monkeypatch.setattr(event_log, "DRIVER_WINDOW_ROWS", driver_rows)
+        store, seen = MemCursorStore(), []
+        spec = Spec(log, store, collecting_consumer("c1", seen), StreamOptions(to_head=True, batch_limit=3))
+        with pytest.raises(ErrHeadReached):
+            run(spec)
+        assert seen == [1, 2, 3, 4, 5, 6, 7]
+        assert store.get_cursor("c1") == 7
 
 
 def test_run_resumes_from_cursor(spark, tmp_path):
