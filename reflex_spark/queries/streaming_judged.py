@@ -106,25 +106,6 @@ def stream_rollup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stamp_batch_order(src: str, seen: set[str], seq: int) -> None:
-    """Pin file-source batch order without wall-clock sleeps: stamp every
-    not-yet-seen data file under ``src`` with mtime epoch+``seq`` (strictly
-    increasing across calls).  Spark's FileStreamSource processes files
-    oldest-mtime-first, so calling this after each batch write replaces the
-    defensive ``sleep(0.1..0.2)`` between writes — the sleeps cost ~2s of
-    pure wall-clock per bench pass (warmup + timed) across the streaming
-    suite and were the bulk of the r10 ``stream_stateful_sessions`` drift
-    (SCALE_NOTES §24)."""
-    import os
-
-    base = 1_000_000_000  # fixed epoch: deterministic, no Date.now coupling
-    for f in os.listdir(src):
-        if f.startswith("part-") and f not in seen:
-            p = os.path.join(src, f)
-            os.utime(p, (base + seq, base + seq))
-            seen.add(f)
-
-
 class _BatchSink:
     """Parquet accumulation sink for judged ``foreachBatch`` streams
     (VERDICT r10 #8): each micro-batch APPENDS its (optionally
@@ -686,6 +667,7 @@ def stream_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface (SURVEY §2.2) judged end-to-end, not just pytest-smoke: the
     hash check proves the state store, batch boundaries, and the pandas
     state fn reproduce the exact lag-gap SQL semantics."""
+    import os
     import shutil
 
     import pandas as pd
@@ -693,6 +675,7 @@ def stream_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+    from reflex_spark.sources.event_log import stamp_commit_order
     from reflex_spark.streaming.statestore import apply_state_store_conf
 
     apply_state_store_conf(spark)  # session/env-pinned provider (statestore.py)
@@ -707,12 +690,17 @@ def stream_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix="stream_sess_")
     src = f"{base}/in"
     try:
+        # Pin file-source batch order without wall-clock sleeps: the file
+        # source processes files oldest-mtime-first, so each batch's new
+        # files get the logical mtime of seq=b (SCALE_NOTES §24).
         seen: set[str] = set()
         for b in (1, 2, 3):  # strictly time-ordered batches
             parts.where(F.col("__b") == b).select("user_id", "ts").coalesce(
                 1
             ).write.mode("append").parquet(src)
-            _stamp_batch_order(src, seen, b)
+            new = {f for f in os.listdir(src) if f.startswith("part-")} - seen
+            stamp_commit_order([os.path.join(src, f) for f in new], b)
+            seen |= new
         parts.unpersist()  # batches are on disk; free before the stream
 
         GAP_NS = 30 * 60 * 1_000_000_000
@@ -3378,8 +3366,8 @@ def stream_gapfill_recovery_rollup(spark: SparkSession, sf_dir: str) -> DataFram
 
     Scale: the filler writes O(hole) noop rows once; detection is the
     same dense check every poll already does. The alternative designs
-    are judged elsewhere — ManifestEventLog cannot hole (atomic commit)
-    and refuses filling; TxTable is MVCC."""
+    are judged elsewhere — EventLog's own single-file commits cannot
+    hole (staged, renamed and recorded under one lock); TxTable is MVCC."""
     import shutil
 
     from pyspark.sql.window import Window as _W

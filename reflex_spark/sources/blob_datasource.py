@@ -152,7 +152,8 @@ class ReflexBlobWriter(DataSourceWriter):
       merges the prior bucket contents into the ``_SUCCESS`` manifest
       instead of rewriting it to only the new write.
     - **atomic commit**: ``_SUCCESS`` is published via temp +
-      ``os.replace`` (+fsync) — the manifest_log.py discipline — so a
+      ``os.replace`` (+fsync) — the discipline of the event log's commit
+      records (``sources/commits.py``) — so a
       crash mid-commit leaves either the previous manifest or the new
       one, never a torn file.
     - ``mode("overwrite")`` clears the bucket at PLANNING time (driver

@@ -1,20 +1,23 @@
-"""Commit records: the one record format of EventLog and ManifestEventLog.
+"""Commit records: what EventLog's commit step publishes.
 
-Each append publishes one small JSON record
+Each commit (an append, a gap fill, a compaction) publishes one small JSON
+record
 
     {"seq": 7, "min_id": 101, "max_id": 140, "files": ["part-....parquet"],
      "commit_ts": 1760000000.25}
 
 as ``<dir>/<seq:08d>.json``. ``files`` are paths relative to the log root;
-``[min_id, max_id]`` is the dense id range the append assigned. A record is
+``[min_id, max_id]`` is the id range the commit holds. A record is
 written to a hidden temp file and ``os.replace``-d into place, so a reader
 sees either no record or the whole record, and it is published strictly
 after the data files it names are visible. A published record never
-changes, so readers parse each one once (``read_records``'s ``cache``).
+changes and a seq is never reused, compactions included, so a record path
+always names the same record and readers parse each one once
+(``read_records``'s ``cache``).
 
-Records are only ever listed under a ``_``-prefixed directory or a
-manifest directory, never as ``part-*`` files: Spark, Structured
-Streaming and DuckDB ``part-*`` scans do not see them.
+Records are only ever listed under the ``_``-prefixed ``COMMITS_DIR``,
+never as ``part-*`` files: Spark, Structured Streaming and DuckDB
+``part-*`` scans do not see them.
 """
 
 from __future__ import annotations
@@ -63,11 +66,3 @@ def read_records(dirpath: str, cache: dict[str, dict]) -> list[dict]:
         out.append(rec)
     return out
 
-
-def record_files(root: str, rec: dict) -> list[str]:
-    """Absolute paths of the data files ``rec`` commits. Records written
-    before ``files`` existed name a batch directory (``dir``) instead."""
-    if "files" in rec:
-        return [os.path.join(root, f) for f in rec["files"]]
-    d = rec["dir"]
-    return sorted(os.path.join(d, f) for f in os.listdir(d) if f.startswith("part-"))

@@ -11,21 +11,28 @@ Reference parity (SURVEY.md §1.1-§1.2):
   `without_noops` filters them like the reference's noop filter
   (rsql/loader.go:64-94).
 
-Commit records: every unpartitioned append publishes one record
+One commit step for every writer (``EventLog._commit``): ``append`` (both
+paths), ``fill_noops`` and ``compact`` stage their data files under
+``<log>/_staging/`` (the ``_`` prefix hides them from Spark's listing,
+DuckDB ``part-*`` globs and ``_snapshot``), stamp them with the logical
+mtime of the highest id they hold, then, under the handle's commit lock,
+rename them into place and publish one commit record
 ``_commits/<seq>.json`` = ``{seq, min_id, max_id, files, commit_ts}``
-(``sources.commits``, the format ManifestEventLog shares) strictly after
-its data file is visible. While the records name every visible data file,
+(``sources.commits``). ``seq`` is always one past the log's last record,
+across compactions too. A crash before the rename leaves only invisible
+``_staging/`` debris. While the records name every visible data file,
 ``head()`` and ``poll_window()`` answer from the records and the files they
-name without a Spark job; an unrecorded file (an out-of-band or gap-fill
-write, a compacted or pre-record log, a crash between file and record)
+name without a Spark job; an unrecorded file (a raw out-of-band write, a
+log written before records existed, a crash between rename and record)
 sends them back to the Spark scan, which stays correct for any layout.
 
 Two append paths, one stored format:
 - a local input (``events.isLocal()``: a DataFrame created from pandas or
-  Arrow) is collected (no job on a ``LocalRelation``), sorted and id'd with
-  pyarrow and written as one ``part-*.parquet`` with Spark's footer schema
-  and INT96 timestamps — the small-append hot path runs no Spark job;
-- anything else, and partitioned logs, go through a Spark write.
+  Arrow) on an unpartitioned log is collected (no job on a
+  ``LocalRelation``), sorted and id'd with pyarrow and written as one
+  ``part-*.parquet`` with Spark's footer schema and INT96 timestamps — the
+  small-append hot path runs no Spark job;
+- anything else goes through a Spark write.
 
 Scale posture: a single append() is a serialized id-assignment point, like
 the reference's MySQL auto-increment. At 100 TB you shard the log (one
@@ -38,6 +45,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import threading
 import time
 import uuid
@@ -214,6 +222,54 @@ def _read_events(path: str) -> pa.Table:
     return t.select(ARROW_SCHEMA.names).cast(ARROW_SCHEMA)
 
 
+#: Logical-mtime epoch of commit order (2001-09-09; any fixed epoch works —
+#: FileStreamSource ages files relative to the NEWEST file in the
+#: directory, not the wall clock, so a fixed base plus seconds-apart
+#: offsets never trips maxFileAge).
+_MTIME_BASE = 1_000_000_000
+
+
+def stamp_commit_order(paths, seq: int) -> None:
+    """Give each file in ``paths`` the logical mtime ``_MTIME_BASE + seq``.
+
+    Structured Streaming's file source processes files oldest-mtime first,
+    so files stamped with strictly increasing ``seq`` replay in that order
+    whatever the filesystem clock recorded — no ``sleep`` between writes,
+    and robust on coarse-mtime filesystems. The commit step passes the
+    highest id a commit holds, so file order == id order."""
+    t = float(_MTIME_BASE + seq)
+    for p in paths:
+        os.utime(p, (t, t))
+
+
+def _staging_dir(root: str) -> str:
+    """A fresh directory under ``root/_staging/`` for one commit's files."""
+    return os.path.join(root, "_staging", uuid.uuid4().hex)
+
+
+def _visible_files(root: str) -> set[str]:
+    """The data files a Spark scan of ``root`` lists, as paths relative to
+    it (``event_date=…/part-*`` in a partitioned log): one recursive
+    ``os.scandir`` pass that skips ``_``/``.`` names, as Spark does."""
+    out: set[str] = set()
+
+    def walk(d: str, prefix: str) -> None:
+        try:
+            entries = list(os.scandir(d))
+        except FileNotFoundError:
+            return
+        for e in entries:
+            if e.name.startswith(("_", ".")):
+                continue
+            if e.is_dir():
+                walk(e.path, f"{prefix}{e.name}/")
+            else:
+                out.add(prefix + e.name)
+
+    walk(root, "")
+    return out
+
+
 class EventLog:
     """Append-only event log at a directory path.
 
@@ -314,9 +370,8 @@ class EventLog:
         columns are dropped from the stored rows.
 
         A local input on an unpartitioned log takes the driver path (module
-        docstring): no Spark job, one file renamed into place already
-        stamped with its logical mtime. Other inputs run the Spark write.
-        Either way an unpartitioned append then publishes its commit record.
+        docstring): no Spark job. Other inputs run the Spark write. Either
+        way the staged files go through the commit step (``_commit``).
         """
         keys = list(order_by or ["timestamp", "foreign_id"])
         if not self.partitioned and events.isLocal() and _driver_appendable(events.schema, keys):
@@ -324,21 +379,11 @@ class EventLog:
         base = self.head()
         n = events.count()
         self._guard_append_size(n)
-        pre_files = self._data_files()
+        if not n:
+            return base
         w = F.row_number().over(Window.orderBy(*keys))
-        out = (
-            events.withColumn("event_id", (F.lit(base) + w).cast("long"))
-            .select([f.name for f in EVENT_SCHEMA.fields])
-        )
-        if self.partitioned:
-            out.withColumn("event_date", F.col("timestamp").cast("date")).write.mode(
-                "append"
-            ).partitionBy("event_date").parquet(self.path)
-        else:
-            out.write.mode("append").parquet(self.path)
-        new = self._stamp_commit_order(base + n, already=pre_files)
-        if not self.partitioned:
-            self._commit(base, n, sorted(os.path.relpath(p, self.path) for p in new))
+        out = events.withColumn("event_id", (F.lit(base) + w).cast("long")).select(EVENT_SCHEMA.names)
+        self._commit(self._stage(out), base + 1, base + n)
         return self._committed(base + n)
 
     def _append_rows(self, rows: list, schema: StructType, keys: list[str]) -> int:
@@ -384,24 +429,44 @@ class EventLog:
                 },
             ),
         )
+        staged = _staging_dir(self.path)
+        os.makedirs(staged)
         name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
-        tmp = os.path.join(self.path, f".{name}.tmp")  # hidden from every scan
-        os.makedirs(self.path, exist_ok=True)
-        pq.write_table(table, tmp, compression="snappy", use_deprecated_int96_timestamps=True)
-        t = float(self._MTIME_BASE + base + n)  # see _stamp_commit_order
-        os.utime(tmp, (t, t))
-        self._commit(base, n, [name], tmp=tmp)
+        pq.write_table(
+            table, os.path.join(staged, name), compression="snappy", use_deprecated_int96_timestamps=True
+        )
+        self._commit(staged, base + 1, base + n)
         return self._committed(base + n)
 
-    def _commit(self, base: int, n: int, files: list[str], tmp: str | None = None) -> None:
-        """Publish the commit record of ids ``base+1..base+n`` in ``files``,
-        first renaming the driver path's ``tmp`` file into place."""
+    def _stage(self, df: DataFrame, root: str | None = None) -> str:
+        """Write ``df``'s events with Spark into a fresh staging directory
+        under ``root`` (default: the log), laid out like the log."""
+        staged = _staging_dir(root or self.path)
+        if self.partitioned:
+            df = df.withColumn("event_date", F.col("timestamp").cast("date"))
+            df.write.partitionBy("event_date").parquet(staged)
+        else:
+            df.write.parquet(staged)
+        return staged
+
+    def _commit(self, staged: str, min_id: int, max_id: int, root: str | None = None) -> None:
+        """The commit step of every writer. Stamp the data files staged
+        under ``staged`` at the logical mtime of ``max_id``; then, under the
+        commit lock, rename them into ``root`` (default: the log) at the
+        same relative paths and publish their record, whose seq is one past
+        the log's last record; then drop the staging directory."""
+        root = root or self.path
+        files = sorted(_visible_files(staged))
+        stamp_commit_order([os.path.join(staged, f) for f in files], max_id)
         with self._commit_lock:
-            if tmp is not None:
-                os.rename(tmp, os.path.join(self.path, files[0]))
+            for f in files:
+                dest = os.path.join(root, f)
+                os.makedirs(os.path.dirname(dest), exist_ok=True)
+                os.rename(os.path.join(staged, f), dest)
             records = commits.read_records(self._commits_dir, self._records)
             seq = records[-1]["seq"] + 1 if records else 0
-            commits.publish(self._commits_dir, seq, base + 1, base + n, files)
+            commits.publish(os.path.join(root, commits.COMMITS_DIR), seq, min_id, max_id, files)
+        shutil.rmtree(staged, ignore_errors=True)
 
     def _committed(self, head: int) -> int:
         self._head_cache = head
@@ -415,16 +480,10 @@ class EventLog:
 
     def _snapshot(self) -> list[dict] | None:
         """The commit records in seq order, when they name exactly the
-        data files a Spark scan of the log sees; None when they do not (a
-        partitioned log, or a visible file no record names)."""
-        if self.partitioned:
-            return None
+        data files a Spark scan of the log sees; None when a visible file
+        is unrecorded."""
         with self._commit_lock:
-            try:
-                # Spark's listing skips "_" and "." names
-                visible = {n for n in os.listdir(self.path) if not n.startswith(("_", "."))}
-            except FileNotFoundError:
-                visible = set()
+            visible = _visible_files(self.path)
             records = commits.read_records(self._commits_dir, self._records)
         named = {f for r in records for f in r["files"]}
         return records if named == visible else None
@@ -433,7 +492,8 @@ class EventLog:
         """The committed events with ids above ``after`` (the first
         ``limit`` of them), in id order, read with pyarrow on the driver
         from the files the commit records name — no Spark job, and a
-        snapshot later appends cannot change.
+        snapshot later appends cannot change. The rows carry the canonical
+        columns only (no ``event_date`` partition column).
 
         None when the records do not cover the log (``_snapshot``) or the
         records to read hold more than ``DRIVER_WINDOW_ROWS`` rows: scan
@@ -446,55 +506,10 @@ class EventLog:
         want = [r for r in records if r["max_id"] > after and (hi is None or r["min_id"] <= hi)]
         if sum(r["max_id"] - r["min_id"] + 1 for r in want) > DRIVER_WINDOW_ROWS:
             return None
-        parts = [_read_events(p) for r in want for p in commits.record_files(self.path, r)]
+        parts = [_read_events(os.path.join(self.path, f)) for r in want for f in r["files"]]
         t = pa.concat_tables(parts) if parts else ARROW_SCHEMA.empty_table()
         t = t.filter(pc.greater(t["event_id"], after)).sort_by("event_id")
         return t.slice(0, limit) if limit else t
-
-    # Logical-mtime base for commit ordering (2001-09-09; any fixed epoch
-    # works — FileStreamSource ages files relative to the NEWEST file in
-    # the directory, not the wall clock, so a fixed base plus seconds-apart
-    # offsets never trips maxFileAge).
-    _MTIME_BASE = 1_000_000_000
-
-    def _data_files(self) -> set[str]:
-        """The log's current data-file paths (part-* only)."""
-        out: set[str] = set()
-        for root, _dirs, files in os.walk(self.path):
-            for f in files:
-                if f.startswith("part-"):
-                    out.add(os.path.join(root, f))
-        return out
-
-    def _stamp_commit_order(self, seq: int, already: set[str]) -> set[str]:
-        """Stamp this commit's data files with logical mtime BASE+``seq``.
-
-        Structured Streaming's file source processes files oldest-mtime
-        first, so streaming consumers see appends in COMMIT order — the
-        dense-id order append() just assigned — rather than in whatever
-        order the filesystem clock happened to record.  ``seq`` is the new
-        head id, strictly monotonic per log, so later commits always stamp
-        later mtimes.  ``already`` is the exact file set captured BEFORE
-        this commit's write: only files outside it are stamped — explicit
-        tracking, same as streaming_judged._stamp_batch_order, rather than
-        an mtime-threshold heuristic (which would re-stamp EARLIER commits
-        once seq crossed the threshold and break commit ordering; large
-        seq gaps could also trip FileStreamSource's maxFileAge relative to
-        the newest stamp).  This replaces the defensive ``sleep(0.1)``
-        every streaming caller used to need between appends (~2s of pure
-        wall-clock per bench pass; SCALE_NOTES §28) and makes the ordering
-        robust on coarse-mtime filesystems. Returns the new files.
-        """
-        t = float(self._MTIME_BASE + seq)
-        new = self._data_files() - already
-        for p in new:
-            try:
-                os.utime(p, (t, t))
-            except OSError:
-                # a concurrent reader/cleaner removed the file between
-                # listing and stat; ordering of remaining files holds
-                continue
-        return new
 
     def insert(
         self,
@@ -523,9 +538,10 @@ class EventLog:
         if not os.path.exists(self.path):
             return empty_df(self.spark, EVENT_SCHEMA)
         if self.partitioned:
-            # Partition discovery needs >=1 data file; an existing but
-            # file-less directory is an empty log, not an error.
-            if not any(files for _, _, files in os.walk(self.path)):
+            # Partition discovery needs >=1 visible data file; a directory
+            # without one (hidden staging or _temporary debris) is an empty
+            # log, not an error.
+            if not _visible_files(self.path):
                 return empty_df(self.spark, EVENT_SCHEMA)
             return self.spark.read.parquet(self.path)
         return self.spark.read.schema(EVENT_SCHEMA).parquet(self.path)
@@ -606,8 +622,10 @@ class EventLog:
         rsql/gapfill.go:70-95: noop = foreign_id '0', type 0). Re-checks
         committed ids immediately before the write, so a racing writer's
         rows are kept (the file-log analogue of the reference tolerating
-        the duplicate-key error when someone got there first). Returns the
-        number of noops written."""
+        the duplicate-key error when someone got there first). The noops
+        are staged with a Spark write and go through the commit step; their
+        record spans the lowest to the highest filled id. Returns the number
+        of noops written."""
         if not ids:
             return 0
         still_missing = self.missing_ids(Gap(prev=min(ids) - 1, next=max(ids) + 1))
@@ -621,12 +639,7 @@ class EventLog:
             [(i, NOOP_TYPE, NOOP_FOREIGN_ID, ts, None, None) for i in fill],
             EVENT_SCHEMA,
         )
-        if self.partitioned:
-            df.withColumn("event_date", F.col("timestamp").cast("date")).write.mode(
-                "append"
-            ).partitionBy("event_date").parquet(self.path)
-        else:
-            df.write.mode("append").parquet(self.path)
+        self._commit(self._stage(df.coalesce(1)), fill[0], fill[-1])
         # gaps sit below head by construction, but stay defensive: a fill
         # at/above a stale cached head must never corrupt id assignment
         self._head_cache = None
@@ -641,14 +654,17 @@ class EventLog:
         is part of operating a file-backed log (Delta/Iceberg do this as
         OPTIMIZE).
 
-        Swap protocol: the rewrite is staged into a versioned sibling data
-        directory and committed by atomically replacing a symlink at
-        ``self.path`` — concurrent head()/read() always resolve a complete
-        log, never an absent or partial one. The FIRST compaction converts
-        a plain directory to the symlink layout and has a sub-millisecond
-        non-atomic window (rename away + symlink in); quiesce readers
-        around that one conversion, or use ManifestEventLog, whose CURRENT
-        pointer is atomic from the start.
+        Swap protocol: the rewrite goes through the commit step into a
+        versioned sibling data directory — stamped at the logical mtime of
+        its highest id, so later appends keep sorting after it, and with
+        one record covering every id (out-of-band files are adopted) whose
+        seq continues the log's — and is committed by atomically replacing
+        a symlink at ``self.path``. Concurrent head()/read() always resolve
+        a complete log, never an absent or partial one, and polls stay on
+        the driver path. The FIRST compaction converts a plain directory to
+        the symlink layout and has a sub-millisecond non-atomic window
+        (rename away + symlink in); quiesce readers around that one
+        conversion.
 
         Compaction must NOT run while checkpointed *streaming* readers
         (read_stream) are attached: they track processed files, so the
@@ -656,39 +672,18 @@ class EventLog:
         consumers (run()) are safe — their cursor is an event id and
         compaction preserves ids.
         """
-        import shutil
-
         df = self.read()
-        head = self.head()  # stamp target for the rewrite (see below)
+        lo, hi = df.agg(F.min("event_id"), F.max("event_id")).first()
+        if hi is None:
+            return  # nothing to rewrite
         if target_partitions is None:
             total_bytes = sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _, files in os.walk(self.path)
-                for f in files
+                os.path.getsize(os.path.join(self.path, f)) for f in _visible_files(self.path)
             )
             target_partitions = max(1, total_bytes // (128 << 20))
         base = self.path.rstrip("/")
         new_data = f"{base}.data.{int(time.time() * 1e6):x}"
-        writer = df.coalesce(int(target_partitions)).write.mode("overwrite")
-        if self.partitioned:
-            writer = writer.partitionBy("event_date")
-        writer.parquet(new_data)
-        # Stamp the rewrite into the LOGICAL mtime domain at the head it
-        # captured: parquet writes carry real-clock mtimes (~1.7e9), which
-        # sort AFTER every logical stamp (BASE + seq ≈ 1.0e9) — a stream
-        # started after compact+append would replay the newer appends
-        # BEFORE the compacted history, breaking the file-order==id-order
-        # contract run_stream's max-id-watermark consumers rely on. With
-        # BASE + head, appends after compaction (BASE + head + n) keep
-        # sorting strictly after the compacted files.
-        t = float(self._MTIME_BASE + head)
-        for root, _dirs, files in os.walk(new_data):
-            for f in files:
-                if f.startswith("part-"):
-                    try:
-                        os.utime(os.path.join(root, f), (t, t))
-                    except OSError:
-                        pass
+        self._commit(self._stage(df.coalesce(int(target_partitions)), new_data), lo, hi, root=new_data)
         if os.path.islink(base):
             old_target = os.path.realpath(base)
             tmp_link = base + ".lnk"
@@ -705,9 +700,7 @@ class EventLog:
             shutil.rmtree(old)
         # ids are preserved, so the cached head is numerically still right —
         # but stay defensive: a compact() racing an external state change
-        # must never leave a stale cache behind (ADVICE r12). The commit
-        # records stayed in the old directory: the compacted files are
-        # unrecorded, so polls of this log scan with Spark from here on.
+        # must never leave a stale cache behind (ADVICE r12).
         self.invalidate_head_cache()
 
     def invalidate_head_cache(self) -> None:

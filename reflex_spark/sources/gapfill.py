@@ -7,19 +7,21 @@ in-flight transactions) and inserts a noop event for any id that never
 arrives, so every consumer's dense-prefix guard can advance. Noops are
 dropped by the standard noop filter downstream (rsql/loader.go:64-94).
 
-File-log translation: a plain parquet ``EventLog`` gets a *transient*
-hole when a reader lists the directory mid-append (the missing file lands
-moments later — the grace wait absorbs exactly this), and a *permanent*
-hole when a writer crashes partway through a multi-file append (some task
-files committed, the rest never will). The filler re-checks committed ids
-through the grace window, then writes noops for the survivors via
-``EventLog.fill_noops`` — which re-checks once more immediately before
-writing, the analogue of the reference tolerating ErrDupEntry when a
-racing writer got there first (gapfill.go:86-90).
-
-ManifestEventLog does not need this: its manifest commit is atomic and
-its base id is recomputed from committed entries, so holes cannot occur
-(it overrides ``fill_noops`` to say so).
+File-log translation: ``EventLog``'s commit step stages a commit's files,
+then renames them in and publishes their record under one lock, so a
+single-file commit (every unpartitioned append) cannot leave a hole: a
+crash before the rename leaves only invisible ``_staging/`` debris, and the
+next append's ids start at the committed head. Holes still arise where
+files become visible one by one: a multi-file commit (a partitioned append
+spanning several dates) seen from another handle mid-rename, or crashed
+between renames, and raw out-of-band writes into the log directory, which
+stay visible because the log is a directory Spark and DuckDB list. A
+*transient* hole closes moments later — the grace wait absorbs exactly
+this. The filler re-checks committed ids through the grace window, then
+writes noops for the survivors via ``EventLog.fill_noops`` — which
+re-checks once more immediately before its commit, the analogue of the
+reference tolerating ErrDupEntry when a racing writer got there first
+(gapfill.go:86-90).
 """
 
 from __future__ import annotations

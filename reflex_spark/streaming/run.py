@@ -334,12 +334,15 @@ def run_stream(
     ``max_files_per_trigger`` PRECONDITION: the file source orders batches
     by (mtime, path), not event_id. Consumers that dedup on a max-id
     watermark (MaterializedCounts.apply_batch) would silently drop a
-    lower-id batch delivered after a higher-id one. This holds today
-    because EventLog.append writes ONE part-file per append with ids
-    assigned by a single global row_number — so file order == id order as
-    long as appends are sequential. If appends ever produce multiple files
-    with interleaved ids, key the consumer's dedup on the actual delivered
-    ids instead of the max-id watermark."""
+    lower-id batch delivered after a higher-id one. File order == id order
+    holds by construction for every EventLog writer: the commit step
+    stamps a commit's files with the logical mtime of the highest id they
+    hold before renaming them in, and an unpartitioned append writes one
+    file. A raw out-of-band write into the log directory carries a
+    wall-clock mtime and breaks it; so would files of one commit with
+    interleaved ids (a partitioned append spanning dates) — key such a
+    consumer's dedup on the delivered ids instead of the max-id
+    watermark."""
     import json
     import os
 

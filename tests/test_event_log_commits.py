@@ -86,9 +86,10 @@ def test_run_delivers_exactly_the_committed_window(spark, tmp_path, monkeypatch,
     assert batches == [[1, 2, 3, 4, 5], [6, 7, 8, 9, 10]]
 
 
-def test_append_paths_store_the_same_log(spark, tmp_path):
+def test_append_paths_store_the_same_log(spark, tmp_path, monkeypatch):
     """The driver path (local input) and the Spark path (non-local input)
-    store the same rows, ids, schema, footer and logical mtime."""
+    store the same rows, ids, schema, footer, logical mtime and records,
+    and a fresh handle answers head and polls from those records."""
     rows = [(i % 3 + 1, f"u{i:02d}") for i in range(12)]
     local = make_events(spark, rows)
     assert local.isLocal()
@@ -115,8 +116,8 @@ def test_append_paths_store_the_same_log(spark, tmp_path):
             assert json.loads(pf.metadata.metadata[_ROW_METADATA]) == json.loads(EVENT_SCHEMA.json())
         # the logical mtime of each append is BASE + the head it committed
         assert {os.path.getmtime(p) for p in _parts(log)} == {
-            float(EventLog._MTIME_BASE + 12),
-            float(EventLog._MTIME_BASE + 13),
+            float(event_log._MTIME_BASE + 12),
+            float(event_log._MTIME_BASE + 13),
         }
         got = duckdb.sql(
             f"SELECT event_id, foreign_id FROM read_parquet('{log.path}/part-*.parquet') ORDER BY 1"
@@ -124,8 +125,12 @@ def test_append_paths_store_the_same_log(spark, tmp_path):
         assert got == [(r[0], r[2]) for r in content(driver)]
         recs = sorted(os.listdir(os.path.join(log.path, "_commits")))
         assert recs == ["00000000.json", "00000001.json"]
-    # a fresh handle reads the head from the records
-    assert EventLog(spark, driver.path).head() == 13
+    # a fresh handle answers from the records, with no Spark scan
+    monkeypatch.setattr(EventLog, "read", lambda self: pytest.fail("scanned the log with Spark"))
+    for log in (driver, spark_log):
+        fresh = EventLog(spark, log.path)
+        assert fresh.head() == 13
+        assert fresh.poll_window(0).column("event_id").to_pylist() == list(range(1, 14))
 
 
 def test_append_paths_drop_order_columns_and_guard_size(spark, tmp_path):
@@ -186,11 +191,15 @@ def test_poll_window_only_when_records_cover_the_log(spark, tmp_path, monkeypatc
         "append"
     ).parquet(log.path)
     assert log.poll_window(0) is None
+    # compaction adopts it: the compacted record covers the log again
+    log.compact()
+    assert log.poll_window(0).column("event_id").to_pylist() == list(range(1, 8))
 
 
 def test_file_removed_under_a_driver_read_repolls(spark, tmp_path, monkeypatch):
     """compact() removing the files a driver-side poll is reading makes
-    run() poll again (now through the Spark scan), not crash."""
+    run() poll again, not crash; the compacted log is still served from
+    its records."""
     log = seed_log(spark, str(tmp_path / "log"), [(1, f"a{i}") for i in range(4)])
     log.append(make_events(spark, [(2, f"b{i}") for i in range(4)], start=EPOCH + timedelta(hours=1)))
     read_events, raced = event_log._read_events, []
@@ -211,7 +220,7 @@ def test_file_removed_under_a_driver_read_repolls(spark, tmp_path, monkeypatch):
     )
     _run_to_head(spec)
     assert raced and sorted(seen) == list(range(1, 9))
-    assert log.poll_window(0) is None  # compacted files are unrecorded
+    assert log.poll_window(0).column("event_id").to_pylist() == list(range(1, 9))
 
 
 @pytest.mark.parametrize("one_task_bytes", [materialize.ONE_TASK_MERGE_BYTES, -1])
@@ -280,3 +289,26 @@ def test_concurrent_pollers_see_each_id_once_in_order(spark, tmp_path):
     assert not errors
     assert not any(t.is_alive() for t in threads)
     assert all(seen[k] == list(range(1, head + 1)) for k in range(pollers))
+
+
+@pytest.mark.parametrize("as_input", [lambda df: df, lambda df: df.repartition(2)], ids=["driver", "spark"])
+def test_crash_after_staging_is_invisible(spark, tmp_path, monkeypatch, as_input):
+    """An append that dies after staging its file and before the rename
+    leaves a ``part-*`` under ``_staging/`` that head(), read() and the
+    poll window do not see; the next append reuses its ids."""
+    log = seed_log(spark, str(tmp_path / "log"), [(1, "a"), (1, "b")])
+
+    def crash(paths, seq):
+        raise OSError("crash between staging and rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(event_log, "stamp_commit_order", crash)
+        with pytest.raises(OSError, match="crash"):
+            log.append(as_input(make_events(spark, [(9, "ghost")])))
+    assert glob.glob(os.path.join(log.path, "_staging", "*", "part-*"))
+    for handle in (log, EventLog(spark, log.path)):
+        assert handle.head() == 2
+        assert [r["event_id"] for r in handle.read().orderBy("event_id").collect()] == [1, 2]
+        assert handle.poll_window(0).column("event_id").to_pylist() == [1, 2]
+    assert log.append(make_events(spark, [(2, "c")])) == 3
+    assert [r["foreign_id"] for r in log.read().orderBy("event_id").collect()] == ["a", "b", "c"]

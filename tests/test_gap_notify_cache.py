@@ -8,15 +8,18 @@ rsql/eventstable.go:507-571 (insert notifier waking parked pollers).
 
 from __future__ import annotations
 
+import glob
+import json
+import os
 import threading
 import time
 
 import pytest
 
+from reflex_spark.sources import event_log
 from reflex_spark.sources.event_log import EVENT_SCHEMA, EventLog, Gap
 from reflex_spark.sources.gapfill import fill_gaps
 from reflex_spark.sources.head_cache import ErrConsecEvent, HeadCache
-from reflex_spark.sources.manifest_log import ManifestEventLog
 from reflex_spark.sources.memory import EPOCH, make_events, seed_log
 from reflex_spark.streaming import (
     Consumer,
@@ -71,6 +74,13 @@ def test_gap_blocks_without_filler_and_fills_with(spark, tmp_path):
     assert spec.cstore.get_cursor("fill") == 6
     noops = log.read().where("foreign_id = '0' AND event_type = 0").collect()
     assert [r["event_id"] for r in noops] == [4]
+    # the fill went through the commit step: a record of exactly the
+    # filled id, naming a file stamped at its logical mtime
+    rec = json.load(open(max(glob.glob(os.path.join(log.path, "_commits", "*.json")))))
+    assert (rec["min_id"], rec["max_id"]) == (4, 4)
+    assert [os.path.getmtime(os.path.join(log.path, f)) for f in rec["files"]] == [
+        float(event_log._MTIME_BASE + 4)
+    ]
 
 
 def test_gap_fill_keeps_racing_writers_row(spark, tmp_path):
@@ -87,13 +97,6 @@ def test_gap_fill_keeps_racing_writers_row(spark, tmp_path):
     # re-emitting the same gap is a no-op (idempotent)
     fill(Gap(prev=3, next=6))
     assert log.read().where("event_id = 5").count() == 1
-
-
-def test_manifest_log_refuses_gap_fill(spark, tmp_path):
-    log = ManifestEventLog(spark, str(tmp_path / "mlog"))
-    log.append(make_events(spark, [(1, "a")]))
-    with pytest.raises(NotImplementedError, match="cannot have id holes"):
-        log.fill_noops([99])
 
 
 # -- G4: insert notifier ---------------------------------------------------

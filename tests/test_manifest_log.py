@@ -1,69 +1,60 @@
-"""ManifestEventLog: atomic visibility, O(1) head, consume-loop compat."""
+"""EventLog's commit records (``_commits/``) as the log's manifest: head
+and polls answered from them, the consume contract on a compacted log,
+and compaction keeping the manifest whole and dense."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
-from reflex_spark.sources.manifest_log import ManifestEventLog
+from reflex_spark.sources.event_log import EventLog
 from reflex_spark.sources.memory import make_events
 from reflex_spark.streaming import Consumer, ErrHeadReached, MemCursorStore, Spec, StreamOptions, run
 from reflex_spark.testkit import check_consume_contract, check_event_log
 
 
-def test_manifest_log_append_read_head(spark, tmp_path):
-    log = ManifestEventLog(spark, str(tmp_path / "mlog"))
+def _records(log: EventLog) -> list[str]:
+    return sorted(os.listdir(os.path.join(log.path, "_commits")))
+
+
+def _generations(tmp_path, name: str) -> list[str]:
+    return [d for d in os.listdir(str(tmp_path)) if d.startswith(f"{name}.data.")]
+
+
+def test_manifest_log_append_read_head(spark, tmp_path, monkeypatch):
+    log = EventLog(spark, str(tmp_path / "mlog"))
     assert log.head() == 0 and log.read().count() == 0
     log.append(make_events(spark, [(1, "a"), (1, "b")]))
     log.append(make_events(spark, [(2, "c")]))
-    assert log.head() == 3  # O(1): straight from the manifest
+    assert _records(log) == ["00000000.json", "00000001.json"]
     ids = [r["event_id"] for r in log.read().orderBy("event_id").collect()]
     assert ids == [1, 2, 3]
-
-
-def test_manifest_commit_is_the_visibility_point(spark, tmp_path):
-    """Data files without a manifest entry are invisible; the manifest
-    rename is the commit."""
-    log = ManifestEventLog(spark, str(tmp_path / "mlog"))
-    log.append(make_events(spark, [(1, "a")]))
-
-    # simulate a writer that crashed after data files, before the commit
-    orphan = str(tmp_path / "mlog" / "batches" / "00000099")
-    make_events(spark, [(9, "ghost")]).withColumn(
-        "event_id", F.lit(99).cast("long")
-    ).select("event_id", "event_type", "foreign_id", "timestamp", "metadata", "trace").write.parquet(orphan)
-
-    assert log.head() == 1
-    assert log.read().count() == 1  # orphan batch invisible
-
-    # the commit lands → batch visible atomically
-    entry = {"seq": 99, "dir": orphan, "min_id": 99, "max_id": 99}
-    with open(str(tmp_path / "mlog" / "manifest" / "00000099.json"), "w") as f:
-        json.dump(entry, f)
-    assert log.head() == 99
-    assert log.read().count() == 2
+    # a fresh handle answers head from the records, with no Spark scan
+    monkeypatch.setattr(EventLog, "read", lambda self: pytest.fail("scanned the log with Spark"))
+    assert EventLog(spark, log.path).head() == 3
 
 
 def test_manifest_log_conformance_and_consume(spark, tmp_path):
-    log = ManifestEventLog(spark, str(tmp_path / "mlog"))
+    log = EventLog(spark, str(tmp_path / "mlog"))
+    log.append(make_events(spark, [(1, "a"), (1, "b")]))
+    log.compact(target_partitions=1)
+    assert log.poll_window(0).column("event_id").to_pylist() == [1, 2]
     check_event_log(log)
     check_consume_contract(log, MemCursorStore())
 
 
 def test_manifest_log_compact_preserves_and_cleans(spark, tmp_path):
-    log = ManifestEventLog(spark, str(tmp_path / "mlog"))
+    log = EventLog(spark, str(tmp_path / "mlog"))
     for i in range(4):
         log.append(make_events(spark, [(1, f"u{i}")]))
     before = [(r["event_id"], r["foreign_id"]) for r in log.read().orderBy("event_id").collect()]
-    log.compact()
+    log.compact(target_partitions=1)
     after = [(r["event_id"], r["foreign_id"]) for r in log.read().orderBy("event_id").collect()]
     assert after == before
     assert log.head() == 4
-    batch_dirs = os.listdir(str(tmp_path / "mlog" / "batches"))
-    assert len(batch_dirs) == 1  # stale dirs removed
+    assert len(_generations(tmp_path, "mlog")) == 1
+    assert _records(log) == ["00000004.json"]  # the old records went with their files
     # still appendable, ids continue densely
     log.append(make_events(spark, [(2, "post")]))
     assert log.head() == 5
@@ -76,20 +67,17 @@ def test_manifest_log_compact_preserves_and_cleans(spark, tmp_path):
 
 
 def test_manifest_compact_current_pointer_atomic(spark, tmp_path):
-    """Compaction commits via the CURRENT pointer: at every step the
-    manifest resolves to a complete generation (head() never sees 0), and
-    repeated compactions bump generations and keep appends working."""
-    import os
-
-    from reflex_spark.sources.memory import make_events
-
-    log = ManifestEventLog(spark, str(tmp_path / "mlog"))
+    """Compaction commits by swapping the log's symlink: the path always
+    resolves to one complete generation, and repeated compactions replace
+    the generation and keep appends working."""
+    log = EventLog(spark, str(tmp_path / "mlog"))
     log.append(make_events(spark, [(1, "a"), (1, "b")]))
     log.append(make_events(spark, [(2, "c")]))
     assert log.head() == 3
 
-    log.compact()
-    assert os.path.exists(str(tmp_path / "mlog" / "CURRENT"))
+    log.compact(target_partitions=1)
+    assert os.path.islink(log.path)
+    first = _generations(tmp_path, "mlog")
     assert log.head() == 3
     assert log.read().count() == 3
 
@@ -97,9 +85,10 @@ def test_manifest_compact_current_pointer_atomic(spark, tmp_path):
     log.append(make_events(spark, [(3, "d")]))
     assert log.head() == 4
 
-    # second compaction: generation bumps again, old generation cleaned
-    log.compact()
+    # second compaction: a new generation, the old one cleaned
+    log.compact(target_partitions=1)
     assert log.head() == 4
     assert log.read().count() == 4
-    gens = [d for d in os.listdir(str(tmp_path / "mlog")) if d.startswith("manifest")]
-    assert gens == ["manifest-2"]
+    gens = _generations(tmp_path, "mlog")
+    assert len(gens) == 1 and gens != first
+    assert log.poll_window(0).column("event_id").to_pylist() == [1, 2, 3, 4]

@@ -97,7 +97,7 @@ def test_concurrent_consumer_poisons_batch(spark, tmp_path):
     assert store.get_cursor("cc") == 3
 
 
-def test_partitioned_log_prunes(spark, tmp_path):
+def test_partitioned_log_prunes(spark, tmp_path, monkeypatch):
     log = EventLog(spark, str(tmp_path / "plog"), partitioned=True)
     log.append(make_events(spark, [(1, "a")], start=datetime(2024, 1, 1)))
     log.append(make_events(spark, [(1, "b")], start=datetime(2024, 1, 2)))
@@ -111,6 +111,16 @@ def test_partitioned_log_prunes(spark, tmp_path):
     plan = df._jdf.queryExecution().executedPlan().toString()
     pf = [line for line in plan.splitlines() if "PartitionFilters" in line]
     assert pf and "event_date" in pf[0], plan
+
+    # every append published a record naming its event_date=…/part-*
+    # file: a fresh handle answers head() and polls without a Spark scan
+    with monkeypatch.context() as m:
+        m.setattr(EventLog, "read", lambda self: pytest.fail("scanned the log with Spark"))
+        fresh = EventLog(spark, log.path, partitioned=True)
+        assert fresh.head() == 3
+        window = fresh.poll_window(1)
+    assert window.column("event_id").to_pylist() == [2, 3]
+    assert window.column("foreign_id").to_pylist() == ["b", "c"]
 
 
 def test_bucketed_join_no_shuffle(spark, tmp_path):

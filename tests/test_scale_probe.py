@@ -87,25 +87,37 @@ def test_compaction_reduces_files_preserves_data(spark, tmp_path):
 
 def test_compact_symlink_flip_atomic(spark, tmp_path):
     """After the one-time conversion, every compaction swaps a symlink
-    atomically — the log path always resolves to a complete directory."""
+    atomically — the log path always resolves to a complete directory.
+    Each compaction's commit record takes the next seq, so a second
+    handle that cached records before a compaction polls the right ids
+    after it (a compaction record at seq 0 would alias the cached
+    pre-compaction record 0, which names deleted files)."""
+    import json
     import os
 
     from reflex_spark.sources.memory import seed_log
 
     path = str(tmp_path / "slog")
     log = seed_log(spark, path, [(1, str(i)) for i in range(6)])
+    log.insert("post0", 2)
+    other = EventLog(spark, path)
+    assert other.poll_window(0).column("event_id").to_pylist() == list(range(1, 8))
     log.compact(target_partitions=1)  # conversion: plain dir -> symlink
     assert os.path.islink(path)
-    assert log.head() == 6
-    log.insert("post", 2)  # append through the symlink
     assert log.head() == 7
+    log.insert("post1", 2)  # append through the symlink
+    assert log.head() == 8
+    assert other.poll_window(0).column("event_id").to_pylist() == list(range(1, 9))
     log.compact(target_partitions=1)  # atomic flip path
     assert os.path.islink(path)
-    assert log.head() == 7
-    assert log.read().count() == 7
-    # exactly one data generation remains
+    assert log.head() == 8
+    assert log.read().count() == 8
+    assert other.poll_window(0).column("event_id").to_pylist() == list(range(1, 9))
+    # exactly one data generation remains, with one record at seq 4
     gens = [d for d in os.listdir(str(tmp_path)) if d.startswith("slog.data.")]
     assert len(gens) == 1
+    recs = [json.load(open(os.path.join(path, "_commits", n))) for n in os.listdir(os.path.join(path, "_commits"))]
+    assert [(r["seq"], r["min_id"], r["max_id"]) for r in recs] == [(4, 1, 8)]
 
 
 @pytest.mark.slow

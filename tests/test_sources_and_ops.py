@@ -895,38 +895,42 @@ def test_audio_features_exact_dsp(spark):
         assert r["max_frame_rms"] == float(np.sqrt(total_ss / 64.0))
 
 
-def test_stamp_commit_order_never_restamps_earlier_commits(spark, tmp_path):
-    """Commit-order stamping tracks this commit's NEW files explicitly
-    (pre-write listing), so a later append can never re-stamp an earlier
-    commit's files — even when their mtimes sit past any threshold (the
-    old BASE+100M heuristic broke exactly there: once head seq crossed
-    100M, every stamped file looked 'unstamped' again and commit
-    ordering collapsed). Holds for both append paths: a non-local input
-    (Spark write) and a local one (driver write)."""
-    import os
+def _data_files(path: str) -> set[str]:
+    """Every ``part-*`` data file under a log directory."""
+    return {
+        os.path.join(root, f) for root, _dirs, files in os.walk(path) for f in files if f.startswith("part-")
+    }
 
-    from reflex_spark.sources.event_log import EventLog
+
+def test_stamp_commit_order_never_restamps_earlier_commits(spark, tmp_path):
+    """Commit-order stamping touches only this commit's staged files, so a
+    later append can never re-stamp an earlier commit's files — even when
+    their mtimes sit past any threshold (the old BASE+100M heuristic broke
+    exactly there: once head seq crossed 100M, every stamped file looked
+    'unstamped' again and commit ordering collapsed). Holds for both append
+    paths: a non-local input (Spark write) and a local one (driver write)."""
+    from reflex_spark.sources.event_log import _MTIME_BASE
     from reflex_spark.sources.memory import make_events
 
     for name, as_input in (("spark", lambda df: df.repartition(2)), ("driver", lambda df: df)):
         log = EventLog(spark, str(tmp_path / name))
         log.append(as_input(make_events(spark, [(1, f"a{i}") for i in range(5)])))
-        first = {p: os.path.getmtime(p) for p in log._data_files()}
+        first = {p: os.path.getmtime(p) for p in _data_files(log.path)}
         assert first  # sanity
 
         # adversarial: push the first commit's mtimes way past the old
         # cutoff, as a log whose head seq exceeded 100M would legitimately be
-        big = float(EventLog._MTIME_BASE + 150_000_000)
+        big = float(_MTIME_BASE + 150_000_000)
         for p in first:
             os.utime(p, (big, big))
 
         log.append(as_input(make_events(spark, [(1, f"b{i}") for i in range(5)])))
-        after = {p: os.path.getmtime(p) for p in log._data_files()}
+        after = {p: os.path.getmtime(p) for p in _data_files(log.path)}
         for p in first:
             assert after[p] == big, f"{name}: earlier commit re-stamped"
         new = set(after) - set(first)
         assert new and all(
-            after[p] == float(EventLog._MTIME_BASE + 10) for p in new
+            after[p] == float(_MTIME_BASE + 10) for p in new
         ), f"{name}: new files carry this commit's logical mtime"
 
 
@@ -935,9 +939,6 @@ def test_stamp_commit_order_is_monotonic_across_appends(spark, tmp_path):
     (BASE + head), so the file stream source replays them in commit
     order regardless of filesystem clock granularity — for Spark-path
     (non-local input) and driver-path (local input) appends alike."""
-    import os
-
-    from reflex_spark.sources.event_log import EventLog
     from reflex_spark.sources.memory import make_events
 
     for name, as_input in (("spark", lambda df: df.repartition(2)), ("driver", lambda df: df)):
@@ -946,7 +947,7 @@ def test_stamp_commit_order_is_monotonic_across_appends(spark, tmp_path):
         seen: set[str] = set()
         for n in (3, 4, 5):
             log.append(as_input(make_events(spark, [(1, f"x{n}_{i}") for i in range(n)])))
-            fresh = log._data_files() - seen
+            fresh = _data_files(log.path) - seen
             seen |= fresh
             groups.append({os.path.getmtime(p) for p in fresh})
         assert max(groups[0]) < min(groups[1]) <= max(groups[1]) < min(groups[2]), name
@@ -959,32 +960,32 @@ def test_compact_stamps_output_into_logical_mtime_domain(spark, tmp_path):
     compact + append would replay the newer appends FIRST, breaking the
     file-order == id-order contract. The compacted output is stamped at
     BASE + head-at-compaction, so post-compaction appends keep sorting
-    strictly after it; ids stay continuous; the head cache is
-    invalidated defensively."""
-    import os
-
-    from reflex_spark.sources.event_log import EventLog
+    strictly after it; ids and rows are kept and stay continuous; the
+    head cache is invalidated defensively; the compacted log stays
+    recorded."""
+    from reflex_spark.sources.event_log import _MTIME_BASE
     from reflex_spark.sources.memory import make_events
     from reflex_spark.streaming import Consumer, ErrHeadReached, Spec, StreamOptions, run
 
     log = EventLog(spark, str(tmp_path / "log"))
     log.append(make_events(spark, [(1, f"a{i}") for i in range(4)]))
     log.append(make_events(spark, [(1, f"b{i}") for i in range(4)]))
+    rows = lambda: [(r["event_id"], r["foreign_id"]) for r in log.read().orderBy("event_id").collect()]  # noqa: E731
+    before = rows()
     log.compact(target_partitions=1)
     assert log._head_cache is None  # defensive invalidation
-    compacted = dict.fromkeys(log._data_files())
-    for p in compacted:
-        compacted[p] = os.path.getmtime(p)
-    assert all(m == float(EventLog._MTIME_BASE + 8) for m in compacted.values())
+    assert rows() == before
+    compacted = {p: os.path.getmtime(p) for p in _data_files(log.path)}
+    assert all(m == float(_MTIME_BASE + 8) for m in compacted.values())
 
     log.append(make_events(spark, [(1, f"c{i}") for i in range(4)]))
     assert log.head() == 12  # ids continuous across compaction
-    newer = log._data_files() - set(compacted)
+    newer = _data_files(log.path) - set(compacted)
     assert newer
     # every post-compaction file sorts strictly AFTER the compacted set
     assert min(os.path.getmtime(p) for p in newer) > max(compacted.values())
-    # the compacted files are unrecorded: polls scan with Spark, correctly
-    assert log.poll_window(0) is None
+    # the compaction published its record: polls stay on the driver path
+    assert log.poll_window(0).column("event_id").to_pylist() == list(range(1, 13))
     seen = []
     spec = Spec(
         log,

@@ -660,6 +660,19 @@ def test_head_empty_dir_ok_but_corruption_raises(spark, tmp_path):
         EventLog(spark, str(tmp_path / "log")).head()
 
 
+def test_partitioned_log_with_only_hidden_files_is_empty(spark, tmp_path):
+    """Files under ``_``/``.`` names (a crashed first write's
+    ``_temporary/``, commit staging) are invisible to Spark, so a
+    partitioned log holding only them is empty — head() and read() must
+    not ask Spark to infer a schema from no visible file."""
+    path = tmp_path / "plog"
+    make_events(spark, [(1, "a")]).repartition(1).write.parquet(str(path / "_temporary" / "0"))
+    log = EventLog(spark, str(path), partitioned=True)
+    assert log.head() == 0
+    assert log.read().count() == 0
+    assert log.append(make_events(spark, [(1, "b")])) == 1
+
+
 def test_buffered_cursor_store_coalesces_writes(spark, tmp_path):
     """C1 parity (rsql/cursorstable.go:43,169-230): sets coalesce in the
     buffer and reach the durable store at most once per interval; flush()
