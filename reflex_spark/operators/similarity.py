@@ -14,9 +14,11 @@ unique id tie-break, so result *sets* are deterministic too.
 from __future__ import annotations
 
 import hashlib
+import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
 from reflex_spark.operators.relational import top_k
 
@@ -1444,6 +1446,15 @@ def scalar_quant_reconstruct(
         ).alias("__rv")
     )
 
+#: The quantizer generations' schema (list ids are bigint in every one).
+_CENTROID_SCHEMA = StructType(
+    [
+        StructField("list_id", LongType()),
+        StructField("centroid", ArrayType(DoubleType())),
+    ]
+)
+
+
 class IvfIndex:
     """Persisted IVF index directory with INCREMENTAL maintenance — the
     ANN twin of the incremental MinHash band index (dedup.py): real
@@ -1556,11 +1567,13 @@ class IvfIndex:
         # per-generation quantizer VALUES, read driver-side (KBs — the
         # same POSIX control-plane class as the ledger and the append
         # footer counts), plus the per-generation assignment Column
-        # built from them. Keyed on the generation, so a split/compact
-        # commit invalidates both by construction; dies with the
-        # instance. (Plan metadata only — never row data.)
-        self._quant_cache: tuple[int, list] | None = None
-        self._assign_cache: tuple[int, Column] | None = None
+        # built from them. Keyed on (build id, generation), so a
+        # split/compact commit invalidates both by construction, and so
+        # does a rebuild at the same path, which restarts the generation
+        # at 0; dies with the instance. (Plan metadata only — never row
+        # data.)
+        self._quant_cache: tuple[tuple, list] | None = None
+        self._assign_cache: tuple[tuple, Column] | None = None
 
     # -- control plane ----------------------------------------------------
 
@@ -1734,6 +1747,12 @@ class IvfIndex:
 
     # -- data plane ---------------------------------------------------------
 
+    @staticmethod
+    def _quant_key(meta: dict) -> tuple:
+        """The quantizer a ledger names: its build (indexes built before
+        the ledger kept a build id share ``None``) and generation."""
+        return meta.get("build_id"), meta["centroid_gen"]
+
     def _centroid_dir(self, meta: dict | None = None) -> str:
         meta = self._read_meta() if meta is None else meta
         return f"{self.path}/centroids-{meta['centroid_gen']}"
@@ -1759,8 +1778,8 @@ class IvfIndex:
 
         import pyarrow.parquet as _pq
 
-        gen = meta["centroid_gen"]
-        if self._quant_cache is not None and self._quant_cache[0] == gen:
+        key = self._quant_key(meta)
+        if self._quant_cache is not None and self._quant_cache[0] == key:
             return self._quant_cache[1]
         d = self._centroid_dir(meta)
         rows: list[tuple[int, list[float]]] = []
@@ -1777,7 +1796,7 @@ class IvfIndex:
                 )
             )
         rows.sort(key=lambda r: r[0])
-        self._quant_cache = (gen, rows)
+        self._quant_cache = (key, rows)
         return rows
 
     def _write_centroids(
@@ -1789,27 +1808,30 @@ class IvfIndex:
         rows over defaultParallelism — one ~0.4s 32-task Spark job PER
         split/compact writing 16 rows into 16+ files, a cost that GREW
         with cluster width (the measured sub-1 8→32-core scaling of the
-        stream-ANN compaction entry). One file, exact doubles (parquet
-        float64 both ways), bit-identical to what the Spark write
-        produced."""
+        stream-ANN compaction entry). One file with a Spark footer at
+        ``_CENTROID_SCHEMA``, the schema ``build`` writes generation 0
+        at, and exact doubles (parquet float64 both ways): every
+        generation reads back at one schema and the same values."""
         import os
 
         import pyarrow as _pa
-        import pyarrow.parquet as _pq
+
+        from reflex_spark.tables import write_spark_parquet
 
         os.makedirs(path, exist_ok=True)
-        schema = _pa.schema(
-            [("list_id", _pa.int32()), ("centroid", _pa.list_(_pa.float64()))]
-        )
         rows = sorted(rows, key=lambda r: r[0])
-        table = _pa.Table.from_pydict(
-            {
-                "list_id": [int(cid) for cid, _ in rows],
-                "centroid": [list(map(float, v)) for _, v in rows],
-            },
-            schema=schema,
+        write_spark_parquet(
+            self.spark,
+            [
+                _pa.array([int(cid) for cid, _ in rows], _pa.int64()),
+                _pa.array(
+                    [list(map(float, v)) for _, v in rows],
+                    _pa.list_(_pa.float64()),
+                ),
+            ],
+            _CENTROID_SCHEMA,
+            path,
         )
-        _pq.write_table(table, os.path.join(path, "part-00000.parquet"))
 
     def _list_files(self, list_id: int, names: list[str]) -> list[str]:
         return [
@@ -1965,8 +1987,8 @@ class IvfIndex:
         vec = F.col(self.vec_col)
         size = sum(1 + len(v) for _, v in quant)
         if size <= self._ASSIGN_LITERAL_CAP:
-            gen = meta["centroid_gen"]
-            if self._assign_cache is not None and self._assign_cache[0] == gen:
+            key = self._quant_key(meta)
+            if self._assign_cache is not None and self._assign_cache[0] == key:
                 best = self._assign_cache[1]
             else:
                 # doubles as CAST('<repr>' AS DOUBLE): repr() is the
@@ -1990,7 +2012,7 @@ class IvfIndex:
                 best = self._argmin_list(F.expr(arr_sql), vec).alias(
                     "ivf_list"
                 )
-                self._assign_cache = (gen, best)
+                self._assign_cache = (key, best)
             return batch.select(self.id_col, self.vec_col, best)
         cent_arr = self._centroids(meta).agg(
             F.sort_array(
@@ -2045,14 +2067,15 @@ class IvfIndex:
             # store centroids as array<double>: float seeds widen
             # exactly, and re-split means (decimal-sum / count doubles)
             # then keep their full precision instead of being silently
-            # narrowed by the seed schema
+            # narrowed by the seed schema; list ids as bigint, the
+            # _CENTROID_SCHEMA every later generation is written at
             centroids.select(
-                "list_id",
+                F.col("list_id").cast("long").alias("list_id"),
                 F.transform(
                     F.col("centroid"), lambda x: x.cast("double")
                 ).alias("centroid"),
             ).write.parquet(f"{path}/centroids-0")
-            boot = {"centroid_gen": 0}
+            boot = {"centroid_gen": 0, "build_id": uuid.uuid4().hex}
             # the assignment computes ONCE (inside the write); the
             # ledger is then derived from the WRITTEN FILES — a name
             # listing plus driver-side footer sums — so it cannot
@@ -2088,6 +2111,7 @@ class IvfIndex:
                     "files": files,
                     "next_list_id": next_id,
                     "centroid_gen": 0,
+                    "build_id": boot["build_id"],
                     "garbage": [],
                 }
             )

@@ -43,7 +43,6 @@ union; per-shard ordering is preserved, global ordering is (shard, id).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import threading
@@ -73,7 +72,7 @@ from pyspark.sql.types import (
 from pyspark.sql.window import Window
 
 from reflex_spark.sources import commits
-from reflex_spark.tables import empty_df
+from reflex_spark.tables import empty_df, write_spark_parquet
 
 EVENT_SCHEMA = StructType(
     [
@@ -412,29 +411,9 @@ class EventLog:
                 for f, a in zip(EVENT_SCHEMA.fields[1:], arrays[1:])
             ]
         )
-        table = pa.Table.from_arrays(
-            arrays,
-            schema=pa.schema(
-                [
-                    pa.field(f.name, ARROW_SCHEMA.field(f.name).type, f.nullable)
-                    for f in stored.fields
-                ],
-                # what a Spark write puts in the footer: Spark reads the
-                # schema back from it
-                metadata={
-                    "org.apache.spark.version": self.spark.version,
-                    "org.apache.spark.sql.parquet.row.metadata": json.dumps(
-                        stored.jsonValue(), separators=(",", ":")
-                    ),
-                },
-            ),
-        )
         staged = _staging_dir(self.path)
         os.makedirs(staged)
-        name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
-        pq.write_table(
-            table, os.path.join(staged, name), compression="snappy", use_deprecated_int96_timestamps=True
-        )
+        write_spark_parquet(self.spark, arrays, stored, staged)
         self._commit(staged, base + 1, base + n)
         return self._committed(base + n)
 

@@ -3,8 +3,17 @@
 The classic warehouse pattern the reference leaves to consumers (a consumer
 maintaining a projection table from events): a foreachBatch consumer merges
 each microbatch's partial aggregate into a persistent parquet table, so the
-rollup is always queryable and each batch costs O(batch + touched keys) —
-never a recompute of history.
+rollup is always queryable and history is never recomputed. Each merge
+still rewrites the whole rollup: a batch costs O(batch + rollup), not
+O(batch + touched keys).
+
+Two merge paths, one stored format. A merge whose input (current rollup +
+fresh rows) Catalyst estimates at or below ``DRIVER_MERGE_BYTES`` runs on
+the driver: the fresh rows are collected (no Spark job for a local poll
+batch, one for a stream micro-batch), summed per key with the rollup read
+by pyarrow, and written as one file with the Spark merge's footer. Larger
+merges, key types Arrow does not group the way Spark does, and sums that
+overflow ``decimal(18,6)`` run the Spark shuffle merge.
 
 Exactly-once on at-least-once delivery: dedup is keyed on the event ids
 actually merged, not on batch boundaries. A high-watermark (max event_id
@@ -30,22 +39,47 @@ import json
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import (
+    BooleanType,
+    ByteType,
+    DateType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructType,
+)
+
+from reflex_spark.tables import write_spark_parquet
 
 _WATERMARK_FILE = "_watermark.json"  # "_" prefix → invisible to parquet scans
 
 #: Merges whose input (current rollup + fresh rows) Catalyst estimates at
-#: or below this many bytes run as one task without a shuffle. Measured
-#: faster at the benchmark backfill's 25-323 KB estimates (4 cores); larger
-#: merges keep the shuffle, whose parallelism was not measured against.
-ONE_TASK_MERGE_BYTES = 512 << 10
+#: or below this many bytes run on the driver with pyarrow. Measured faster
+#: at the benchmark backfill's 25-323 KB estimates (4 cores); larger merges
+#: keep the shuffle, whose parallelism was not measured against.
+DRIVER_MERGE_BYTES = 512 << 10
+
+#: Key types whose Arrow grouping equals Spark's: no float keys (Spark
+#: folds NaNs and -0.0), and strings only at the default binary collation.
+_GROUPABLE = (BooleanType, ByteType, ShortType, IntegerType, LongType, DateType)
+
+_EVENT_ID = "__event_id"  # the collected ids, named apart from any key
 
 
 def _plan_bytes(df: DataFrame) -> int:
     """Catalyst's optimized-plan size estimate for ``df`` (no job runs)."""
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def _groupable(schema: StructType, keys: list[str]) -> bool:
+    return all(type(schema[k].dataType) in _GROUPABLE or schema[k].dataType == StringType() for k in keys)
 
 
 class MaterializedCounts:
@@ -104,15 +138,9 @@ class MaterializedCounts:
         committed watermark are merged, and the new watermark is committed
         in the same rename that publishes the merged table.
         """
-        wm = self.watermark()
+        ledger = self._ledger()
+        wm = ledger.get("max_event_id")
         fresh = batch if wm is None else batch.where(F.col("event_id") > wm)
-        if batch.isLocal():
-            # a filter over a LocalRelation collects on the driver, no job
-            hi = max((r[0] for r in fresh.select("event_id").collect()), default=None)
-        else:
-            hi = fresh.agg(F.max("event_id").alias("hi")).collect()[0]["hi"]
-        if hi is None:
-            return  # fully redelivered batch — already merged
 
         # One aggregation over the current rollup and the fresh rows: its
         # map-side partial aggregate already pre-sums the batch per key.
@@ -124,19 +152,43 @@ class MaterializedCounts:
         rows = fresh.select(*cols)
         if os.path.exists(self.path):
             # at its stored schema: no schema-inference job
-            rows = self.read().unionByName(rows)
-        if _plan_bytes(rows) <= ONE_TASK_MERGE_BYTES:
-            # Aggregate in one task without a shuffle: one Spark job
-            # instead of two.
-            rows = rows.coalesce(1)
+            rows = self._read(ledger).unionByName(rows)
         merged = rows.groupBy(*self.keys).agg(*sums)
+        schema = merged.schema  # what the Spark merge writes (no job)
+        on_driver = _plan_bytes(rows) <= DRIVER_MERGE_BYTES and _groupable(schema, self.keys)
+
+        picked = fresh.select(F.col("event_id").alias(_EVENT_ID), *cols)
+        got = None
+        if batch.isLocal():
+            # a filter over a LocalRelation collects on the driver, no job
+            collected = picked.collect()
+            hi = max((r[0] for r in collected), default=None)
+            if on_driver:
+                got = pa.table(
+                    {
+                        f.name: pa.array([r[i] for r in collected], to_arrow_type(f.dataType))
+                        for i, f in enumerate(picked.schema.fields)
+                    }
+                )
+        elif on_driver:
+            got = picked.toArrow()  # the one Spark job of a driver merge
+            hi = pc.max(got.column(_EVENT_ID)).as_py()
+        else:
+            hi = fresh.agg(F.max("event_id")).collect()[0][0]
+        if hi is None:
+            return  # fully redelivered batch — already merged
 
         tmp = self.path + ".staging"
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
-        merged.write.mode("overwrite").parquet(tmp)
+        summed = None if got is None else self._driver_merge(got.drop_columns(_EVENT_ID), schema)
+        if summed is None:
+            merged.write.mode("overwrite").parquet(tmp)
+        else:
+            os.makedirs(tmp)
+            write_spark_parquet(self.spark, summed, schema, tmp)
         with open(os.path.join(tmp, _WATERMARK_FILE), "w") as f:
-            json.dump({"max_event_id": int(hi), "schema": merged.schema.json()}, f)
+            json.dump({"max_event_id": int(hi), "schema": schema.json()}, f)
         old = self.path + ".old"
         if os.path.exists(self.path):
             os.rename(self.path, old)
@@ -144,13 +196,39 @@ class MaterializedCounts:
         if os.path.exists(old):
             shutil.rmtree(old)
 
+    def _driver_merge(self, fresh: pa.Table, schema: StructType) -> list[pa.Array] | None:
+        """The merged rollup's columns in ``schema``'s order, summed with
+        pyarrow over the published table and ``fresh``; None when a sum
+        does not fit its stored type (the Spark merge decides then)."""
+        types = [to_arrow_type(f.dataType) for f in schema.fields]
+        # decimal sums widen to 38 digits, so an overflow shows on the way back
+        wide = pa.schema(
+            [
+                pa.field(n, pa.decimal128(38, t.scale) if pa.types.is_decimal(t) else t)
+                for n, t in zip(schema.names, types)
+            ]
+        )
+        parts = [fresh]
+        if os.path.exists(self.path):
+            parts.append(pq.read_table(self.path))
+        table = pa.concat_tables([p.select(wide.names).cast(wide) for p in parts])
+        values = schema.names[len(self.keys) :]
+        out = table.group_by(self.keys).aggregate([(v, "sum") for v in values])
+        names = self.keys + [f"{v}_sum" for v in values]
+        try:
+            return [out.column(n).cast(t) for n, t in zip(names, types)]
+        except pa.ArrowInvalid:
+            return None
+
     # -- query side --------------------------------------------------------
 
     def read(self) -> DataFrame:
         """The rollup, read at the schema it was written with (tables
         written before the ledger kept it infer theirs)."""
-        schema = self._ledger().get("schema")
+        return self._read(self._ledger())
+
+    def _read(self, ledger: dict) -> DataFrame:
         reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(StructType.fromJson(json.loads(schema)))
+        if "schema" in ledger:
+            reader = reader.schema(StructType.fromJson(json.loads(ledger["schema"])))
         return reader.parquet(self.path)

@@ -2,15 +2,22 @@
 
 Tables (TESTDATA.md): region nation customer supplier part orders lineitem
 events documents embeddings — one parquet file each under a scale-factor dir.
+Also the shared table helpers: a zero-partition ``empty_df`` and
+``write_spark_parquet``, the driver-side write of a Spark-footed file.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import LongType, StructType
 
 TABLES = (
     "region",
@@ -67,6 +74,25 @@ def empty_df(spark: SparkSession, schema) -> DataFrame:
     ``emptyRDD()`` has no partitions at all: jobs over it schedule zero
     tasks and unions with it add nothing."""
     return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+
+
+def write_spark_parquet(spark: SparkSession, columns: list, schema: StructType, directory: str) -> None:
+    """Write ``columns`` (Arrow arrays in ``schema``'s field order) with
+    pyarrow as one ``part-00000-<uuid>-c000.snappy.parquet`` file in
+    ``directory``. The footer is the one a Spark write of ``schema``
+    leaves: the Spark schema Spark reads back (no inference), its
+    nullability, snappy pages and INT96 timestamps. Decimals keep
+    pyarrow's fixed-length encoding, which Spark and DuckDB read alike."""
+    fields = [pa.field(f.name, to_arrow_type(f.dataType), f.nullable) for f in schema.fields]
+    footer = {
+        "org.apache.spark.version": spark.version,
+        "org.apache.spark.sql.parquet.row.metadata": json.dumps(schema.jsonValue(), separators=(",", ":")),
+    }
+    table = pa.Table.from_arrays(
+        [c.cast(f.type) for c, f in zip(columns, fields)], schema=pa.schema(fields, metadata=footer)
+    )
+    path = os.path.join(directory, f"part-00000-{uuid.uuid4()}-c000.snappy.parquet")
+    pq.write_table(table, path, compression="snappy", use_deprecated_int96_timestamps=True)
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

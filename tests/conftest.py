@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import tempfile
 
@@ -16,12 +17,49 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # writes are 4x faster and fsync-free). Tests only: bench.py and the
 # driver's query runs are untouched, so timed numbers stay comparable.
 # An externally-set TMPDIR always wins.
+#
+# tmpfs is memory: each run writes under its own ``run-<pid>`` directory,
+# removed when the session ends (``_shm_scratch``), and a run deletes
+# what runs that died left behind before it starts.
 _SHM = "/dev/shm"
+_SHM_ROOT = os.path.join(_SHM, "reflex_spark_tests")
+_run_scratch = None
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
 if os.path.isdir(_SHM) and os.access(_SHM, os.W_OK) and "TMPDIR" not in os.environ:
-    _scratch = os.path.join(_SHM, "reflex_spark_tests")
-    os.makedirs(_scratch, exist_ok=True)
-    os.environ["TMPDIR"] = _scratch
+    os.makedirs(_SHM_ROOT, exist_ok=True)
+    _run_scratch = os.path.join(_SHM_ROOT, f"run-{os.getpid()}")
+    for _name in os.listdir(_SHM_ROOT):
+        _pid = _name.removeprefix("run-")
+        _path = os.path.join(_SHM_ROOT, _name)
+        if _path != _run_scratch and _pid.isdigit() and _alive(int(_pid)):
+            continue  # a live run's scratch
+        if os.path.isdir(_path):
+            shutil.rmtree(_path, ignore_errors=True)
+        else:
+            os.remove(_path)
+    os.makedirs(_run_scratch)
+    os.environ["TMPDIR"] = _run_scratch
     tempfile.tempdir = None  # drop the cached pre-TMPDIR choice
+
+
+@pytest.fixture(scope="session", autouse=True)
+def _shm_scratch():
+    """Remove this run's tmpfs scratch when the session ends."""
+    yield
+    if _run_scratch is not None:
+        shutil.rmtree(_run_scratch, ignore_errors=True)
+
 
 from reflex_spark.session import get_spark
 

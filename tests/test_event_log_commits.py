@@ -223,24 +223,118 @@ def test_file_removed_under_a_driver_read_repolls(spark, tmp_path, monkeypatch):
     assert log.poll_window(0).column("event_id").to_pylist() == list(range(1, 9))
 
 
-@pytest.mark.parametrize("one_task_bytes", [materialize.ONE_TASK_MERGE_BYTES, -1])
-def test_materialized_counts_local_batch_reads_stored_schema(spark, tmp_path, monkeypatch, one_task_bytes):
-    """A local batch's watermark comes from its ids; the rollup reads back
-    at the schema it was written with, decimals included — whether the
-    merge runs as one task or (-1) through a shuffle."""
-    monkeypatch.setattr(materialize, "ONE_TASK_MERGE_BYTES", one_task_bytes)
+def _rollup_batch(spark, ids, keys, vals, scan_dir=None):
+    """A (event_id, k, v) batch: local, or (``scan_dir``) a file scan."""
+    t = pa.table({"event_id": pa.array(ids, pa.int64()), "k": pa.array(keys, pa.string()), "v": vals})
+    if scan_dir is None:
+        return spark.createDataFrame(t)
+    os.makedirs(scan_dir, exist_ok=True)
+    pq.write_table(t, os.path.join(scan_dir, "part-0.parquet"))
+    return spark.read.parquet(scan_dir)
+
+
+def _rollup_outcome(spark, root, merge_bytes):
+    """Build a rollup through local, straddling, file-scan (null key) and
+    fully redelivered batches; return what a reader can observe of it."""
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(materialize, "DRIVER_MERGE_BYTES", merge_bytes)
+        mat = MaterializedCounts(spark, os.path.join(root, "rollup"), keys=["k"], value_col="v")
+        scan = _rollup_batch(spark, [4, 5, 6], [None, "a", None], ["1", "2", None], os.path.join(root, "scan"))
+        assert not scan.isLocal()
+        for batch in (
+            _rollup_batch(spark, [0, 1, 2], ["a", "b", "a"], ["1.5", "2.25", "0.125"]),
+            _rollup_batch(spark, [2, 3], ["a", "b"], ["0.125", "4"]),  # redelivers id 2
+            scan,
+            scan,  # fully redelivered
+        ):
+            mat.apply_batch(batch, {})
+    with open(os.path.join(mat.path, "_watermark.json")) as f:
+        ledger = json.load(f)
+    footers = [json.loads(pq.ParquetFile(p).metadata.metadata[_ROW_METADATA]) for p in glob.glob(f"{mat.path}/part-*")]
+    return {
+        "watermark": mat.watermark(),
+        "rows": sorted(((r["k"], r["n_events"], str(r["sum_value"])) for r in mat.read().collect()), key=str),
+        "dtypes": mat.read().dtypes,
+        "ledger_schema": ledger["schema"],
+        "footers": footers,
+        "duckdb": duckdb.sql(
+            f"SELECT k, n_events, sum_value FROM read_parquet('{mat.path}/part-*.parquet') ORDER BY k NULLS FIRST"
+        ).fetchall(),
+        "driver_written": not os.path.exists(os.path.join(mat.path, "_SUCCESS")),
+    }
+
+
+@pytest.fixture(scope="module")
+def shuffle_rollup(spark, tmp_path_factory):
+    """The reference: the same batches merged by the Spark shuffle."""
+    return _rollup_outcome(spark, str(tmp_path_factory.mktemp("shuffle")), -1)
+
+
+@pytest.mark.parametrize("merge_bytes", [materialize.DRIVER_MERGE_BYTES, -1])
+def test_materialized_counts_local_batch_reads_stored_schema(spark, tmp_path, merge_bytes, shuffle_rollup):
+    """The driver merge (default threshold) and the Spark shuffle merge
+    (-1) store the same rollup: the same rows (null keys form one group),
+    ledger schema, footer schema and DuckDB result; the watermark comes
+    from the batches' ids and redelivered rows are dropped."""
+    got = _rollup_outcome(spark, str(tmp_path), merge_bytes)
+    assert got.pop("driver_written") == (merge_bytes >= 0)
+    assert got["watermark"] == 6
+    assert got["rows"] == sorted(
+        [("a", 3, "3.625000"), ("b", 2, "6.250000"), (None, 2, "1.000000")], key=str
+    )
+    assert dict(got["dtypes"])["sum_value"] == "decimal(18,6)"
+    assert got["footers"] == [json.loads(got["ledger_schema"])]
+    assert got == {k: v for k, v in shuffle_rollup.items() if k != "driver_written"}
+
+
+def _jobs_in(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` runs."""
+    sc, group = spark.sparkContext, f"count-jobs-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    time.sleep(0.5)  # let the listener bus record the last jobs
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_driver_merge_job_counts(spark, tmp_path):
+    """Under the threshold a local batch merges with no Spark job and a
+    file-scan batch with at most one (the collect)."""
     mat = MaterializedCounts(spark, str(tmp_path / "rollup"), keys=["k"], value_col="v")
-    for ids, vals in (([0, 1, 2], ["1.5", "2.25", "0.125"]), ([2, 3], ["0.125", "4"])):
-        batch = spark.createDataFrame(
-            pa.table({"event_id": pa.array(ids, pa.int64()), "k": ["a", "b", "a"][: len(ids)], "v": vals})
-        )
-        assert batch.isLocal()
-        mat.apply_batch(batch, {})
-    assert mat.watermark() == 3
-    got = {r["k"]: (r["n_events"], str(r["sum_value"])) for r in mat.read().collect()}
-    assert got == {"a": (2, "1.625000"), "b": (2, "6.250000")}
-    assert dict(mat.read().dtypes)["sum_value"] == "decimal(18,6)"
-    assert mat.read().where(F.col("k") == "a").count() == 1
+    local = _rollup_batch(spark, [1, 2], ["a", "b"], ["1", "2"])
+    assert _jobs_in(spark, lambda: mat.apply_batch(local, {})) == 0
+    scan = _rollup_batch(spark, [3, 4], ["a", "c"], ["3", "4"], str(tmp_path / "scan"))
+    assert _jobs_in(spark, lambda: mat.apply_batch(scan, {})) <= 1
+    assert _jobs_in(spark, lambda: mat.apply_batch(local, {})) == 0  # redelivered
+    assert sorted((r["k"], r["n_events"]) for r in mat.read().collect()) == [("a", 2), ("b", 1), ("c", 1)]
+
+
+def test_driver_merge_hands_overflow_and_float_keys_to_spark(spark, tmp_path):
+    """A decimal sum that does not fit decimal(18,6) behaves as the Spark
+    merge does (whatever the session's ANSI mode makes of it), and float
+    keys group as Spark groups them (0.0 == -0.0, NaN == NaN)."""
+
+    def overflow(merge_bytes):
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(materialize, "DRIVER_MERGE_BYTES", merge_bytes)
+            mat = MaterializedCounts(spark, str(tmp_path / f"over{merge_bytes}"), keys=["k"], value_col="v")
+            mat.apply_batch(_rollup_batch(spark, [1], ["a"], ["999999999999.5"]), {})
+            try:
+                mat.apply_batch(_rollup_batch(spark, [2], ["a"], ["999999999999.5"]), {})
+                error = None
+            except Exception as exc:  # noqa: BLE001 — compared across the two paths
+                error = type(exc).__name__
+            return error, mat.watermark(), [tuple(r) for r in mat.read().collect()]
+
+    assert overflow(materialize.DRIVER_MERGE_BYTES) == overflow(-1)
+
+    mat = MaterializedCounts(spark, str(tmp_path / "floats"), keys=["x"])
+    xs = [0.0, -0.0, float("nan"), float("nan"), 1.5]
+    mat.apply_batch(spark.createDataFrame(pa.table({"event_id": list(range(1, 6)), "x": xs})), {})
+    got = sorted((str(r["x"]), r["n_events"]) for r in mat.read().collect())
+    assert got == [("0.0", 2), ("1.5", 1), ("nan", 2)]
 
 
 def test_concurrent_pollers_see_each_id_once_in_order(spark, tmp_path):

@@ -146,6 +146,11 @@ def test_materialized_rebatched_redelivery_and_crash_recovery(spark, tmp_path):
     assert {r["event_type"]: r["n_events"] for r in mat.read().collect()} == {1: 2, 2: 2, 3: 1}
     assert mat.watermark() == 5
 
+    # the crash cases below run on a rollup the driver merge wrote: one
+    # part file and no Spark _SUCCESS marker
+    assert len([f for f in os.listdir(path) if f.startswith("part-")]) == 1
+    assert not os.path.exists(os.path.join(path, "_SUCCESS"))
+
     # crash mid-swap (table dir absent, staging complete): roll forward
     os.rename(path, path + ".staging")
     assert mat.watermark() == 5  # recovered
@@ -158,6 +163,11 @@ def test_materialized_rebatched_redelivery_and_crash_recovery(spark, tmp_path):
     mat._recover()
     assert not os.path.exists(path + ".old")
     assert mat.watermark() == 5
+
+    # crash after path→old with staging already gone: roll back
+    os.rename(path, path + ".old")
+    assert mat.watermark() == 5
+    assert {r["event_type"]: r["n_events"] for r in mat.read().collect()} == {1: 2, 2: 2, 3: 1}
 
 
 def test_materialized_first_batch_keeps_event_id_zero(spark, tmp_path):
