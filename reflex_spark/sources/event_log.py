@@ -206,6 +206,24 @@ def local_events(
     return spark.createDataFrame(table, StructType(EVENT_SCHEMA.fields[1:]))
 
 
+_ROWS_TAG = "_reflex_local_rows"  # the instance attribute ``local_batch`` sets
+
+
+def local_batch(spark: SparkSession, rows: pa.Table) -> DataFrame:
+    """``rows`` (``ARROW_SCHEMA`` columns) as the local DataFrame a run loop
+    hands its consumer, tagged with ``rows`` for ``arrow_of``."""
+    df = spark.createDataFrame(rows, SCAN_SCHEMA)
+    vars(df)[_ROWS_TAG] = rows
+    return df
+
+
+def arrow_of(df: DataFrame) -> pa.Table | None:
+    """The Arrow rows ``df`` was built from by ``local_batch``; None for any
+    other DataFrame. The tag lives on that exact object: a filter or a
+    ``withColumn`` makes a new DataFrame, which carries none."""
+    return vars(df).get(_ROWS_TAG)
+
+
 def _driver_appendable(schema: StructType, keys: list) -> bool:
     """Can pyarrow write exactly what the Spark path would: every event
     column at its canonical type, and plain sortable ordering columns?"""
@@ -483,12 +501,40 @@ class EventLog:
             return None
         hi = after + limit if limit else None
         want = [r for r in records if r["max_id"] > after and (hi is None or r["min_id"] <= hi)]
-        if sum(r["max_id"] - r["min_id"] + 1 for r in want) > DRIVER_WINDOW_ROWS:
+        t = self._read_recorded(want, [f for r in want for f in r["files"]])
+        if t is None:
             return None
-        parts = [_read_events(os.path.join(self.path, f)) for r in want for f in r["files"]]
-        t = pa.concat_tables(parts) if parts else ARROW_SCHEMA.empty_table()
-        t = t.filter(pc.greater(t["event_id"], after)).sort_by("event_id")
+        t = t.filter(pc.greater(t["event_id"], after))
         return t.slice(0, limit) if limit else t
+
+    def read_files(self, paths: list[str]) -> pa.Table | None:
+        """The events in the data files at ``paths`` (absolute local paths
+        inside the log, e.g. a ``run_stream`` micro-batch's files), in id
+        order, read with pyarrow on the driver — no Spark job.
+
+        None when a file is not named by a commit record (a raw out-of-band
+        write, a crash between rename and record) or the records naming the
+        files hold more than ``DRIVER_WINDOW_ROWS`` rows: read the files
+        with Spark instead. A removed file raises FileNotFoundError."""
+        root = os.path.abspath(self.path) + os.sep
+        if not all(p.startswith(root) for p in paths):
+            return None
+        rel = [p[len(root) :] for p in paths]
+        by_file = {f: r for r in commits.read_records(self._commits_dir, self._records) for f in r["files"]}
+        if not all(f in by_file for f in rel):
+            return None
+        want = list({r["seq"]: r for r in map(by_file.get, rel)}.values())
+        return self._read_recorded(want, rel)
+
+    def _read_recorded(self, records: list[dict], files: list[str]) -> pa.Table | None:
+        """``files`` (relative to the log) read with pyarrow and sorted by
+        id; None when ``records``, those naming them, hold more than
+        ``DRIVER_WINDOW_ROWS`` rows."""
+        if sum(r["max_id"] - r["min_id"] + 1 for r in records) > DRIVER_WINDOW_ROWS:
+            return None
+        parts = [_read_events(os.path.join(self.path, f)) for f in files]
+        t = pa.concat_tables(parts) if parts else ARROW_SCHEMA.empty_table()
+        return t.sort_by("event_id")
 
     def insert(
         self,

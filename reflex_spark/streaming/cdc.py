@@ -122,7 +122,14 @@ def publish_changes_many(
     seed and merge windows back to back); a window that depends on a
     later commit must keep using ``publish_changes``. ``windows`` is
     ``(from_version, to_version, at)`` with the same explicit-timestamp
-    contract. Returns the final log head."""
+    contract. Returns the final log head.
+
+    Failure semantics differ from a ``publish_changes`` loop: every
+    window's diff is prepared before the first append, so if ANY window's
+    preparation fails — a later one included — no window is published and
+    the error propagates. Once the appends start, each is its own commit:
+    an append that fails leaves the windows before it published and the
+    rest unpublished, as the equivalent loop would."""
     from concurrent.futures import ThreadPoolExecutor
 
     for _f, _t, at in windows:

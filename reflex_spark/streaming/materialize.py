@@ -9,11 +9,16 @@ O(batch + touched keys).
 
 Two merge paths, one stored format. A merge whose input (current rollup +
 fresh rows) Catalyst estimates at or below ``DRIVER_MERGE_BYTES`` runs on
-the driver: the fresh rows are collected (no Spark job for a local poll
-batch, one for a stream micro-batch), summed per key with the rollup read
-by pyarrow, and written as one file with the Spark merge's footer. Larger
-merges, key types Arrow does not group the way Spark does, and sums that
-overflow ``decimal(18,6)`` run the Spark shuffle merge.
+the driver: the fresh rows are summed per key with the rollup read by
+pyarrow and written as one file with the Spark merge's footer. The fresh
+rows come from the batch's own Arrow rows when it is the exact DataFrame a
+run loop served from the driver (``event_log.arrow_of``: every small poll
+window and stream micro-batch) and its value column is a 32-bit or
+narrower integer, with no Spark job and no JVM row round trip; from a
+``collect()`` of any other local batch (no job), or one ``toArrow()`` job
+for a batch Spark read. Larger merges, key types Arrow does not group the
+way Spark does, and sums that overflow ``decimal(18,6)`` run the Spark
+shuffle merge.
 
 Exactly-once on at-least-once delivery: dedup is keyed on the event ids
 actually merged, not on batch boundaries. A high-watermark (max event_id
@@ -56,6 +61,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from reflex_spark.sources.event_log import arrow_of
 from reflex_spark.tables import write_spark_parquet
 
 _WATERMARK_FILE = "_watermark.json"  # "_" prefix → invisible to parquet scans
@@ -71,6 +77,11 @@ DRIVER_MERGE_BYTES = 512 << 10
 _GROUPABLE = (BooleanType, ByteType, ShortType, IntegerType, LongType, DateType)
 
 _EVENT_ID = "__event_id"  # the collected ids, named apart from any key
+
+#: Value-column types pyarrow casts to ``decimal(18,6)`` exactly as Spark
+#: does, because every value fits (a served batch's other types are merged
+#: from a ``collect()``).
+_NARROW_INTS = (pa.int8(), pa.int16(), pa.int32())
 
 
 def _plan_bytes(df: DataFrame) -> int:
@@ -159,7 +170,13 @@ class MaterializedCounts:
 
         picked = fresh.select(F.col("event_id").alias(_EVENT_ID), *cols)
         got = None
-        if batch.isLocal():
+        served = arrow_of(batch)
+        if on_driver and served is not None and (
+            self.value_col is None or served.schema.field(self.value_col).type in _NARROW_INTS
+        ):
+            got = self._fresh_rows(served, wm)
+            hi = pc.max(got.column(_EVENT_ID)).as_py()
+        elif batch.isLocal():
             # a filter over a LocalRelation collects on the driver, no job
             collected = picked.collect()
             hi = max((r[0] for r in collected), default=None)
@@ -195,6 +212,17 @@ class MaterializedCounts:
         os.rename(tmp, self.path)  # commit point: table + watermark together
         if os.path.exists(old):
             shutil.rmtree(old)
+
+    def _fresh_rows(self, rows: pa.Table, wm: int | None) -> pa.Table:
+        """``apply_batch``'s ``picked`` rows, computed from a served batch's
+        Arrow rows instead of through the JVM."""
+        if wm is not None:
+            rows = rows.filter(pc.greater(rows["event_id"], wm))
+        cols = {_EVENT_ID: rows["event_id"], **{k: rows[k] for k in self.keys}}
+        cols["n_events"] = pa.repeat(pa.scalar(1, pa.int64()), rows.num_rows)
+        if self.value_col:
+            cols["sum_value"] = rows[self.value_col].cast(pa.decimal128(18, 6))
+        return pa.table(cols)
 
     def _driver_merge(self, fresh: pa.Table, schema: StructType) -> list[pa.Array] | None:
         """The merged rollup's columns in ``schema``'s order, summed with

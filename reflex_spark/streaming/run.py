@@ -8,6 +8,8 @@
 - ``run_stream(spec)`` — Structured Streaming path: readStream →
   foreachBatch(consume) with checkpointLocation; the checkpoint is the
   cursor. ``Trigger.AvailableNow`` ≈ to-head, default trigger ≈ follow.
+  Small micro-batches are read on the driver, as ``run()`` reads small
+  poll windows.
 - ``run_forever`` — supervision loop (rpatterns/run.go:16-36): retry with
   backoff, 100ms for expected errors, longer otherwise.
 """
@@ -16,8 +18,10 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
+from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pyarrow as pa
@@ -29,6 +33,7 @@ from reflex_spark.sources.event_log import (
     NOOP_TYPE,
     SCAN_SCHEMA,
     EventLog,
+    local_batch,
     without_noops,
 )
 from reflex_spark.streaming.consumer import Consumer
@@ -171,12 +176,17 @@ def _local_window(rows: pa.Table, cursor: int, opts: StreamOptions):
             rows = rows.slice(0, first_recent)
     n = rows.num_rows
     m = rows["event_id"][-1].as_py() if n else None
-    if opts.drop_noops:  # without_noops, with the same null semantics
-        is_noop = pc.and_kleene(
-            pc.equal(rows["foreign_id"], NOOP_FOREIGN_ID), pc.equal(rows["event_type"], NOOP_TYPE)
-        )
-        rows = rows.filter(pc.invert(is_noop))
+    if opts.drop_noops:
+        rows = _drop_noops(rows)
     return rows, n, m, rows.num_rows
+
+
+def _drop_noops(rows: pa.Table) -> pa.Table:
+    """``without_noops`` on driver-side rows, with the same null semantics."""
+    is_noop = pc.and_kleene(
+        pc.equal(rows["foreign_id"], NOOP_FOREIGN_ID), pc.equal(rows["event_type"], NOOP_TYPE)
+    )
+    return rows.filter(pc.invert(is_noop))
 
 
 def run(spec: Spec, max_batches: int | None = None) -> int:
@@ -190,8 +200,9 @@ def run(spec: Spec, max_batches: int | None = None) -> int:
     Each poll first asks the log for a driver-side window
     (``EventLog.poll_window``: the commit records cover the log and the
     window is small). That window is trimmed, counted and handed to the
-    consumer as an Arrow-backed local DataFrame with no Spark job, and it
-    is pinned: an append landing mid-batch cannot grow it. Otherwise the
+    consumer as an Arrow-backed local DataFrame tagged with its rows
+    (``local_batch``) with no Spark job, and it is pinned: an append
+    landing mid-batch cannot grow it. Otherwise the
     poll scans with Spark (``_load_batch`` + one agg job), and the batch
     is bounded by the max id the cursor will commit.
     """
@@ -263,7 +274,7 @@ def run(spec: Spec, max_batches: int | None = None) -> int:
                 n_deliver = n_real if spec.options.drop_noops else n
                 if n_deliver:
                     if rows is not None:
-                        batch = spec.log.spark.createDataFrame(rows, SCAN_SCHEMA)
+                        batch = local_batch(spec.log.spark, rows)
                     else:
                         # A concurrent append makes Spark re-cache ``window``
                         # with the new rows; deliver only what the cursor
@@ -314,6 +325,62 @@ def run_forever(
     return failures
 
 
+#: The plan of a foreachBatch micro-batch read straight from files, and its
+#: partitions (``_batch_files``).
+_LOGICAL_RDD = "org.apache.spark.sql.execution.LogicalRDD"
+_FILE_PARTITION = "org.apache.spark.sql.execution.datasources.FilePartition"
+_CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+#: The checkpoint manager ``run_stream`` pins for a local checkpoint: it
+#: writes by create + rename, where Spark's default FileContext manager
+#: sets a permission on every file it creates, which Hadoop's local file
+#: system does by forking ``chmod`` when its native library is missing.
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
+
+
+def _batch_files(batch_df) -> list[str] | None:
+    """The local data files a foreachBatch micro-batch reads (its
+    ``inputFiles()`` is empty): its plan is a ``LogicalRDD`` whose RDD
+    partitions are ``FilePartition``s naming the files as URIs. None for
+    any other plan shape or a non-local file."""
+    plan = batch_df._jdf.queryExecution().analyzed()
+    if plan.getClass().getName() != _LOGICAL_RDD:
+        return None
+    paths = set()
+    for part in plan.rdd().partitions():
+        if part.getClass().getName() != _FILE_PARTITION:
+            return None
+        for f in part.files():
+            uri = urlparse(f.filePath().toString())
+            if uri.scheme not in ("", "file"):
+                return None
+            paths.add(unquote(uri.path))
+    return sorted(paths)
+
+
+@contextmanager
+def _local_checkpoint_manager(spark, checkpoint_dir: str):
+    """Start a query on a schemeless or ``file:`` checkpoint with the
+    FileSystem-based checkpoint manager (rename is atomic on a local file
+    system, and Spark refuses two active queries on one checkpoint); other
+    schemes keep Spark's default. The query clones the session conf when
+    it is constructed, so the setting need only span ``start()``; the
+    previous value is restored."""
+    if urlparse(checkpoint_dir).scheme not in ("", "file"):
+        yield
+        return
+    old = spark.conf.get(_CHECKPOINT_MANAGER_CONF, None)
+    spark.conf.set(_CHECKPOINT_MANAGER_CONF, _FS_CHECKPOINT_MANAGER)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(_CHECKPOINT_MANAGER_CONF)
+        else:
+            spark.conf.set(_CHECKPOINT_MANAGER_CONF, old)
+
+
 def run_stream(
     spec: Spec,
     checkpoint_dir: str,
@@ -324,6 +391,17 @@ def run_stream(
     """Structured Streaming path: the checkpoint directory IS the cursor
     (offset log + commit log, SURVEY.md §1.1 Cursor row). foreachBatch
     gives the same at-least-once contract as the poll path.
+
+    A micro-batch whose files the commit records name, holding at most
+    ``DRIVER_WINDOW_ROWS`` rows (``EventLog.read_files``), is served from
+    the driver as ``run()`` serves a poll window: its files are read with
+    pyarrow, ``from_head``, the noop filter and the lag wait apply to
+    those rows, and the consumer gets the same tagged Arrow-backed local
+    DataFrame (``local_batch``) — no Spark job. Any other micro-batch (a
+    raw out-of-band file, a bigger batch, a partitioned log's
+    ``event_date`` column) is handed over as Spark built it. A local
+    checkpoint is written by the FileSystem-based checkpoint manager
+    (``_local_checkpoint_manager``).
 
     from_head (bootstrap): on the FIRST start the current head id is
     recorded beside the checkpoint and events at or below it are filtered
@@ -346,8 +424,11 @@ def run_stream(
     import json
     import os
 
+    spark = spec.log.spark
+    opts = spec.options
     stream = spec.log.read_stream(max_files_per_trigger=max_files_per_trigger)
-    if spec.options.from_head:
+    head = None
+    if opts.from_head:
         os.makedirs(checkpoint_dir, exist_ok=True)
         head_file = os.path.join(checkpoint_dir, "bootstrap_head.json")
         if os.path.exists(head_file):
@@ -358,29 +439,49 @@ def run_stream(
             with open(head_file, "w") as f:
                 json.dump({"head": head}, f)
         stream = stream.where(F.col("event_id") > head)
-    if spec.options.drop_noops:
+    if opts.drop_noops:
         stream = without_noops(stream)
+    read_files = getattr(spec.log, "read_files", None)
+
+    def driver_rows(batch_df) -> pa.Table | None:
+        """The micro-batch's rows read on the driver, filtered as the
+        stream filters them; None to deliver ``batch_df`` itself."""
+        if read_files is None or batch_df.schema != SCAN_SCHEMA:
+            return None  # not an EventLog, or a partitioned log's event_date
+        files = _batch_files(batch_df)
+        rows = read_files(files) if files else None
+        if rows is None:
+            return None
+        if head is not None:
+            rows = rows.filter(pc.greater(rows["event_id"], head))
+        return _drop_noops(rows) if opts.drop_noops else rows
 
     def handle(batch_df, batch_id: int):
-        if spec.options.lag_seconds:
+        rows = driver_rows(batch_df)
+        if rows is not None:
+            batch_df = local_batch(spark, rows)
+        if opts.lag_seconds:
             # Lag must DELAY delivery, never filter: the file-source
             # checkpoint marks a batch's files processed as soon as the
             # microbatch commits, so rows dropped by a timestamp predicate
             # would be lost forever (breaking at-least-once). Mirror the
             # reference's per-event delay (run.go:79-87) at batch
             # granularity: sleep until the batch's newest event is older
-            # than the lag, then deliver the whole batch.
-            # Compute the wait entirely in Spark's clock domain (both
-            # timestamp and current_timestamp() cast through the same
-            # session timezone, so any non-UTC offset cancels), like the
-            # poll path's _load_batch does.
-            wait = batch_df.agg(
-                (
-                    F.max(F.col("timestamp")).cast("timestamp").cast("double")
-                    + F.lit(float(spec.options.lag_seconds))
-                    - F.current_timestamp().cast("double")
-                ).alias("wait")
-            ).collect()[0]["wait"]
+            # than the lag, then deliver the whole batch. Timestamps are
+            # UTC instants on both paths: the driver compares them with
+            # the epoch clock, Spark with current_timestamp() (any session
+            # time zone cancels in the casts).
+            if rows is not None:
+                newest = pc.max(rows["timestamp"]).value  # epoch µs, None if empty
+                wait = None if newest is None else newest / 1e6 + opts.lag_seconds - time.time()
+            else:
+                wait = batch_df.agg(
+                    (
+                        F.max(F.col("timestamp")).cast("timestamp").cast("double")
+                        + F.lit(float(opts.lag_seconds))
+                        - F.current_timestamp().cast("double")
+                    ).alias("wait")
+                ).collect()[0]["wait"]
             if wait is not None and wait > 0:
                 time.sleep(wait)
         spec.consumer.consume(batch_df, {"batch_id": batch_id})
@@ -395,10 +496,11 @@ def run_stream(
     # shuffle partition into the checkpoint, and foreachBatch's batch-side
     # jobs shuffle micro-batch-sized data — both should scale with the
     # data, not a session constant.
-    with scaled_stream_shuffle(spec.log.spark, spec.log.read()):
+    with scaled_stream_shuffle(spark, spec.log.read()):
         if available_now:
             writer = writer.trigger(availableNow=True)
-        query = writer.start()
+        with _local_checkpoint_manager(spark, checkpoint_dir):
+            query = writer.start()
         query.awaitTermination(timeout_sec)
     if query.isActive:
         query.stop()

@@ -1,0 +1,239 @@
+"""run_stream's driver-served micro-batches against its Spark path.
+
+A micro-batch whose files the commit records name, holding at most
+``DRIVER_WINDOW_ROWS`` rows, is read on the driver with pyarrow and handed
+over as a tagged local DataFrame (``event_log.local_batch``); any other
+micro-batch is delivered as Spark built it. The Spark path is the
+reference: ``DRIVER_WINDOW_ROWS = 0`` forces it for every micro-batch.
+"""
+
+from __future__ import annotations
+
+import os
+import time
+from datetime import datetime, timedelta
+
+import pytest
+from pyspark.sql import functions as F
+
+from reflex_spark.sources import event_log
+from reflex_spark.sources.event_log import EVENT_SCHEMA, EventLog, arrow_of, local_batch
+from reflex_spark.sources.memory import EPOCH, make_events
+from reflex_spark.streaming import (
+    Consumer,
+    ErrHeadReached,
+    MemCursorStore,
+    Spec,
+    StreamOptions,
+    materialize,
+    run,
+)
+from reflex_spark.streaming.materialize import MaterializedCounts
+from reflex_spark.streaming.run import _CHECKPOINT_MANAGER_CONF, run_stream
+
+
+def _rows(n: int, tag: str, noop_every: int = 0) -> list[tuple[int, str]]:
+    """``n`` events over three foreign ids and two types; every
+    ``noop_every``-th one a noop (foreign_id '0', type 0)."""
+    return [
+        (0, "0") if noop_every and i % noop_every == 0 else (1 + i % 2, f"{tag}{i % 3}")
+        for i in range(n)
+    ]
+
+
+def _log(spark, root, name="log with space", partitioned=False, appends=3, n=4, noop_every=4):
+    log = EventLog(spark, os.path.join(root, name), partitioned=partitioned)
+    for k in range(appends):
+        log.append(make_events(spark, _rows(n, f"k{k}-", noop_every), start=EPOCH + timedelta(hours=k)))
+    return log
+
+
+class _Probe:
+    """A consumer: records what each batch delivered and whether it was
+    served from the driver, and merges ``transform(batch)`` into a rollup."""
+
+    def __init__(self, spark, root, transform=lambda df: df, value_col=None, **consumer):
+        self.rollup = MaterializedCounts(spark, os.path.join(root, "rollup"), ["foreign_id"], value_col)
+        self.transform = transform
+        self.delivered: list[tuple] = []
+        self.served: list[bool] = []
+        self.consumer = Consumer("probe", self.consume, **consumer)
+
+    def consume(self, df, meta):
+        self.served.append(arrow_of(df) is not None)
+        self.delivered.extend(tuple(r) for r in df.select("event_id", "event_type", "foreign_id").collect())
+        self.rollup.apply_batch(self.transform(df), meta)
+
+    def outcome(self):
+        return {
+            "delivered": sorted(self.delivered),
+            "rollup": sorted(tuple(r) for r in self.rollup.read().collect())
+            if os.path.exists(self.rollup.path)
+            else [],
+            "watermark": self.rollup.watermark(),
+            "batches": self.consumer.stats["batches"],
+        }
+
+
+def _stream(spark, log, root, options=None, max_files=None, **probe):
+    """One ``run_stream`` into a fresh probe; (probe, Spark jobs the query ran)."""
+    p = _Probe(spark, root, **probe)
+    q = run_stream(
+        Spec(log, MemCursorStore(), p.consumer, options or StreamOptions()),
+        os.path.join(root, "ckpt"),
+        max_files_per_trigger=max_files,
+    )
+    time.sleep(0.5)  # let the listener bus record the last jobs
+    # the query thread runs foreachBatch under the job group of its run id
+    return p, len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)))
+
+
+def _both(spark, tmp_path, log, **kw):
+    """(driver-path probe, its job count, Spark-path probe) over one log."""
+    driver, jobs = _stream(spark, log, str(tmp_path / "driver"), **kw)
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(event_log, "DRIVER_WINDOW_ROWS", 0)
+        spark_path, _ = _stream(spark, log, str(tmp_path / "spark"), **kw)
+    assert not any(spark_path.served)
+    return driver, jobs, spark_path
+
+
+@pytest.mark.parametrize("drop_noops", [True, False], ids=["drop_noops", "keep_noops"])
+def test_served_micro_batches_match_the_spark_path(spark, tmp_path, drop_noops):
+    """Over a log with noops, at a path with a space (the plan names files
+    as percent-escaped URIs), every micro-batch is served from the driver
+    with no Spark job and delivers and rolls up what the Spark path does."""
+    log = _log(spark, str(tmp_path))
+    driver, jobs, ref = _both(spark, tmp_path, log, options=StreamOptions(drop_noops=drop_noops), max_files=1)
+    assert driver.served == [True] * 3
+    assert jobs == 0
+    assert driver.outcome() == ref.outcome()
+    assert len(driver.delivered) == (9 if drop_noops else 12)
+
+
+def test_from_head_and_restart_match_the_spark_path(spark, tmp_path):
+    """from_head skips what the first start saw, across a restart from the
+    checkpoint, on both paths."""
+    log = _log(spark, str(tmp_path), appends=2)
+    opts = StreamOptions(from_head=True)
+    driver, _, ref = _both(spark, tmp_path, log, options=opts)
+    assert driver.delivered == ref.delivered == []
+    log.append(make_events(spark, _rows(5, "late-"), start=EPOCH + timedelta(days=1)))
+    driver2, jobs, ref2 = _both(spark, tmp_path, log, options=opts)  # same checkpoints
+    assert driver2.served == [True] and jobs == 0
+    assert driver2.outcome() == ref2.outcome()
+    assert [r[0] for r in sorted(driver2.delivered)] == list(range(9, 14))
+
+
+def test_lag_waits_on_the_served_rows(spark, tmp_path):
+    """The lag wait comes from the served rows' newest timestamp: the
+    batch is delivered no sooner than that plus the lag, on both paths."""
+    log = EventLog(spark, str(tmp_path / "log"))
+    now = datetime.now()  # naive local time, as make_events takes it
+    log.append(make_events(spark, _rows(3, "a"), start=now, step_seconds=0.1))
+    newest = now.timestamp() + 0.2
+    seen_at = []
+
+    def timed(df):
+        seen_at.append(time.time())
+        return df
+
+    driver, _, ref = _both(spark, tmp_path, log, options=StreamOptions(lag_seconds=1.5), transform=timed)
+    assert driver.served == [True]
+    assert min(seen_at) >= newest + 1.5 - 0.01
+    assert driver.outcome() == ref.outcome()
+
+
+def test_transforming_and_filtering_consumers_match_the_spark_path(spark, tmp_path):
+    """A consumer that derives its value column before apply_batch, and one
+    with include_types, get the served batch; their rollups match."""
+    log = _log(spark, str(tmp_path))
+    value = lambda df: df.withColumn("value", F.col("event_type") * 10 + 1)  # noqa: E731
+    driver, _, ref = _both(spark, tmp_path / "value", log, transform=value, value_col="value")
+    assert all(driver.served) and driver.outcome() == ref.outcome()
+    assert driver.outcome()["rollup"]
+    driver, _, ref = _both(spark, tmp_path / "types", log, include_types=[2])
+    assert driver.outcome() == ref.outcome()
+    assert {r[1] for r in driver.delivered} == {2}
+
+
+def test_unservable_micro_batches_take_the_spark_path(spark, tmp_path):
+    """A raw out-of-band file, a micro-batch above DRIVER_WINDOW_ROWS and a
+    partitioned log's micro-batches are delivered as Spark reads them."""
+    log = _log(spark, str(tmp_path / "raw"), noop_every=0)
+    spark.createDataFrame([(13, 1, "raw", EPOCH + timedelta(days=2), None, None)], EVENT_SCHEMA).write.mode(
+        "append"
+    ).parquet(log.path)
+    driver, _, ref = _both(spark, tmp_path / "raw", log, max_files=1)
+    # the raw file carries a wall-clock mtime, newer than every commit's
+    assert driver.served[:3] == [True] * 3 and not any(driver.served[3:])
+    assert driver.outcome() == ref.outcome()
+
+    log = _log(spark, str(tmp_path / "big"), noop_every=0)
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(event_log, "DRIVER_WINDOW_ROWS", 6)
+        big, _ = _stream(spark, log, str(tmp_path / "big" / "driver"), max_files=2)
+    assert big.served == [False, True]  # 8 rows, then 4
+    assert [r[0] for r in sorted(big.delivered)] == list(range(1, 13))
+
+    log = _log(spark, str(tmp_path / "part"), partitioned=True)
+    driver, _, ref = _both(spark, tmp_path / "part", log, max_files=1)
+    assert not any(driver.served)
+    assert driver.outcome() == ref.outcome()
+
+
+def test_run_stream_restores_the_checkpoint_manager_conf(spark, tmp_path):
+    log = _log(spark, str(tmp_path), appends=1)
+    assert spark.conf.get(_CHECKPOINT_MANAGER_CONF, None) is None
+    _stream(spark, log, str(tmp_path / "a"))
+    assert spark.conf.get(_CHECKPOINT_MANAGER_CONF, None) is None
+    default = "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+    spark.conf.set(_CHECKPOINT_MANAGER_CONF, default)
+    try:
+        _stream(spark, log, str(tmp_path / "b"))
+        assert spark.conf.get(_CHECKPOINT_MANAGER_CONF) == default
+    finally:
+        spark.conf.unset(_CHECKPOINT_MANAGER_CONF)
+
+
+def test_the_rows_tag_is_bound_to_the_dataframe_object(spark, tmp_path):
+    """Only the exact DataFrame ``local_batch`` built carries its rows. A
+    consumer that filters, or adds a column to, a served batch and forwards
+    the loop's ``meta`` to apply_batch merges what it passed — equal to the
+    Spark shuffle merge of the same batches, on both run loops, redelivered
+    rows included. So do value columns read straight off a served batch."""
+    log = _log(spark, str(tmp_path), noop_every=0)
+    rows = log.poll_window(0)
+    batch = local_batch(spark, rows)
+    assert arrow_of(batch) is rows
+    assert arrow_of(batch.where(F.col("event_type") == 1)) is None
+    assert arrow_of(batch.withColumn("value", F.lit(1))) is None
+
+    same = lambda df: df  # noqa: E731
+    transforms = {
+        "filtered": (lambda df: df.where(F.col("event_type") == 2), None),
+        "valued": (lambda df: df.withColumn("value", F.col("event_type") * 3), "value"),
+        "int32": (same, "event_type"),  # summed from the served rows
+        "int64": (same, "event_id"),  # may not fit decimal(18,6): collected
+    }
+
+    def loops(root, merge_bytes):
+        out = {}
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(materialize, "DRIVER_MERGE_BYTES", merge_bytes)
+            for name, (transform, value_col) in transforms.items():
+                p, _ = _stream(spark, log, f"{root}/stream-{name}", transform=transform, value_col=value_col)
+                out[f"stream-{name}"] = p.outcome()["rollup"]
+                p = _Probe(spark, f"{root}/poll-{name}", transform=transform, value_col=value_col)
+                run(Spec(log, MemCursorStore(), p.consumer, StreamOptions(batch_limit=5)), max_batches=1)
+                # from cursor 0 again: the first batch straddles the watermark
+                with pytest.raises(ErrHeadReached):
+                    run(Spec(log, MemCursorStore(), p.consumer, StreamOptions(to_head=True, batch_limit=8)))
+                out[f"poll-{name}"] = p.outcome()["rollup"]
+                assert all(p.served)
+        return out
+
+    got = loops(str(tmp_path / "driver"), materialize.DRIVER_MERGE_BYTES)
+    assert got == loops(str(tmp_path / "shuffle"), -1)
+    type2 = log.read().where(F.col("event_type") == 2).groupBy("foreign_id").count().collect()
+    assert got["poll-filtered"] == got["stream-filtered"] == sorted(tuple(r) for r in type2)
