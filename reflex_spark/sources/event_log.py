@@ -43,6 +43,7 @@ union; per-shard ordering is preserved, global ordering is (shard, id).
 
 from __future__ import annotations
 
+import copy
 import os
 import shutil
 import threading
@@ -57,6 +58,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
@@ -209,18 +211,47 @@ def local_events(
 _ROWS_TAG = "_reflex_local_rows"  # the instance attribute ``local_batch`` sets
 
 
+class _ServedBatch(ClassicDataFrame):
+    """A classic DataFrame over driver-side Arrow rows whose JVM side is
+    built on first use: ``_jdf`` runs ``spark.createDataFrame(rows,
+    SCAN_SCHEMA)`` once, under a lock, the first time any Spark operation
+    needs it. ``schema`` (and so ``columns``/``dtypes``) is preset and
+    answers without the JVM."""
+
+    def __new__(cls, spark: SparkSession, rows: pa.Table):
+        return object.__new__(cls)  # skip DataFrame.__new__, which wants a jdf
+
+    def __init__(self, spark: SparkSession, rows: pa.Table):
+        self._jdf_lock = threading.Lock()
+        ClassicDataFrame.__init__(self, None, spark)  # no jdf yet: the setter stores None
+        vars(self)["schema"] = copy.deepcopy(SCAN_SCHEMA)  # the cached_property's slot
+        vars(self)[_ROWS_TAG] = rows
+
+    @property
+    def _jdf(self):
+        with self._jdf_lock:
+            if self._lazy_jdf is None:
+                self._lazy_jdf = self._session.createDataFrame(vars(self)[_ROWS_TAG], SCAN_SCHEMA)._jdf
+            return self._lazy_jdf
+
+    @_jdf.setter
+    def _jdf(self, jdf):
+        self._lazy_jdf = jdf
+
+
 def local_batch(spark: SparkSession, rows: pa.Table) -> DataFrame:
     """``rows`` (``ARROW_SCHEMA`` columns) as the local DataFrame a run loop
-    hands its consumer, tagged with ``rows`` for ``arrow_of``."""
-    df = spark.createDataFrame(rows, SCAN_SCHEMA)
-    vars(df)[_ROWS_TAG] = rows
-    return df
+    hands its consumer, tagged with ``rows`` for ``arrow_of``. Its JVM side
+    (the ``spark.createDataFrame(rows, SCAN_SCHEMA)`` it stands for) is
+    built on its first Spark use, so a consumer that reads the batch only
+    through ``arrow_of`` never touches the JVM."""
+    return _ServedBatch(spark, rows)
 
 
 def arrow_of(df: DataFrame) -> pa.Table | None:
     """The Arrow rows ``df`` was built from by ``local_batch``; None for any
     other DataFrame. The tag lives on that exact object: a filter or a
-    ``withColumn`` makes a new DataFrame, which carries none."""
+    ``withColumn`` makes a new (eager) DataFrame, which carries none."""
     return vars(df).get(_ROWS_TAG)
 
 

@@ -10,15 +10,19 @@ O(batch + touched keys).
 Two merge paths, one stored format. A merge whose input (current rollup +
 fresh rows) Catalyst estimates at or below ``DRIVER_MERGE_BYTES`` runs on
 the driver: the fresh rows are summed per key with the rollup read by
-pyarrow and written as one file with the Spark merge's footer. The fresh
-rows come from the batch's own Arrow rows when it is the exact DataFrame a
-run loop served from the driver (``event_log.arrow_of``: every small poll
-window and stream micro-batch) and its value column is a 32-bit or
-narrower integer, with no Spark job and no JVM row round trip; from a
-``collect()`` of any other local batch (no job), or one ``toArrow()`` job
-for a batch Spark read. Larger merges, key types Arrow does not group the
-way Spark does, and sums that overflow ``decimal(18,6)`` run the Spark
-shuffle merge.
+pyarrow and written as one file with the Spark merge's footer.
+
+A batch a run loop served from the driver (``event_log.arrow_of``: every
+small poll window and stream micro-batch), with groupable keys and no
+value column or a 32-bit or narrower integer one, is merged from its
+Arrow rows alone (``_merge_served``): no Spark job and no JVM plan, so
+the batch's JVM side is never built. Its merged schema is derived from
+the keys' types, and Catalyst's size estimate is computed from the fresh
+row count and the rollup's file sizes. Any other batch goes through its
+Catalyst plan (``_merge_planned``): a ``collect()`` of a local batch (no
+job) or one ``toArrow()`` job for a batch Spark read feeds the driver
+merge. Larger merges, key types Arrow does not group the way Spark does,
+and sums that overflow ``decimal(18,6)`` run the Spark shuffle merge.
 
 Exactly-once on at-least-once delivery: dedup is keyed on the event ids
 actually merged, not on batch boundaries. A high-watermark (max event_id
@@ -54,10 +58,12 @@ from pyspark.sql.types import (
     BooleanType,
     ByteType,
     DateType,
+    DecimalType,
     IntegerType,
     LongType,
     ShortType,
     StringType,
+    StructField,
     StructType,
 )
 
@@ -67,7 +73,9 @@ from reflex_spark.tables import write_spark_parquet
 _WATERMARK_FILE = "_watermark.json"  # "_" prefix → invisible to parquet scans
 
 #: Merges whose input (current rollup + fresh rows) Catalyst estimates at
-#: or below this many bytes run on the driver with pyarrow. Measured faster
+#: or below this many bytes run on the driver with pyarrow. For a served
+#: batch the same number is computed from its fresh row count and the
+#: rollup's file sizes (``_served_bytes``), with no plan. Measured faster
 #: at the benchmark backfill's 25-323 KB estimates (4 cores); larger merges
 #: keep the shuffle, whose parallelism was not measured against.
 DRIVER_MERGE_BYTES = 512 << 10
@@ -82,6 +90,12 @@ _EVENT_ID = "__event_id"  # the collected ids, named apart from any key
 #: does, because every value fits (a served batch's other types are merged
 #: from a ``collect()``).
 _NARROW_INTS = (pa.int8(), pa.int16(), pa.int32())
+
+#: Catalyst's ``defaultSize`` of each type a served merge projects: its
+#: keys are ``SCAN_SCHEMA`` columns (``event_id``, ``event_type``,
+#: ``foreign_id``), then ``n_events`` and ``sum_value`` (decimals of at
+#: most 18 digits are stored as a long).
+_DEFAULT_SIZE = {IntegerType: 4, LongType: 8, StringType: 20, DecimalType: 8}
 
 
 def _plan_bytes(df: DataFrame) -> int:
@@ -150,9 +164,68 @@ class MaterializedCounts:
         in the same rename that publishes the merged table.
         """
         ledger = self._ledger()
+        if not self._merge_served(batch, ledger):
+            self._merge_planned(batch, ledger)
+
+    def _served_schema(self, batch: DataFrame) -> StructType | None:
+        """The merged rollup's schema for a batch a run loop served
+        (``arrow_of``), derived without Catalyst: the keys' fields, then
+        ``n_events`` and ``sum_value``, all nullable, as the Spark merge
+        writes them. None when the batch is not served, a key type does
+        not group in Arrow as in Spark, or the value column is not one
+        ``_fresh_rows`` casts exactly."""
+        served = arrow_of(batch)
+        if served is None:
+            return None
+        have = batch.schema  # preset on a served batch: no JVM
+        if not set(self.keys) <= set(have.names) or not _groupable(have, self.keys):
+            return None
+        fields = [StructField(k, have[k].dataType, True) for k in self.keys]
+        fields.append(StructField("n_events", LongType(), True))
+        if self.value_col is not None:
+            value = served.schema.field(self.value_col) if self.value_col in served.column_names else None
+            if value is None or value.type not in _NARROW_INTS:
+                return None
+            fields.append(StructField("sum_value", DecimalType(18, 6), True))
+        return StructType(fields)
+
+    def _served_bytes(self, fresh_rows: int, schema: StructType) -> int:
+        """``_plan_bytes`` of a served batch's merge input, computed as
+        Catalyst computes it: the fresh rows become a local relation of
+        (8 + default size of each column) bytes a row, and the rollup scan
+        counts its visible files' bytes."""
+        row = 8 + sum(_DEFAULT_SIZE[type(f.dataType)] for f in schema.fields)
+        table = 0
+        if os.path.exists(self.path):
+            with os.scandir(self.path) as it:
+                table = sum(e.stat().st_size for e in it if not e.name.startswith(("_", ".")))
+        return row * fresh_rows + table
+
+    def _merge_served(self, batch: DataFrame, ledger: dict) -> bool:
+        """Merge a served batch from its Arrow rows alone (no JVM plan);
+        False, having done nothing, when ``_merge_planned`` must decide:
+        a batch that is not served or not mergeable in Arrow, a rollup
+        stored at another schema, a merge above ``DRIVER_MERGE_BYTES``,
+        or a sum that overflows its stored type."""
+        schema = self._served_schema(batch)
+        if schema is None or (os.path.exists(self.path) and ledger.get("schema") != schema.json()):
+            return False
+        got = self._fresh_rows(arrow_of(batch), ledger.get("max_event_id"))
+        if got.num_rows == 0:
+            return True  # fully redelivered batch — already merged
+        if self._served_bytes(got.num_rows, schema) > DRIVER_MERGE_BYTES:
+            return False
+        summed = self._driver_merge(got.drop_columns(_EVENT_ID), schema)
+        if summed is None:
+            return False
+        self._publish(pc.max(got.column(_EVENT_ID)).as_py(), schema, summed=summed)
+        return True
+
+    def _merge_input(self, batch: DataFrame, ledger: dict):
+        """The Spark merge's plans: (fresh rows, their projection, the
+        merge input = rollup ∪ projection, the merged aggregate)."""
         wm = ledger.get("max_event_id")
         fresh = batch if wm is None else batch.where(F.col("event_id") > wm)
-
         # One aggregation over the current rollup and the fresh rows: its
         # map-side partial aggregate already pre-sums the batch per key.
         cols = [*self.keys, F.lit(1).cast("long").alias("n_events")]
@@ -164,19 +237,19 @@ class MaterializedCounts:
         if os.path.exists(self.path):
             # at its stored schema: no schema-inference job
             rows = self._read(ledger).unionByName(rows)
-        merged = rows.groupBy(*self.keys).agg(*sums)
+        return fresh, cols, rows, rows.groupBy(*self.keys).agg(*sums)
+
+    def _merge_planned(self, batch: DataFrame, ledger: dict) -> None:
+        """Merge any batch through its Catalyst plan: on the driver from a
+        ``collect()`` or one ``toArrow()`` job when the plan is small, or
+        with the Spark shuffle."""
+        fresh, cols, rows, merged = self._merge_input(batch, ledger)
         schema = merged.schema  # what the Spark merge writes (no job)
         on_driver = _plan_bytes(rows) <= DRIVER_MERGE_BYTES and _groupable(schema, self.keys)
 
         picked = fresh.select(F.col("event_id").alias(_EVENT_ID), *cols)
         got = None
-        served = arrow_of(batch)
-        if on_driver and served is not None and (
-            self.value_col is None or served.schema.field(self.value_col).type in _NARROW_INTS
-        ):
-            got = self._fresh_rows(served, wm)
-            hi = pc.max(got.column(_EVENT_ID)).as_py()
-        elif batch.isLocal():
+        if batch.isLocal():
             # a filter over a LocalRelation collects on the driver, no job
             collected = picked.collect()
             hi = max((r[0] for r in collected), default=None)
@@ -194,11 +267,15 @@ class MaterializedCounts:
             hi = fresh.agg(F.max("event_id")).collect()[0][0]
         if hi is None:
             return  # fully redelivered batch — already merged
+        summed = None if got is None else self._driver_merge(got.drop_columns(_EVENT_ID), schema)
+        self._publish(hi, schema, summed=summed, merged=merged)
 
+    def _publish(self, hi: int, schema: StructType, summed: list | None, merged: DataFrame | None = None) -> None:
+        """Write the merged rollup (``summed`` columns with pyarrow, else
+        ``merged`` with Spark) and its ledger into staging, then swap it in."""
         tmp = self.path + ".staging"
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
-        summed = None if got is None else self._driver_merge(got.drop_columns(_EVENT_ID), schema)
         if summed is None:
             merged.write.mode("overwrite").parquet(tmp)
         else:

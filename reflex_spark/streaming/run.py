@@ -200,9 +200,12 @@ def run(spec: Spec, max_batches: int | None = None) -> int:
     Each poll first asks the log for a driver-side window
     (``EventLog.poll_window``: the commit records cover the log and the
     window is small). That window is trimmed, counted and handed to the
-    consumer as an Arrow-backed local DataFrame tagged with its rows
+    consumer as a local DataFrame tagged with its Arrow rows
     (``local_batch``) with no Spark job, and it is pinned: an append
-    landing mid-batch cannot grow it. Otherwise the
+    landing mid-batch cannot grow it. The batch's JVM DataFrame is built
+    on the consumer's first Spark use of it; a consumer that reads the
+    rows through ``arrow_of`` (``MaterializedCounts.apply_batch``) never
+    builds it. Otherwise the
     poll scans with Spark (``_load_batch`` + one agg job), and the batch
     is bounded by the max id the cursor will commit.
     """
@@ -396,8 +399,10 @@ def run_stream(
     ``DRIVER_WINDOW_ROWS`` rows (``EventLog.read_files``), is served from
     the driver as ``run()`` serves a poll window: its files are read with
     pyarrow, ``from_head``, the noop filter and the lag wait apply to
-    those rows, and the consumer gets the same tagged Arrow-backed local
-    DataFrame (``local_batch``) — no Spark job. Any other micro-batch (a
+    those rows, and the consumer gets the same tagged local DataFrame
+    (``local_batch``), whose JVM side is built on first Spark use — no
+    Spark job, and no JVM work for a consumer that reads the rows through
+    ``arrow_of``. Any other micro-batch (a
     raw out-of-band file, a bigger batch, a partitioned log's
     ``event_date`` column) is handed over as Spark built it. A local
     checkpoint is written by the FileSystem-based checkpoint manager

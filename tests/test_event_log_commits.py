@@ -15,6 +15,7 @@ import sys
 import threading
 import time
 from datetime import timedelta
+from decimal import Decimal
 
 import duckdb
 import pyarrow as pa
@@ -248,19 +249,24 @@ def _rollup_outcome(spark, root, merge_bytes):
             scan,  # fully redelivered
         ):
             mat.apply_batch(batch, {})
+    return {**_observe(mat), "driver_written": not os.path.exists(os.path.join(mat.path, "_SUCCESS"))}
+
+
+def _observe(mat: MaterializedCounts) -> dict:
+    """What a reader can observe of a rollup: watermark, rows, dtypes,
+    ledger schema, footer schemas and the DuckDB result."""
     with open(os.path.join(mat.path, "_watermark.json")) as f:
         ledger = json.load(f)
     footers = [json.loads(pq.ParquetFile(p).metadata.metadata[_ROW_METADATA]) for p in glob.glob(f"{mat.path}/part-*")]
     return {
         "watermark": mat.watermark(),
-        "rows": sorted(((r["k"], r["n_events"], str(r["sum_value"])) for r in mat.read().collect()), key=str),
+        "rows": sorted(
+            (tuple(str(v) if isinstance(v, Decimal) else v for v in r) for r in mat.read().collect()), key=str
+        ),
         "dtypes": mat.read().dtypes,
         "ledger_schema": ledger["schema"],
         "footers": footers,
-        "duckdb": duckdb.sql(
-            f"SELECT k, n_events, sum_value FROM read_parquet('{mat.path}/part-*.parquet') ORDER BY k NULLS FIRST"
-        ).fetchall(),
-        "driver_written": not os.path.exists(os.path.join(mat.path, "_SUCCESS")),
+        "duckdb": duckdb.sql(f"SELECT * FROM read_parquet('{mat.path}/part-*.parquet') ORDER BY ALL").fetchall(),
     }
 
 
@@ -335,6 +341,162 @@ def test_driver_merge_hands_overflow_and_float_keys_to_spark(spark, tmp_path):
     mat.apply_batch(spark.createDataFrame(pa.table({"event_id": list(range(1, 6)), "x": xs})), {})
     got = sorted((str(r["x"]), r["n_events"]) for r in mat.read().collect())
     assert got == [("0.0", 2), ("1.5", 1), ("nan", 2)]
+
+
+def _served_log(spark, root, appends=3, n=40):
+    """A log of ``appends`` × ``n`` events over 7 foreign ids and 3 types."""
+    log = EventLog(spark, os.path.join(root, "log"))
+    for k in range(appends):
+        log.append(make_events(spark, [(1 + i % 3, f"f{(i * 5 + k) % 7}") for i in range(n)]))
+    return log
+
+
+_COALESCE_CONF = "spark.sql.adaptive.coalescePartitions.enabled"
+
+
+def _served_merge_bytes(mat: MaterializedCounts, batch) -> tuple[int, int]:
+    """(the Arrow-side size of ``batch``'s merge input, Catalyst's estimate
+    of the same input); also checks the derived schema is the analysed one."""
+    ledger = mat._ledger()
+    schema = mat._served_schema(batch)
+    _, _, rows, merged = mat._merge_input(batch, ledger)
+    assert schema == merged.schema
+    fresh = mat._fresh_rows(event_log.arrow_of(batch), ledger.get("max_event_id"))
+    return mat._served_bytes(fresh.num_rows, schema), materialize._plan_bytes(rows)
+
+
+@pytest.mark.parametrize(
+    "keys,value_col,spark_first",
+    [
+        (["foreign_id"], None, False),
+        (["event_type", "foreign_id"], None, False),
+        (["foreign_id"], "event_type", False),
+        (["foreign_id"], "event_type", True),
+    ],
+)
+def test_served_merge_size_equals_the_plan_estimate(spark, tmp_path, keys, value_col, spark_first):
+    """The size a served batch's merge is routed by, computed from its
+    Arrow rows and the rollup's files, equals Catalyst's estimate of the
+    Spark merge input: for a first batch, for a batch that straddles the
+    watermark with a rollup present, for a decimal ``sum_value`` rollup,
+    and over a rollup the Spark shuffle merge wrote (part files beside
+    ``_SUCCESS`` and ``.crc`` files). So the driver/Spark decision is the
+    one the plan makes."""
+    rows = _served_log(spark, str(tmp_path)).poll_window(0)
+    mat = MaterializedCounts(spark, str(tmp_path / "rollup"), keys, value_col)
+    for lo, n in ((0, 50), (30, 60), (90, 30)):  # first; straddles 50; straddles 90
+        batch = event_log.local_batch(spark, rows.slice(lo, n))
+        size, planned = _served_merge_bytes(mat, batch)
+        assert size == planned
+        if spark_first and lo == 0:
+            # the shuffle merge, its partitions left uncoalesced: several part files
+            coalesce = spark.conf.get(_COALESCE_CONF)
+            spark.conf.set(_COALESCE_CONF, "false")
+            try:
+                with pytest.MonkeyPatch.context() as m:
+                    m.setattr(materialize, "DRIVER_MERGE_BYTES", -1)
+                    mat.apply_batch(batch, {})
+            finally:
+                spark.conf.set(_COALESCE_CONF, coalesce)
+            names = os.listdir(mat.path)
+            assert sum(n.startswith("part-") for n in names) > 1 and "_SUCCESS" in names
+            assert any(n.startswith(".part-") and n.endswith(".crc") for n in names)
+        else:
+            mat.apply_batch(batch, {})
+    assert mat.watermark() == 120
+    # the last merge ran on the driver, which writes no _SUCCESS
+    assert not os.path.exists(os.path.join(mat.path, "_SUCCESS"))
+
+
+def test_served_merge_builds_no_jvm_plan(spark, tmp_path):
+    """Served batches fed straight to apply_batch, through both run loops
+    (the poll loop redelivering a straddling batch), merge without their
+    JVM side ever being built, and store what the Spark shuffle merge of
+    the same batches stores: rows, ledger schema, footer schema, DuckDB
+    result."""
+    log = _served_log(spark, str(tmp_path))
+
+    def replay(root, merge_bytes):
+        batches, out = [], {}
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(materialize, "DRIVER_MERGE_BYTES", merge_bytes)
+            for loop in ("poll", "stream"):
+                mat = MaterializedCounts(spark, os.path.join(root, loop), ["foreign_id"], "event_type")
+
+                def consume(df, meta):
+                    batches.append(df)
+                    mat.apply_batch(df, meta)
+
+                consumer = Consumer("c", consume)
+                if loop == "poll":
+                    run(Spec(log, MemCursorStore(), consumer, StreamOptions(batch_limit=50)), max_batches=1)
+                    _run_to_head(Spec(log, MemCursorStore(), consumer, StreamOptions(to_head=True, batch_limit=70)))
+                else:
+                    spec = Spec(log, MemCursorStore(), consumer)
+                    run_stream(spec, os.path.join(root, "ckpt"), max_files_per_trigger=1)
+                out[loop] = _observe(mat)
+        assert len(batches) == 6 and all(event_log.arrow_of(b) is not None for b in batches)
+        return out, [b._lazy_jdf is None for b in batches]
+
+    got, unbuilt = replay(str(tmp_path / "driver"), materialize.DRIVER_MERGE_BYTES)
+    assert all(unbuilt)
+    ref, unbuilt = replay(str(tmp_path / "shuffle"), -1)
+    assert not any(unbuilt)  # the Spark merge plans over each batch
+    assert got == ref
+    assert got["poll"]["watermark"] == got["stream"]["watermark"] == 120
+    assert got["poll"]["footers"] == [json.loads(got["poll"]["ledger_schema"])]
+
+
+def test_a_rollup_stored_at_other_key_types_takes_the_planned_merge(spark, tmp_path):
+    """A served batch whose key types differ from the rollup's stored ones
+    (here a bigint ``event_type`` rollup, an int batch) is merged through
+    its plan, which widens it to the stored type, as before."""
+    rows = _served_log(spark, str(tmp_path), appends=1, n=6).poll_window(0)
+    mat = MaterializedCounts(spark, str(tmp_path / "rollup"), ["event_type"])
+    first = rows.slice(0, 3).cast(rows.schema.set(1, pa.field("event_type", pa.int64())))
+    mat.apply_batch(spark.createDataFrame(first), {})
+    mat.apply_batch(event_log.local_batch(spark, rows), {})
+    assert dict(mat.read().dtypes)["event_type"] == "bigint"
+    assert sorted(tuple(r) for r in mat.read().collect()) == [(1, 2), (2, 2), (3, 2)]
+    assert mat.watermark() == 6
+
+
+def test_a_served_batch_answers_spark_as_the_eager_batch_did(spark, tmp_path, monkeypatch):
+    """A consumer's Spark use of a served batch builds its JVM side once,
+    however many threads ask at the same time, and sees what
+    ``spark.createDataFrame(rows, SCAN_SCHEMA)`` gives: the schema
+    (answered before the build), a select, a grouped aggregate."""
+    rows = _served_log(spark, str(tmp_path), appends=1).poll_window(0)
+    lazy = event_log.local_batch(spark, rows)
+    eager = spark.createDataFrame(rows, event_log.SCAN_SCHEMA)
+    assert lazy.schema == eager.schema == event_log.SCAN_SCHEMA and lazy.columns == eager.columns
+    assert lazy._lazy_jdf is None
+
+    builds, create = [], spark.createDataFrame
+    monkeypatch.setattr(spark, "createDataFrame", lambda *a, **k: builds.append(1) or create(*a, **k))
+    got = []
+    threads = [threading.Thread(target=lambda: got.append(lazy._jdf)) for _ in range(16)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(builds) == 1 and len(got) == 16 and all(j is got[0] for j in got)
+    monkeypatch.undo()
+
+    def seen(df):
+        picked = df.select("event_id", "foreign_id", F.col("timestamp").cast("long")).collect()
+        grouped = df.groupBy("foreign_id").agg(F.count("*"), F.max("event_id"), F.sum("event_type")).collect()
+        return sorted(map(tuple, picked)), sorted(map(tuple, grouped))
+
+    assert seen(lazy) == seen(eager)
+    assert lazy._lazy_jdf is got[0]
+    assert event_log.arrow_of(lazy) is rows
 
 
 def test_concurrent_pollers_see_each_id_once_in_order(spark, tmp_path):
