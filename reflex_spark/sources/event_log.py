@@ -367,6 +367,8 @@ class EventLog:
         #: a snapshot's listing: a poller on this handle never sees a
         #: visible file without its record.
         self._commit_lock = threading.Lock()
+        #: ``stream_plan``'s plans by ``max_files_per_trigger``.
+        self._stream_plans: dict[int | None, DataFrame] = {}
 
     def _guard_append_size(self, n: int) -> None:
         if n > self.max_append_rows:
@@ -602,6 +604,12 @@ class EventLog:
             return self.spark.read.parquet(self.path)
         return self.spark.read.schema(EVENT_SCHEMA).parquet(self.path)
 
+    def scan_bytes(self) -> int:
+        """The bytes of the data files a Spark scan of the log reads, from
+        one listing: Catalyst's size estimate of ``read()``'s plan, with no
+        plan built."""
+        return sum(os.path.getsize(os.path.join(self.path, f)) for f in _visible_files(self.path))
+
     def read_after(
         self, after: int, limit: int | None = None, dense_only: bool = False
     ) -> DataFrame:
@@ -733,10 +741,7 @@ class EventLog:
         if hi is None:
             return  # nothing to rewrite
         if target_partitions is None:
-            total_bytes = sum(
-                os.path.getsize(os.path.join(self.path, f)) for f in _visible_files(self.path)
-            )
-            target_partitions = max(1, total_bytes // (128 << 20))
+            target_partitions = max(1, self.scan_bytes() // (128 << 20))
         base = self.path.rstrip("/")
         new_data = f"{base}.data.{int(time.time() * 1e6):x}"
         self._commit(self._stage(df.coalesce(int(target_partitions)), new_data), lo, hi, root=new_data)
@@ -779,3 +784,17 @@ class EventLog:
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
         return reader.parquet(self.path)
+
+    def stream_plan(self, max_files_per_trigger: int | None = None) -> DataFrame:
+        """The ``read_stream`` plan ``run_stream`` starts. An unpartitioned
+        log builds it once per ``max_files_per_trigger`` and keeps it on the
+        handle: each query creates its own source from the plan, so queries
+        can share it, and the build's listing of the log is paid once. A
+        partitioned log builds it per call, because its partition columns
+        come from that listing."""
+        if self.partitioned:
+            return self.read_stream(max_files_per_trigger)
+        plan = self._stream_plans.get(max_files_per_trigger)
+        if plan is None:
+            plan = self._stream_plans[max_files_per_trigger] = self.read_stream(max_files_per_trigger)
+        return plan

@@ -16,6 +16,8 @@
 
 from __future__ import annotations
 
+import json
+import os
 import time
 from collections.abc import Callable
 from contextlib import contextmanager
@@ -31,7 +33,6 @@ from pyspark.sql import functions as F
 from reflex_spark.sources.event_log import (
     NOOP_FOREIGN_ID,
     NOOP_TYPE,
-    SCAN_SCHEMA,
     EventLog,
     local_batch,
     without_noops,
@@ -328,10 +329,6 @@ def run_forever(
     return failures
 
 
-#: The plan of a foreachBatch micro-batch read straight from files, and its
-#: partitions (``_batch_files``).
-_LOGICAL_RDD = "org.apache.spark.sql.execution.LogicalRDD"
-_FILE_PARTITION = "org.apache.spark.sql.execution.datasources.FilePartition"
 _CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 #: The checkpoint manager ``run_stream`` pins for a local checkpoint: it
 #: writes by create + rename, where Spark's default FileContext manager
@@ -342,24 +339,43 @@ _FS_CHECKPOINT_MANAGER = (
 )
 
 
-def _batch_files(batch_df) -> list[str] | None:
-    """The local data files a foreachBatch micro-batch reads (its
-    ``inputFiles()`` is empty): its plan is a ``LogicalRDD`` whose RDD
-    partitions are ``FilePartition``s naming the files as URIs. None for
-    any other plan shape or a non-local file."""
-    plan = batch_df._jdf.queryExecution().analyzed()
-    if plan.getClass().getName() != _LOGICAL_RDD:
+def _local_dir(location: str) -> str | None:
+    """The absolute local path of a schemeless or ``file:`` location, as
+    Hadoop reads it (no percent-decoding); None for any other scheme."""
+    uri = urlparse(location)
+    if uri.scheme not in ("", "file"):
         return None
-    paths = set()
-    for part in plan.rdd().partitions():
-        if part.getClass().getName() != _FILE_PARTITION:
-            return None
-        for f in part.files():
-            uri = urlparse(f.filePath().toString())
+    return os.path.abspath(uri.path if uri.scheme else location)
+
+
+def _logged_files(checkpoint: str, batch_id: int) -> list[str] | None:
+    """The local data files micro-batch ``batch_id`` reads, from the local
+    ``checkpoint``'s own logs. Its ``offsets/<batch_id>`` must end at the
+    file source's log batch ``batch_id``: every micro-batch of the query
+    adds files, so the micro-batch then is exactly that source batch,
+    whose entries FileStreamSourceLog writes to ``sources/0/<batch_id>``,
+    or, every ``compactInterval`` batches, to ``<batch_id>.compact`` with
+    all earlier batches'. Their paths are percent-escaped URIs. None when a
+    log is missing, the batches differ, or a file is not local."""
+    try:
+        with open(os.path.join(checkpoint, "offsets", str(batch_id))) as f:
+            if json.loads(f.read().splitlines()[-1]).get("logOffset") != batch_id:
+                return None
+        source_log = os.path.join(checkpoint, "sources", "0", str(batch_id))
+        if not os.path.exists(source_log):
+            source_log += ".compact"
+        with open(source_log) as f:
+            entries = [json.loads(line) for line in f.read().splitlines()[1:]]
+    except FileNotFoundError:
+        return None
+    paths = []
+    for entry in entries:
+        if entry["batchId"] == batch_id:
+            uri = urlparse(entry["path"])
             if uri.scheme not in ("", "file"):
                 return None
-            paths.add(unquote(uri.path))
-    return sorted(paths)
+            paths.append(unquote(uri.path))
+    return paths
 
 
 @contextmanager
@@ -370,7 +386,7 @@ def _local_checkpoint_manager(spark, checkpoint_dir: str):
     schemes keep Spark's default. The query clones the session conf when
     it is constructed, so the setting need only span ``start()``; the
     previous value is restored."""
-    if urlparse(checkpoint_dir).scheme not in ("", "file"):
+    if _local_dir(checkpoint_dir) is None:
         yield
         return
     old = spark.conf.get(_CHECKPOINT_MANAGER_CONF, None)
@@ -395,24 +411,30 @@ def run_stream(
     (offset log + commit log, SURVEY.md §1.1 Cursor row). foreachBatch
     gives the same at-least-once contract as the poll path.
 
-    A micro-batch whose files the commit records name, holding at most
-    ``DRIVER_WINDOW_ROWS`` rows (``EventLog.read_files``), is served from
-    the driver as ``run()`` serves a poll window: its files are read with
-    pyarrow, ``from_head``, the noop filter and the lag wait apply to
-    those rows, and the consumer gets the same tagged local DataFrame
-    (``local_batch``), whose JVM side is built on first Spark use — no
-    Spark job, and no JVM work for a consumer that reads the rows through
-    ``arrow_of``. Any other micro-batch (a
-    raw out-of-band file, a bigger batch, a partitioned log's
-    ``event_date`` column) is handed over as Spark built it. A local
-    checkpoint is written by the FileSystem-based checkpoint manager
-    (``_local_checkpoint_manager``).
+    Spark's file source only plans offsets here. The query streams the
+    log's plain ``read_stream`` plan, which an EventLog keeps on its handle
+    (``EventLog.stream_plan``), and the shuffle count is sized from the
+    log's file sizes (``EventLog.scan_bytes``) with no plan. A micro-batch
+    of a local checkpoint over an unpartitioned EventLog takes its files
+    from the checkpoint's file log (``_logged_files``); when the commit
+    records name them and hold at most ``DRIVER_WINDOW_ROWS`` rows
+    (``EventLog.read_files``), it is served from the driver as ``run()``
+    serves a poll window: the files are read with pyarrow, ``from_head``,
+    the noop filter and the lag wait apply to those rows, and the consumer
+    gets the same tagged local DataFrame (``local_batch``), whose JVM side
+    is built on first Spark use — no Spark job, and no JVM work for a
+    consumer that reads the rows through ``arrow_of``. Any other
+    micro-batch (a raw out-of-band file, a bigger batch, a partitioned
+    log's with its ``event_date`` column) gets the same filters in Spark
+    and is handed over as Spark reads it. A local checkpoint's log
+    directories are created up front, and its files are written by the
+    FileSystem-based checkpoint manager (``_local_checkpoint_manager``).
 
     from_head (bootstrap): on the FIRST start the current head id is
-    recorded beside the checkpoint and events at or below it are filtered
-    for the lifetime of the query — restarts reuse the recorded head, so
-    the boundary never moves (reference rpatterns/bootstrap.go: skip
-    history only when no cursor exists).
+    recorded in the checkpoint directory and events at or below it are
+    filtered for the lifetime of the query — restarts reuse the recorded
+    head, so the boundary never moves (reference rpatterns/bootstrap.go:
+    skip history only when no cursor exists). It needs a local checkpoint.
 
     ``max_files_per_trigger`` PRECONDITION: the file source orders batches
     by (mtime, path), not event_id. Consumers that dedup on a max-id
@@ -426,16 +448,20 @@ def run_stream(
     interleaved ids (a partitioned append spanning dates) — key such a
     consumer's dedup on the delivered ids instead of the max-id
     watermark."""
-    import json
-    import os
-
     spark = spec.log.spark
     opts = spec.options
-    stream = spec.log.read_stream(max_files_per_trigger=max_files_per_trigger)
+    local = _local_dir(checkpoint_dir)
+    if opts.from_head and local is None:
+        raise ValueError(f"run_stream(from_head=True) needs a local checkpoint, got {checkpoint_dir!r}")
+    if local is not None:
+        checkpoint_dir = local  # Spark and the handler read one directory
+        # Spark would create these through Hadoop's local file system,
+        # which forks a chmod for each directory it makes.
+        for logs in ("offsets", "commits", os.path.join("sources", "0")):
+            os.makedirs(os.path.join(local, logs), exist_ok=True)
     head = None
     if opts.from_head:
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        head_file = os.path.join(checkpoint_dir, "bootstrap_head.json")
+        head_file = os.path.join(local, "bootstrap_head.json")
         if os.path.exists(head_file):
             with open(head_file) as f:
                 head = json.load(f)["head"]
@@ -443,28 +469,28 @@ def run_stream(
             head = spec.log.head()
             with open(head_file, "w") as f:
                 json.dump({"head": head}, f)
-        stream = stream.where(F.col("event_id") > head)
-    if opts.drop_noops:
-        stream = without_noops(stream)
+    stream_plan = getattr(spec.log, "stream_plan", spec.log.read_stream)
+    stream = stream_plan(max_files_per_trigger=max_files_per_trigger)
     read_files = getattr(spec.log, "read_files", None)
+    servable = read_files is not None and not spec.log.partitioned and local is not None
 
-    def driver_rows(batch_df) -> pa.Table | None:
-        """The micro-batch's rows read on the driver, filtered as the
-        stream filters them; None to deliver ``batch_df`` itself."""
-        if read_files is None or batch_df.schema != SCAN_SCHEMA:
-            return None  # not an EventLog, or a partitioned log's event_date
-        files = _batch_files(batch_df)
+    def delivered(batch_df, batch_id: int):
+        """The micro-batch as the consumer gets it, and its rows when they
+        were read on the driver (else None)."""
+        files = _logged_files(local, batch_id) if servable else None
         rows = read_files(files) if files else None
         if rows is None:
-            return None
+            if head is not None:
+                batch_df = batch_df.where(F.col("event_id") > head)
+            return (without_noops(batch_df) if opts.drop_noops else batch_df), None
         if head is not None:
             rows = rows.filter(pc.greater(rows["event_id"], head))
-        return _drop_noops(rows) if opts.drop_noops else rows
+        if opts.drop_noops:
+            rows = _drop_noops(rows)
+        return local_batch(spark, rows), rows
 
     def handle(batch_df, batch_id: int):
-        rows = driver_rows(batch_df)
-        if rows is not None:
-            batch_df = local_batch(spark, rows)
+        batch_df, rows = delivered(batch_df, batch_id)
         if opts.lag_seconds:
             # Lag must DELAY delivery, never filter: the file-source
             # checkpoint marks a batch's files processed as soon as the
@@ -500,8 +526,11 @@ def run_stream(
     # note): any stateful operator downstream freezes one state store per
     # shuffle partition into the checkpoint, and foreachBatch's batch-side
     # jobs shuffle micro-batch-sized data — both should scale with the
-    # data, not a session constant.
-    with scaled_stream_shuffle(spark, spec.log.read()):
+    # data, not a session constant. An EventLog gives the size from its
+    # files' sizes, which are what Catalyst's estimate of ``read()`` sums.
+    scan_bytes = getattr(spec.log, "scan_bytes", None)
+    sizing = {"est_bytes": scan_bytes()} if scan_bytes else {"source_df": spec.log.read()}
+    with scaled_stream_shuffle(spark, **sizing):
         if available_now:
             writer = writer.trigger(availableNow=True)
         with _local_checkpoint_manager(spark, checkpoint_dir):

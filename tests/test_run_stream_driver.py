@@ -29,7 +29,7 @@ from reflex_spark.streaming import (
     run,
 )
 from reflex_spark.streaming.materialize import MaterializedCounts
-from reflex_spark.streaming.run import _CHECKPOINT_MANAGER_CONF, run_stream
+from reflex_spark.streaming.run import _CHECKPOINT_MANAGER_CONF, _logged_files, run_stream
 
 
 def _rows(n: int, tag: str, noop_every: int = 0) -> list[tuple[int, str]]:
@@ -237,3 +237,127 @@ def test_the_rows_tag_is_bound_to_the_dataframe_object(spark, tmp_path):
     assert got == loops(str(tmp_path / "shuffle"), -1)
     type2 = log.read().where(F.col("event_type") == 2).groupBy("foreign_id").count().collect()
     assert got["poll-filtered"] == got["stream-filtered"] == sorted(tuple(r) for r in type2)
+
+
+def test_served_batches_across_a_source_log_compaction_and_a_restart(spark, tmp_path):
+    """13 one-file triggers at a path with a space: the file source logs
+    batch 9 in ``sources/0/9.compact``, and every batch is served, ids
+    1..26 once each. A consumer that fails after merging batch 9 makes the
+    restart re-serve batch 9 from that log; delivered rows, rollup and
+    watermark equal the Spark path's."""
+    log = _log(spark, str(tmp_path), appends=13, n=2, noop_every=0)
+    driver, jobs, ref = _both(spark, tmp_path / "once", log, max_files=1)
+    assert os.path.exists(tmp_path / "once" / "driver" / "ckpt" / "sources" / "0" / "9.compact")
+    assert driver.served == [True] * 13 and jobs == 0
+    assert sorted(r[0] for r in driver.delivered) == list(range(1, 27))
+    assert driver.outcome() == ref.outcome()
+
+    def crash_after_batch_9(root):
+        p = _Probe(spark, root)
+        crashed = []
+
+        def consume(df, meta):
+            p.consume(df, meta)
+            if meta["batch_id"] == 9 and not crashed:
+                crashed.append(meta)
+                raise RuntimeError("crash after batch 9")
+
+        p.consumer = Consumer("probe", consume)
+        spec = Spec(log, MemCursorStore(), p.consumer, StreamOptions())
+        with pytest.raises(Exception, match="crash after batch 9"):
+            run_stream(spec, os.path.join(root, "ckpt"), max_files_per_trigger=1)
+        run_stream(spec, os.path.join(root, "ckpt"), max_files_per_trigger=1)
+        return p
+
+    driver = crash_after_batch_9(str(tmp_path / "crash" / "driver"))
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(event_log, "DRIVER_WINDOW_ROWS", 0)
+        ref = crash_after_batch_9(str(tmp_path / "crash" / "spark"))
+    assert driver.served == [True] * 14 and not any(ref.served)
+    assert sorted(r[0] for r in driver.delivered) == sorted([*range(1, 27), 19, 20])
+    assert driver.outcome() == ref.outcome()
+
+
+def test_run_stream_plans_no_read_and_one_stream_per_handle(spark, tmp_path, monkeypatch):
+    """On an EventLog, run_stream never calls ``EventLog.read``: it sizes
+    its shuffle from the log's file sizes, which equal Catalyst's estimate
+    of ``read()`` on an unpartitioned, a compacted and an empty log. Two
+    calls on one handle build the stream plan once per
+    ``max_files_per_trigger``; ``read_stream()`` builds a new one per call."""
+    from reflex_spark.streaming import statestore
+
+    log = _log(spark, str(tmp_path / "plain"))
+    compacted = _log(spark, str(tmp_path / "compacted"))
+    compacted.compact()
+    empty = EventLog(spark, str(tmp_path / "empty"))
+    os.makedirs(empty.path)
+    logs = [log, compacted, empty]
+    planned = [int(lg.read()._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()) for lg in logs]
+    assert planned[0] > planned[1] > planned[2] == 0
+    partitions = [statestore.stream_shuffle_partitions(spark, lg.read()) for lg in logs]
+
+    sized, built = [], []
+    scaled, read_stream = statestore.scaled_stream_shuffle, EventLog.read_stream
+    monkeypatch.setattr(
+        statestore, "scaled_stream_shuffle", lambda s, **kw: sized.append(kw["est_bytes"]) or scaled(s, **kw)
+    )
+    monkeypatch.setattr(EventLog, "read_stream", lambda self, *a: built.append(self.path) or read_stream(self, *a))
+    monkeypatch.setattr(EventLog, "read", lambda self: pytest.fail("run_stream called EventLog.read"))
+    probes = [_stream(spark, lg, str(tmp_path / f"run{i}"))[0] for i, lg in enumerate(logs)]
+    assert sized == planned
+    assert [statestore.stream_shuffle_partitions(spark, est_bytes=b) for b in sized] == partitions
+    assert probes[0].served == [True] and probes[1].served == [True] and probes[2].served == []
+    assert [r[0] for r in sorted(probes[1].delivered)] == [r[0] for r in sorted(probes[0].delivered)]
+
+    _stream(spark, log, str(tmp_path / "again"))
+    _stream(spark, log, str(tmp_path / "one-file"), max_files=1)
+    _stream(spark, log, str(tmp_path / "one-file-again"), max_files=1)
+    assert built.count(log.path) == 2
+    assert log.read_stream() is not log.read_stream()
+    assert built.count(log.path) == 4
+
+
+def test_a_partitioned_log_streams_through_spark_with_its_partition_column(spark, tmp_path, monkeypatch):
+    """A partitioned log's micro-batches take the Spark path and keep
+    ``event_date``, and each run_stream builds its stream plan anew (its
+    partition columns come from the listing at build time)."""
+    log = _log(spark, str(tmp_path), partitioned=True)
+    built, columns = [], []
+    read_stream = EventLog.read_stream
+    monkeypatch.setattr(EventLog, "read_stream", lambda self, *a: built.append(self.path) or read_stream(self, *a))
+    for run_name in ("first", "second"):
+        p, _ = _stream(spark, log, str(tmp_path / run_name), transform=lambda df: columns.append(df.columns) or df)
+        assert p.served and not any(p.served)
+        assert [r[0] for r in sorted(p.delivered)] == [i for i in range(1, 13) if i % 4 != 1]
+    assert all("event_date" in c for c in columns)
+    assert built == [log.path, log.path]
+
+
+def test_logged_files_only_for_a_micro_batch_that_is_one_source_batch(tmp_path):
+    """A micro-batch's files come from the file source's log only when its
+    offset ends at the source batch of the same id; a micro-batch that
+    spans two source batches (a restart that finds new files beside a
+    logged but unplanned source batch), a missing log or a non-local file
+    sends it to the Spark path."""
+    ckpt = tmp_path / "ckpt"
+    (ckpt / "offsets").mkdir(parents=True)
+    (ckpt / "sources" / "0").mkdir(parents=True)
+
+    def offsets(batch_id, log_offset):
+        (ckpt / "offsets" / str(batch_id)).write_text(f'v1\n{{"batchWatermarkMs":0}}\n{{"logOffset":{log_offset}}}')
+
+    def source(log_offset, *uris):
+        entries = [f'{{"path":"{u}","timestamp":1,"batchId":{log_offset}}}' for u in uris]
+        (ckpt / "sources" / "0" / str(log_offset)).write_text("\n".join(["v1", *entries]))
+
+    offsets(0, 0)
+    source(0, "file:///log%20a/part-0.parquet", "file:///log%20a/part-1.parquet")
+    assert _logged_files(str(ckpt), 0) == ["/log a/part-0.parquet", "/log a/part-1.parquet"]
+    source(1, "file:///log%20a/part-2.parquet")
+    source(2, "file:///log%20a/part-3.parquet")
+    offsets(1, 2)  # micro-batch 1 = source batches 1 and 2
+    assert _logged_files(str(ckpt), 1) is None
+    assert _logged_files(str(ckpt), 2) is None  # no offsets/2
+    offsets(3, 3)
+    source(3, "hdfs://nn/log/part-4.parquet")
+    assert _logged_files(str(ckpt), 3) is None

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import os
 from datetime import datetime, timedelta
 
 import pytest
@@ -451,6 +452,34 @@ def test_run_stream_from_head_bootstrap(spark, tmp_path):
     log.insert("new1", 1)
     run_stream(spec, ckpt, available_now=True)
     assert sorted(seen) == [3]  # boundary did not move on restart
+
+
+def test_run_stream_from_head_keeps_a_file_uri_boundary_across_working_dirs(spark, tmp_path, monkeypatch):
+    """A ``file:`` checkpoint URI keeps its bootstrap head in the checkpoint
+    directory, not under ``./file:`` in the working directory, so a restart
+    from another directory keeps the boundary. A non-local scheme is
+    refused under from_head."""
+    log = seed_log(spark, str(tmp_path / "log"), [(1, "hist1"), (1, "hist2")])
+    ckpt = "file://" + str(tmp_path / "ckpt")
+    seen: list[int] = []
+
+    def fn(df, meta):
+        seen.extend(r["event_id"] for r in df.select("event_id").collect())
+
+    spec = Spec(log, MemCursorStore(), Consumer("uri", fn), StreamOptions(from_head=True))
+    for d in ("first", "second"):
+        (tmp_path / d).mkdir()
+    monkeypatch.chdir(tmp_path / "first")
+    run_stream(spec, ckpt, available_now=True)
+    assert seen == [] and os.listdir(tmp_path / "first") == []
+    assert (tmp_path / "ckpt" / "bootstrap_head.json").exists()
+
+    log.insert("new1", 1)
+    monkeypatch.chdir(tmp_path / "second")
+    run_stream(spec, ckpt, available_now=True)
+    assert sorted(seen) == [3]  # the boundary did not move
+    with pytest.raises(ValueError, match="local checkpoint"):
+        run_stream(spec, "hdfs://namenode/ckpt", available_now=True)
 
 
 def test_parallel_ack_specs_shard_and_manual_cursor(spark, tmp_path):
