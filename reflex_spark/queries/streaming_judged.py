@@ -4782,7 +4782,7 @@ def tx_concurrent_retry_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     table path race a MERGE against a DELETE. Writer B's delete commits
     — through the real commit protocol — at the exact version writer A's
     merge first tries to take, so A's attempt genuinely loses the
-    O_EXCL version race, unstages its staged files, and ``retries=1``
+    exclusive-publish version race, unstages its staged files, and ``retries=1``
     re-executes the whole merge against the post-delete head.
 
     Pinned in-query: (a) the race really happened — A's merge needed
@@ -4798,7 +4798,7 @@ def tx_concurrent_retry_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: conflict cost is O(one attempt's work), not O(table)
     — the loser re-derives its file-level rewrite plan from the new
     snapshot (stats-pruned like any merge) and the commit itself stays
-    an O(1) atomic rename; nothing global locks, and the unstaging
+    an O(1) atomic link; nothing global locks, and the unstaging
     keeps storage debt bounded by live versions rather than by failed
     attempts."""
     import os as _os
@@ -4834,7 +4834,7 @@ def tx_concurrent_retry_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # #6): at the instant A's merge first reaches the commit
         # protocol, B's delete commits FOR REAL through its own handle —
         # then A's commit hits the already-taken version file (the
-        # genuine O_EXCL race loss)
+        # genuine exclusive-publish race loss)
         attempts = {"merge": 0}
 
         def interleave(version: int, entry: dict) -> None:

@@ -66,6 +66,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from reflex_spark.sources import commits
+
 # Spark → Arrow mapping for the batch-transfer fast path; anything not
 # listed (timestamps, nested types) rides the tuple fallback.
 _ARROW_PRIMITIVES = {
@@ -168,13 +170,13 @@ class ReflexBlobWriter(DataSourceWriter):
       pick the SAME seq and interleave partitions under one namespace
       (and the later manifest union would legitimize both). The
       constructor therefore takes an exclusive CLAIM on the bucket
-      (``_writer.claim`` via O_EXCL — atomic on POSIX) held until
-      commit/abort; a second writer constructing while the claim is held
-      refuses loudly instead of corrupting the key order. A claim left
-      by a CRASHED driver keeps refusing (honest — the reference's
-      buckets are single-producer too, rblob/doc.go) until an operator
-      confirms no writer is live and removes it; the error names the
-      file, holder, and age. On a real object store this would be a
+      (``_writer.claim``, published with ``commits.publish_exclusive``)
+      held until commit/abort; a second writer constructing while the
+      claim is held refuses loudly instead of corrupting the key order.
+      A claim left by a CRASHED driver keeps refusing (honest — the
+      reference's buckets are single-producer too, rblob/doc.go) until an
+      operator confirms no writer is live and removes it; the error names
+      the file, holder, and age. On a real object store this would be a
       conditional-put (if-none-match) on the same key.
 
     Doubles ride Python's shortest-round-trip repr, so a read-back is
@@ -218,10 +220,8 @@ class ReflexBlobWriter(DataSourceWriter):
         import time
 
         try:
-            fd = os.open(
-                self._claim_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY
-            )
-        except FileExistsError:
+            commits.publish_exclusive(self._claim_path, {"pid": os.getpid()})
+        except commits.ConcurrentCommitError:
             try:
                 age = max(0.0, time.time() - os.path.getmtime(self._claim_path))
                 with open(self._claim_path, encoding="utf-8") as f:
@@ -237,8 +237,6 @@ class ReflexBlobWriter(DataSourceWriter):
                 "remove the claim file after confirming no write job is "
                 "live."
             ) from None
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write(f"pid={os.getpid()}")
 
     def _release_claim(self) -> None:
         try:

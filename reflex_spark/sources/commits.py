@@ -1,51 +1,68 @@
-"""Commit records: what EventLog's commit step publishes.
+"""How a commit becomes visible: the one module that knows.
 
-Each commit (an append, a gap fill, a compaction) publishes one small JSON
-record
+- **Exclusive publish** (``publish_exclusive``): a JSON file is written to
+  a hidden temp file, then hard-linked to its name, so readers see no file
+  or the whole file, and an existing name is never overwritten
+  (``ConcurrentCommitError``). EventLog's records and TxTable's versions.
+- **Generation swap** (``swap_generation``): a directory is republished
+  whole behind an atomically replaced symlink. ``EventLog.compact`` and
+  ``MaterializedCounts``.
 
-    {"seq": 7, "min_id": 101, "max_id": 140, "files": ["part-....parquet"],
-     "commit_ts": 1760000000.25}
-
-as ``<dir>/<seq:08d>.json``. ``files`` are paths relative to the log root;
-``[min_id, max_id]`` is the id range the commit holds. A record is
-written to a hidden temp file and ``os.replace``-d into place, so a reader
-sees either no record or the whole record, and it is published strictly
-after the data files it names are visible. A published record never
-changes and a seq is never reused, compactions included, so a record path
-always names the same record and readers parse each one once
-(``read_records``'s ``cache``).
-
-Records are only ever listed under the ``_``-prefixed ``COMMITS_DIR``,
-never as ``part-*`` files: Spark, Structured Streaming and DuckDB
-``part-*`` scans do not see them.
+An EventLog record ``{seq, min_id, max_id, files, commit_ts}`` at
+``_commits/<seq:08d>.json`` names the data files (relative to the log)
+holding ids ``[min_id, max_id]``. It is published after they are visible,
+never changes, and its seq is never reused, compactions included, so
+readers parse each record path once (``read_records``'s ``cache``). The
+``_`` prefix keeps records out of Spark, Structured Streaming and DuckDB
+``part-*`` scans.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 import time
+import uuid
+from collections.abc import Callable
 
 #: EventLog's record directory inside the log (the ``_`` prefix hides it
 #: from Spark's file listing).
 COMMITS_DIR = "_commits"
 
 
+class ConcurrentCommitError(Exception):
+    """Another writer committed this version first — reread and retry."""
+
+
+def link_exclusive(src: str, dest: str) -> None:
+    """Hard-link ``src`` at ``dest``; ConcurrentCommitError when ``dest``
+    already exists."""
+    try:
+        os.link(src, dest)
+    except FileExistsError:
+        raise ConcurrentCommitError(f"{dest} was published by another writer") from None
+
+
+def publish_exclusive(path: str, obj) -> None:
+    """Publish ``obj`` as JSON at ``path`` unless something is there
+    already (then ConcurrentCommitError, and nothing changes)."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), prefix=".", suffix=".tmp")
+    try:
+        with os.fdopen(fd, "w") as f:
+            json.dump(obj, f)
+        link_exclusive(tmp, path)  # the commit point
+    finally:
+        os.unlink(tmp)
+
+
 def publish(dirpath: str, seq: int, min_id: int, max_id: int, files: list[str]) -> None:
-    """Atomically publish record ``seq``."""
-    rec = {
-        "seq": seq,
-        "min_id": min_id,
-        "max_id": max_id,
-        "files": files,
-        "commit_ts": time.time(),
-    }
+    """Publish EventLog record ``seq``; ConcurrentCommitError when another
+    writer published that seq first."""
     os.makedirs(dirpath, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=dirpath, prefix=".", suffix=".tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump(rec, f)
-    os.replace(tmp, os.path.join(dirpath, f"{seq:08d}.json"))  # the commit point
+    rec = {"seq": seq, "min_id": min_id, "max_id": max_id, "files": files, "commit_ts": time.time()}
+    publish_exclusive(os.path.join(dirpath, f"{seq:08d}.json"), rec)
 
 
 def read_records(dirpath: str, cache: dict[str, dict]) -> list[dict]:
@@ -66,3 +83,24 @@ def read_records(dirpath: str, cache: dict[str, dict]) -> list[dict]:
         out.append(rec)
     return out
 
+
+def swap_generation(path: str, write: Callable[[str], None]) -> None:
+    """Republish the directory at ``path``: ``write(gen)`` fills a new
+    sibling ``<path>.data.<id>``, the symlink at ``path`` is replaced to
+    point at it, and every other ``<path>.data.*`` (the superseded
+    generation, any a crash left unpublished) is removed. Converting a
+    plain directory leaves ``path`` absent for a moment: quiesce readers."""
+    parent, name = os.path.split(os.path.abspath(path))
+    prefix = f"{name}.data."
+    gen = prefix + uuid.uuid4().hex
+    write(os.path.join(parent, gen))
+    link = os.path.join(parent, f".{name}.lnk")
+    if os.path.lexists(link):
+        os.remove(link)  # left by a crashed swap
+    os.symlink(gen, link)  # relative: the pair can move together
+    if os.path.isdir(path) and not os.path.islink(path):
+        os.rename(path, os.path.join(parent, prefix + uuid.uuid4().hex))
+    os.replace(link, path)  # the commit point
+    for d in os.listdir(parent):
+        if d.startswith(prefix) and d != gen:
+            shutil.rmtree(os.path.join(parent, d), ignore_errors=True)

@@ -26,6 +26,11 @@ name without a Spark job; an unrecorded file (a raw out-of-band write, a
 log written before records existed, a crash between rename and record)
 sends them back to the Spark scan, which stays correct for any layout.
 
+Appends are conditional, so many handles may append to one log: a commit
+whose ids a record already holds (another handle appended first) makes
+nothing visible and raises ``ConcurrentCommitError``; re-read ``head()``
+and retry, as with TxTable's versions.
+
 Two append paths, one stored format:
 - a local input (``events.isLocal()``: a DataFrame created from pandas or
   Arrow) on an unpartitioned log is collected (no job on a
@@ -47,7 +52,6 @@ import copy
 import os
 import shutil
 import threading
-import time
 import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -353,13 +357,10 @@ class EventLog:
         #: loop parks on it at head instead of sleeping the backoff.
         self.notifier = notifier
         self._gap_listeners: list[Callable[[Gap], None]] = []
-        #: In-instance head cache. Dense-id assignment already assumes a
-        #: single writer per log (the auto-increment analogue); this
-        #: instance's own appends are therefore the only head movements it
-        #: can observe, so re-reading the ENTIRE log before every append
-        #: just to recover max(event_id) is pure waste (it was the single
-        #: largest cost in the 3-append streaming fixtures). First use
-        #: reads storage; each append updates the cache.
+        #: In-instance head cache (re-reading the log before every append
+        #: was the largest cost of small appends). First use reads storage;
+        #: each append updates it. Another handle's append makes it stale,
+        #: which the conditional commit catches (``_commit``).
         self._head_cache: int | None = None
         #: Parsed commit records by path (a published record never changes).
         self._records: dict[str, dict] = {}
@@ -392,9 +393,11 @@ class EventLog:
         in read() (missing/empty directory → empty DataFrame), not by
         catching exceptions.
 
-        Cached per instance after the first read (single-writer contract —
-        see ``_head_cache``); a fresh EventLog handle re-reads storage:
-        the commit records when they cover the log, else a Spark scan.
+        Cached per instance after the first read; a fresh EventLog handle
+        re-reads storage: the commit records when they cover the log, else
+        a Spark scan. A head cached before another handle appended is
+        caught at commit: the append raises ``ConcurrentCommitError`` and
+        clears the cache, so no id is assigned twice.
         """
         if self._head_cache is not None:
             return self._head_cache
@@ -433,7 +436,7 @@ class EventLog:
             return base
         w = F.row_number().over(Window.orderBy(*keys))
         out = events.withColumn("event_id", (F.lit(base) + w).cast("long")).select(EVENT_SCHEMA.names)
-        self._commit(self._stage(out), base + 1, base + n)
+        self._commit(self._stage(out), base + 1, base + n, append=True)
         return self._committed(base + n)
 
     def _append_rows(self, rows: list, schema: StructType, keys: list[str]) -> int:
@@ -465,7 +468,7 @@ class EventLog:
         staged = _staging_dir(self.path)
         os.makedirs(staged)
         write_spark_parquet(self.spark, arrays, stored, staged)
-        self._commit(staged, base + 1, base + n)
+        self._commit(staged, base + 1, base + n, append=True)
         return self._committed(base + n)
 
     def _stage(self, df: DataFrame, root: str | None = None) -> str:
@@ -479,24 +482,39 @@ class EventLog:
             df.write.parquet(staged)
         return staged
 
-    def _commit(self, staged: str, min_id: int, max_id: int, root: str | None = None) -> None:
+    def _commit(self, staged: str, min_id: int, max_id: int, root: str | None = None, append: bool = False) -> None:
         """The commit step of every writer. Stamp the data files staged
         under ``staged`` at the logical mtime of ``max_id``; then, under the
         commit lock, rename them into ``root`` (default: the log) at the
         same relative paths and publish their record, whose seq is one past
-        the log's last record; then drop the staging directory."""
+        the log's last record; then drop the staging directory.
+
+        An ``append`` whose ids a published record already holds renames
+        nothing in. One that loses its seq to another handle between the
+        listing and the (exclusive) publish unlinks its renamed files.
+        Either clears the head cache and raises ConcurrentCommitError."""
         root = root or self.path
         files = sorted(_visible_files(staged))
         stamp_commit_order([os.path.join(staged, f) for f in files], max_id)
         with self._commit_lock:
-            for f in files:
-                dest = os.path.join(root, f)
-                os.makedirs(os.path.dirname(dest), exist_ok=True)
-                os.rename(os.path.join(staged, f), dest)
             records = commits.read_records(self._commits_dir, self._records)
-            seq = records[-1]["seq"] + 1 if records else 0
-            commits.publish(os.path.join(root, commits.COMMITS_DIR), seq, min_id, max_id, files)
+            lost = append and any(r["max_id"] >= min_id for r in records)
+            if not lost:
+                for f in files:
+                    dest = os.path.join(root, f)
+                    os.makedirs(os.path.dirname(dest), exist_ok=True)
+                    os.rename(os.path.join(staged, f), dest)
+                seq = records[-1]["seq"] + 1 if records else 0
+                try:
+                    commits.publish(os.path.join(root, commits.COMMITS_DIR), seq, min_id, max_id, files)
+                except commits.ConcurrentCommitError:
+                    for f in files:
+                        os.unlink(os.path.join(root, f))
+                    lost = True
         shutil.rmtree(staged, ignore_errors=True)
+        if lost:
+            self._head_cache = None
+            raise commits.ConcurrentCommitError(f"ids {min_id}-{max_id} of {self.path} were committed by another writer")
 
     def _committed(self, head: int) -> int:
         self._head_cache = head
@@ -718,17 +736,17 @@ class EventLog:
         is part of operating a file-backed log (Delta/Iceberg do this as
         OPTIMIZE).
 
-        Swap protocol: the rewrite goes through the commit step into a
-        versioned sibling data directory — stamped at the logical mtime of
-        its highest id, so later appends keep sorting after it, and with
-        one record covering every id (out-of-band files are adopted) whose
-        seq continues the log's — and is committed by atomically replacing
-        a symlink at ``self.path``. Concurrent head()/read() always resolve
-        a complete log, never an absent or partial one, and polls stay on
-        the driver path. The FIRST compaction converts a plain directory to
-        the symlink layout and has a sub-millisecond non-atomic window
-        (rename away + symlink in); quiesce readers around that one
-        conversion.
+        Swap protocol: the rewrite goes through the commit step into a new
+        generation of the log — stamped at the logical mtime of its highest
+        id, so later appends keep sorting after it, and with one record
+        covering every id (out-of-band files are adopted) whose seq
+        continues the log's — published by ``commits.swap_generation``:
+        the symlink at ``self.path`` is replaced atomically, so concurrent
+        head()/read() always resolve a complete log, never an absent or
+        partial one, and polls stay on the driver path. The FIRST
+        compaction converts a plain directory to the symlink layout and has
+        a sub-millisecond non-atomic window; quiesce readers around that
+        one conversion.
 
         Compaction must NOT run while checkpointed *streaming* readers
         (read_stream) are attached: they track processed files, so the
@@ -742,23 +760,8 @@ class EventLog:
             return  # nothing to rewrite
         if target_partitions is None:
             target_partitions = max(1, self.scan_bytes() // (128 << 20))
-        base = self.path.rstrip("/")
-        new_data = f"{base}.data.{int(time.time() * 1e6):x}"
-        self._commit(self._stage(df.coalesce(int(target_partitions)), new_data), lo, hi, root=new_data)
-        if os.path.islink(base):
-            old_target = os.path.realpath(base)
-            tmp_link = base + ".lnk"
-            if os.path.lexists(tmp_link):
-                os.remove(tmp_link)
-            os.symlink(new_data, tmp_link)
-            os.replace(tmp_link, base)  # atomic: symlink replaces symlink
-            shutil.rmtree(old_target, ignore_errors=True)
-        else:
-            # one-time conversion to the symlink layout (tiny window)
-            old = base + ".old"
-            os.rename(base, old)
-            os.symlink(new_data, base)
-            shutil.rmtree(old)
+        df = df.coalesce(int(target_partitions))
+        commits.swap_generation(self.path, lambda gen: self._commit(self._stage(df, gen), lo, hi, root=gen))
         # ids are preserved, so the cached head is numerically still right —
         # but stay defensive: a compact() racing an external state change
         # must never leave a stale cache behind (ADVICE r12).
@@ -767,12 +770,11 @@ class EventLog:
     def invalidate_head_cache(self) -> None:
         """Force the next head() to re-read storage.
 
-        The in-instance head cache assumes this handle's own appends are
-        the only head movements (single-writer contract). Callers that
-        write to ``self.path`` OUT OF BAND — raw parquet writes into the
-        log directory (crash-injection fixtures do this), a second handle
-        on the same log, restore-from-backup — must call this before the
-        next append, or dense-id assignment would reuse ids."""
+        Another handle's appends need no call (the conditional commit
+        catches them). Writes that publish no commit record — raw parquet
+        writes into the log directory (crash-injection fixtures do this),
+        restore-from-backup — must call this before the next append, or
+        dense-id assignment would reuse ids."""
         self._head_cache = None
         self._records.clear()
 

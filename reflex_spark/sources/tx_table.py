@@ -9,9 +9,9 @@ the real thing, scoped to what the engine needs:
 - **Commit log**: ``<path>/_txlog/<version>.json``, one entry per commit,
   listing files added and removed (paths relative to ``<path>/data``).
   A reader's snapshot is ``adds - removes`` over entries ≤ its version.
-- **Atomic commits, optimistic concurrency**: a commit is the atomic
-  O_CREAT|O_EXCL creation of the next version's log file. Two writers
-  racing the same version: exactly one wins; the loser gets
+- **Atomic commits, optimistic concurrency**: a commit publishes the next
+  version's log file with ``sources.commits.publish_exclusive``. Two
+  writers racing the same version: exactly one wins; the loser gets
   ``ConcurrentCommitError`` and retries against the new snapshot. (POSIX
   local-FS semantics; an object store would swap in a conditional-put.)
 - **Snapshot isolation**: readers pin a version at open; concurrent
@@ -53,6 +53,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from reflex_spark.operators.upsert import latest_by_key
+from reflex_spark.sources import commits
+from reflex_spark.sources.commits import ConcurrentCommitError
 from reflex_spark.tables import empty_df
 
 
@@ -145,10 +147,6 @@ class AuditFailedError(Exception):
     staged files were rolled back and nothing was committed."""
 
 
-class ConcurrentCommitError(Exception):
-    """Another writer committed this version first — reread and retry."""
-
-
 class HistoryTruncatedError(Exception):
     """The requested version predates the oldest retained checkpoint/log
     entry (truncate_log removed it) — mirroring Delta's error on time
@@ -206,7 +204,7 @@ class TxTable:
         #: position-discovery scan — pruning telemetry for tests/ops.
         self.last_mor_scan: tuple[int, int] | None = None
         #: Test-only injection seam, called as (version, entry) right
-        #: before the O_EXCL commit attempt — chaos/race tests (and the
+        #: before the exclusive publish — chaos/race tests (and the
         #: judged writer-conflict query) hook the real commit protocol
         #: here instead of monkey-patching _commit by name (VERDICT r14
         #: Next #6). Never set in production paths.
@@ -235,19 +233,12 @@ class TxTable:
             return json.load(f)
 
     def _commit(self, version: int, entry: dict) -> None:
-        """Atomically create the version file; lose the race → error."""
+        """Publish the version's entry exclusively (``commits``); lose the
+        race → ConcurrentCommitError."""
         if self._on_before_commit is not None:
             self._on_before_commit(version, entry)
-        target = os.path.join(self.log_dir, f"{version:020d}.json")
-        try:
-            fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            raise ConcurrentCommitError(
-                f"version {version} was committed by another writer"
-            ) from None
         entry = dict(entry, ts=time.time())  # commit wall time (AS OF)
-        with os.fdopen(fd, "w") as f:
-            json.dump(entry, f)
+        commits.publish_exclusive(os.path.join(self.log_dir, f"{version:020d}.json"), entry)
         if version > 0 and version % self.CHECKPOINT_INTERVAL == 0:
             self._write_checkpoint(version)
 
@@ -792,13 +783,6 @@ class TxTable:
             if adds
             else empty_df(self.spark, df.schema)
         )
-        def _unstage() -> None:
-            for f in adds:
-                try:
-                    os.remove(os.path.join(self.data_dir, f))
-                except FileNotFoundError:
-                    pass
-
         entry = {"op": "append_audited", "adds": adds, "stats": stats}
         try:
             while True:
@@ -838,7 +822,7 @@ class TxTable:
             # ANY pre-commit failure (audit verdict, a crashing audit
             # job, schema-evolution refusal) unstages: staged files were
             # never visible, but leaking them until vacuum is still waste
-            _unstage()
+            self._unstage(adds)
             raise
 
     def merge_by_key(
@@ -1046,12 +1030,16 @@ class TxTable:
         try:
             self._commit(version, entry)
         except ConcurrentCommitError:
-            for f in entry.get("adds", []) + entry.get("dv_adds", []):
-                try:
-                    os.remove(os.path.join(self.data_dir, f))
-                except FileNotFoundError:
-                    pass
+            self._unstage(entry.get("adds", []) + entry.get("dv_adds", []))
             raise
+
+    def _unstage(self, files: list[str]) -> None:
+        """Remove an uncommitted attempt's data files."""
+        for f in files:
+            try:
+                os.remove(os.path.join(self.data_dir, f))
+            except FileNotFoundError:
+                pass
 
     @staticmethod
     def _with_commit_retries(attempt_fn, retries: int) -> int:
@@ -1750,8 +1738,8 @@ class TxTable:
             src = os.path.join(self.data_dir, f)
             d = os.path.join(dst.data_dir, f)
             try:
-                os.link(src, d)
-            except FileExistsError:
+                commits.link_exclusive(src, d)
+            except ConcurrentCommitError:
                 raise ValueError(
                     f"clone destination already holds data file {f}"
                 ) from None

@@ -26,12 +26,9 @@ and sums that overflow ``decimal(18,6)`` run the Spark shuffle merge.
 
 Exactly-once on at-least-once delivery: dedup is keyed on the event ids
 actually merged, not on batch boundaries. A high-watermark (max event_id
-merged so far) is committed *inside* the staged table directory, so the
-single directory rename that publishes the new table also publishes the
-ledger — there is no window where the table is swapped but the ledger is
-stale (the prior design marked the ledger after the swap, so a crash
-between the two double-counted the batch; and its min-max batch key was
-not stable when a restarted stream re-batched with different boundaries).
+merged so far) is written inside each new generation of the table, and
+one ``sources.commits.swap_generation`` publishes table and watermark
+together: a crash before the swap leaves both old, one after it both new.
 
 The ledger also records the Spark schema the table was written with, so
 reads skip Parquet schema inference (a Spark job of its own).
@@ -46,7 +43,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -67,6 +63,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from reflex_spark.sources import commits
 from reflex_spark.sources.event_log import arrow_of
 from reflex_spark.tables import write_spark_parquet
 
@@ -116,34 +113,12 @@ class MaterializedCounts:
         self.keys = keys
         self.value_col = value_col
 
-    # -- crash recovery ----------------------------------------------------
-
-    def _recover(self) -> None:
-        """Finish or undo an interrupted swap (idempotent).
-
-        The swap sequence is: write staging (table + watermark) → rename
-        path→old → rename staging→path → rmtree old. Staging is complete
-        before the first rename, so a crash that left `path` absent rolls
-        FORWARD (publish staging); a crash with `path` present means the
-        staging dir is unpublished garbage (or `old` is) — delete it.
-        """
-        old, tmp = self.path + ".old", self.path + ".staging"
-        if not os.path.exists(self.path):
-            if os.path.exists(tmp):
-                os.rename(tmp, self.path)  # roll forward: staging was complete
-            elif os.path.exists(old):
-                os.rename(old, self.path)  # staging already gone: roll back
-        for leftover in (old, tmp):
-            if os.path.exists(self.path) and os.path.exists(leftover):
-                shutil.rmtree(leftover)
-
     # -- consumer side -----------------------------------------------------
 
     def _ledger(self) -> dict:
         """The published table's ``_watermark.json`` ({} before the first
         merge): ``max_event_id`` and the ``schema`` the table was written
         with."""
-        self._recover()
         wf = os.path.join(self.path, _WATERMARK_FILE)
         if os.path.exists(wf):
             with open(wf) as f:
@@ -161,7 +136,7 @@ class MaterializedCounts:
 
         Idempotent under redelivery and re-batching: only rows above the
         committed watermark are merged, and the new watermark is committed
-        in the same rename that publishes the merged table.
+        in the same swap that publishes the merged table.
         """
         ledger = self._ledger()
         if not self._merge_served(batch, ledger):
@@ -272,23 +247,19 @@ class MaterializedCounts:
 
     def _publish(self, hi: int, schema: StructType, summed: list | None, merged: DataFrame | None = None) -> None:
         """Write the merged rollup (``summed`` columns with pyarrow, else
-        ``merged`` with Spark) and its ledger into staging, then swap it in."""
-        tmp = self.path + ".staging"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        if summed is None:
-            merged.write.mode("overwrite").parquet(tmp)
-        else:
-            os.makedirs(tmp)
-            write_spark_parquet(self.spark, summed, schema, tmp)
-        with open(os.path.join(tmp, _WATERMARK_FILE), "w") as f:
-            json.dump({"max_event_id": int(hi), "schema": schema.json()}, f)
-        old = self.path + ".old"
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)  # commit point: table + watermark together
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        ``merged`` with Spark) and its ledger as a new generation, then
+        swap it in."""
+
+        def write(gen: str) -> None:
+            if summed is None:
+                merged.write.parquet(gen)
+            else:
+                os.makedirs(gen)
+                write_spark_parquet(self.spark, summed, schema, gen)
+            with open(os.path.join(gen, _WATERMARK_FILE), "w") as f:
+                json.dump({"max_event_id": int(hi), "schema": schema.json()}, f)
+
+        commits.swap_generation(self.path, write)  # commit point: table + watermark together
 
     def _fresh_rows(self, rows: pa.Table, wm: int | None) -> pa.Table:
         """``apply_batch``'s ``picked`` rows, computed from a served batch's

@@ -467,8 +467,10 @@ def run_stream(
                 head = json.load(f)["head"]
         else:
             head = spec.log.head()
-            with open(head_file, "w") as f:
+            tmp = head_file + ".tmp"
+            with open(tmp, "w") as f:
                 json.dump({"head": head}, f)
+            os.replace(tmp, head_file)  # a crash mid-write leaves no head file
     stream_plan = getattr(spec.log, "stream_plan", spec.log.read_stream)
     stream = stream_plan(max_files_per_trigger=max_files_per_trigger)
     read_files = getattr(spec.log, "read_files", None)

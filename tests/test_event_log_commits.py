@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from reflex_spark.sources import event_log
+from reflex_spark.sources.commits import ConcurrentCommitError
 from reflex_spark.sources.event_log import EVENT_SCHEMA, EventLog
 from reflex_spark.sources.memory import EPOCH, make_events, seed_log
 from reflex_spark.streaming import (
@@ -568,3 +569,98 @@ def test_crash_after_staging_is_invisible(spark, tmp_path, monkeypatch, as_input
         assert handle.poll_window(0).column("event_id").to_pylist() == [1, 2]
     assert log.append(make_events(spark, [(2, "c")])) == 3
     assert [r["foreign_id"] for r in log.read().orderBy("event_id").collect()] == ["a", "b", "c"]
+
+
+_APPEND_PATHS = pytest.mark.parametrize(
+    "as_input", [lambda df: df, lambda df: df.repartition(2)], ids=["driver", "spark"]
+)
+
+
+def _stored(log: EventLog) -> list[tuple[int, str]]:
+    return [(r["event_id"], r["foreign_id"]) for r in log.read().orderBy("event_id").collect()]
+
+
+@_APPEND_PATHS
+def test_stale_handle_append_raises_and_leaves_the_winner(spark, tmp_path, as_input):
+    """Two handles on one log: B reads head(), A appends, then B appends
+    from its stale head. B's commit is refused with ConcurrentCommitError
+    and nothing of it becomes visible, so every id is held once, by A's
+    rows, and a fresh handle polls them from the records. B then re-reads
+    the head and its retry lands after A's rows."""
+    log = seed_log(spark, str(tmp_path / "log"), [(1, "s0"), (1, "s1"), (1, "s2")])
+    a, b = EventLog(spark, log.path), EventLog(spark, log.path)
+    assert b.head() == 3
+    assert a.append(as_input(make_events(spark, [(2, f"a{i}") for i in range(3)]))) == 6
+    with pytest.raises(ConcurrentCommitError):
+        b.append(as_input(make_events(spark, [(3, f"b{i}") for i in range(3)])))
+
+    want = [(1, "s0"), (2, "s1"), (3, "s2"), (4, "a0"), (5, "a1"), (6, "a2")]
+    assert _stored(log) == want
+    recs = [json.load(open(p)) for p in sorted(glob.glob(os.path.join(log.path, "_commits", "*.json")))]
+    assert [(r["seq"], r["min_id"], r["max_id"]) for r in recs] == [(0, 1, 3), (1, 4, 6)]
+    assert not glob.glob(os.path.join(log.path, "_staging", "*", "*"))
+    polled = EventLog(spark, log.path).poll_window(0)
+    assert list(zip(polled.column("event_id").to_pylist(), polled.column("foreign_id").to_pylist())) == want
+
+    assert b.head() == 6  # the refused commit cleared the stale cache
+    assert b.append(as_input(make_events(spark, [(3, "b0")]))) == 7
+    assert _stored(log) == want + [(7, "b0")]
+
+
+@_APPEND_PATHS
+def test_a_fill_below_head_from_another_handle_does_not_fail_an_append(spark, tmp_path, as_input):
+    """A noop fill of a hole below the head, published by another handle
+    between B's head() and B's append, holds no id B assigns: B's append
+    commits."""
+    log = seed_log(spark, str(tmp_path / "log"), [(1, "s0"), (1, "s1"), (1, "s2")])
+    lost = [(i, 1, "x", EPOCH, None, None) for i in (5, 6)]  # id 4 lost by a crashed writer
+    spark.createDataFrame(lost, EVENT_SCHEMA).write.mode("append").parquet(log.path)
+    a, b = EventLog(spark, log.path), EventLog(spark, log.path)
+    assert b.head() == 6
+    assert a.fill_noops([4]) == 1
+    assert b.append(as_input(make_events(spark, [(2, "b0"), (2, "b1")]))) == 8
+    assert [i for i, _ in _stored(log)] == list(range(1, 9))
+
+
+def test_concurrent_handles_append_each_row_once(spark, tmp_path):
+    """More appending threads than cores, each on its own handle (its own
+    head cache and commit lock), with a short switch interval; a refused
+    append re-reads the head and retries. Every appended row is stored
+    exactly once, at the ids its successful append returned, and no id is
+    held twice."""
+    path = str(tmp_path / "log")
+    EventLog(spark, path).append(make_events(spark, [(1, "seed")]))
+    writers, appends, per_append = (os.cpu_count() or 1) + 2, 3, 2
+    landed, refused, errors = {}, [], []
+
+    def write(k):
+        log = EventLog(spark, path)
+        try:
+            for a in range(appends):
+                fids = [f"w{k}-{a}-{i}" for i in range(per_append)]
+                while True:
+                    try:
+                        head = log.append(make_events(spark, [(1, f) for f in fids]))
+                        break
+                    except ConcurrentCommitError:
+                        refused.append(k)
+                landed.update(zip(fids, range(head - per_append + 1, head + 1)))
+        except Exception as exc:  # noqa: BLE001 — reported by the assertion below
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=write, args=(k,)) for k in range(writers)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not errors
+    assert not any(t.is_alive() for t in threads)
+    stored = {f: i for i, f in _stored(EventLog(spark, path))}
+    assert len(stored) == len(_stored(EventLog(spark, path)))  # no row twice
+    assert stored == {"seed": 1, **landed}
+    assert len(set(stored.values())) == len(stored)  # no id twice

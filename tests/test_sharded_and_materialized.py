@@ -151,23 +151,49 @@ def test_materialized_rebatched_redelivery_and_crash_recovery(spark, tmp_path):
     assert len([f for f in os.listdir(path) if f.startswith("part-")]) == 1
     assert not os.path.exists(os.path.join(path, "_SUCCESS"))
 
-    # crash mid-swap (table dir absent, staging complete): roll forward
-    os.rename(path, path + ".staging")
-    assert mat.watermark() == 5  # recovered
-    assert {r["event_type"]: r["n_events"] for r in mat.read().collect()} == {1: 2, 2: 2, 3: 1}
+    # the rollup is published as a generation behind a symlink, and a
+    # DuckDB glob over the path reads exactly the served table
+    import duckdb
 
-    # crash post-swap (stale .old left behind): cleaned up
+    def globbed():
+        return dict(duckdb.sql(f"SELECT event_type, n_events FROM read_parquet('{path}/part-*.parquet')").fetchall())
+
+    assert os.path.islink(path)
+    assert globbed() == {r["event_type"]: r["n_events"] for r in mat.read().collect()}
+
+    def generations():
+        return [d for d in os.listdir(tmp_path) if d.startswith("rollup.data.")]
+
+    def boom(*args, **kwargs):
+        raise OSError("crash")
+
+    # crash after the new generation is written, before the swap: the old
+    # table and watermark are served; the next merge removes the orphan
+    log.append(make_events(spark, [(4, "y")], start=EPOCH + timedelta(hours=2)))
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(os, "replace", boom)
+        with pytest.raises(OSError, match="crash"):
+            mat.apply_batch(log.read(), {})
+    assert len(generations()) == 2
+    assert mat.watermark() == 5
+    assert {r["event_type"]: r["n_events"] for r in mat.read().collect()} == {1: 2, 2: 2, 3: 1}
+    mat.apply_batch(log.read(), {})
+    assert mat.watermark() == 6
+    assert {r["event_type"]: r["n_events"] for r in mat.read().collect()} == {1: 2, 2: 2, 3: 1, 4: 1}
+    assert generations() == [os.path.basename(os.path.realpath(path))]
+    assert sorted(os.listdir(tmp_path)) == ["log", "rollup", generations()[0]]
+
+    # crash after the swap, before the superseded generation is removed:
+    # the new table and watermark are served
     import shutil
 
-    shutil.copytree(path, path + ".old")
-    mat._recover()
-    assert not os.path.exists(path + ".old")
-    assert mat.watermark() == 5
-
-    # crash after path→old with staging already gone: roll back
-    os.rename(path, path + ".old")
-    assert mat.watermark() == 5
-    assert {r["event_type"]: r["n_events"] for r in mat.read().collect()} == {1: 2, 2: 2, 3: 1}
+    log.append(make_events(spark, [(4, "z")], start=EPOCH + timedelta(hours=3)))
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(shutil, "rmtree", boom)
+        with pytest.raises(OSError, match="crash"):
+            mat.apply_batch(log.read(), {})
+    assert mat.watermark() == 7
+    assert {r["event_type"]: r["n_events"] for r in mat.read().collect()} == globbed() == {1: 2, 2: 2, 3: 1, 4: 2}
 
 
 def test_materialized_first_batch_keeps_event_id_zero(spark, tmp_path):

@@ -454,6 +454,36 @@ def test_run_stream_from_head_bootstrap(spark, tmp_path):
     assert sorted(seen) == [3]  # boundary did not move on restart
 
 
+def test_run_stream_from_head_restarts_after_a_crash_mid_bootstrap_write(spark, tmp_path, monkeypatch):
+    """A first start that dies while writing ``bootstrap_head.json`` leaves
+    no head file (it is written to a temp file and renamed into place), so
+    the restart records the head again instead of failing to parse a
+    truncated file."""
+    import json
+
+    log = seed_log(spark, str(tmp_path / "log"), [(1, "hist1"), (1, "hist2")])
+    ckpt = str(tmp_path / "ckpt")
+    seen: list[int] = []
+
+    def fn(df, meta):
+        seen.extend(r["event_id"] for r in df.select("event_id").collect())
+
+    def torn(obj, f, *args, **kwargs):
+        f.write('{"he')
+        raise OSError("crash mid-dump")
+
+    spec = Spec(log, MemCursorStore(), Consumer("torn", fn), StreamOptions(from_head=True))
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", torn)
+        with pytest.raises(OSError, match="crash mid-dump"):
+            run_stream(spec, ckpt, available_now=True)
+    run_stream(spec, ckpt, available_now=True)
+    assert seen == []  # history skipped
+    log.insert("new1", 1)
+    run_stream(spec, ckpt, available_now=True)
+    assert sorted(seen) == [3]
+
+
 def test_run_stream_from_head_keeps_a_file_uri_boundary_across_working_dirs(spark, tmp_path, monkeypatch):
     """A ``file:`` checkpoint URI keeps its bootstrap head in the checkpoint
     directory, not under ``./file:`` in the working directory, so a restart
@@ -1069,7 +1099,7 @@ def test_blob_writer_next_seq_parses_legacy_and_new_keys():
 def test_blob_writer_refuses_concurrent_writer(spark, tmp_path):
     """Single-writer is ENFORCED: two overlapping write jobs would choose
     the same w-<seq> namespace from the same listing and interleave
-    partitions — the constructor takes an O_EXCL claim on the bucket,
+    partitions — the constructor takes an exclusive claim on the bucket,
     held until commit/abort, and a second writer refuses loudly. A claim
     left by a crashed driver keeps refusing (named in the error) until
     an operator removes it."""

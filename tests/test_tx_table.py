@@ -92,6 +92,30 @@ def test_concurrent_merge_conflicts_and_retry(spark, tmp_path):
     assert _rows(a.read()) == [(1, "A", 2), (2, "B", 2)]
 
 
+def test_a_version_in_flight_is_invisible_to_readers(spark, tmp_path, monkeypatch):
+    """A reader that lists and reads the table while a commit's entry is
+    being written sees the previous version, never a listed version whose
+    entry file is still empty."""
+    import json
+
+    from reflex_spark.sources import tx_table
+
+    t = TxTable(spark, str(tmp_path / "t"))
+    t.append(_mk(spark, [(1, "a", 1)]))
+    seen = []
+    real_dump = json.dump
+
+    def dump_and_read(obj, f, *args, **kwargs):
+        if isinstance(obj, dict) and "adds" in obj:  # a log entry
+            seen.append((t.latest_version(), _rows(t.read())))
+        real_dump(obj, f, *args, **kwargs)
+
+    monkeypatch.setattr(tx_table.json, "dump", dump_and_read)
+    t.append(_mk(spark, [(2, "b", 1)]))
+    assert seen == [(0, [(1, "a", 1)])]
+    assert _rows(t.read()) == [(1, "a", 1), (2, "b", 1)]
+
+
 def test_torn_write_invisible_and_vacuumed(spark, tmp_path):
     t = TxTable(spark, str(tmp_path / "t"))
     t.append(_mk(spark, [(1, "a", 1)]))
