@@ -330,13 +330,28 @@ def run_forever(
 
 
 _CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
-#: The checkpoint manager ``run_stream`` pins for a local checkpoint: it
+#: The checkpoint manager ``run_stream`` sets for a local checkpoint: it
 #: writes by create + rename, where Spark's default FileContext manager
-#: sets a permission on every file it creates, which Hadoop's local file
-#: system does by forking ``chmod`` when its native library is missing.
+#: sets a permission on every file it creates and resolves every rename
+#: through ``getFileLinkStatus``; Hadoop's local file system does each by
+#: forking ``chmod`` or ``readlink`` when its native library is missing.
 _FS_CHECKPOINT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 )
+#: The session confs ``run_stream`` sets for the whole life of a query on a
+#: local checkpoint: the FileSystem-based manager, over Hadoop's raw local
+#: file system, which writes no ``.crc`` beside each file. Spark's default
+#: manager asks for none either (it creates its temp files with
+#: ``ChecksumOpt.createDisabled()``), though Hadoop's checksummed local file
+#: system writes one anyway. The cache must be off for ``fs.file.impl`` to
+#: take effect, as the JVM already holds a cached checksummed ``file:`` file
+#: system. The keys are unprefixed: a runtime ``spark.hadoop.*`` conf never
+#: reaches the session's Hadoop conf.
+_LOCAL_CHECKPOINT_CONFS = {
+    _CHECKPOINT_MANAGER_CONF: _FS_CHECKPOINT_MANAGER,
+    "fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
+    "fs.file.impl.disable.cache": "true",
+}
 
 
 def _local_dir(location: str) -> str | None:
@@ -380,24 +395,32 @@ def _logged_files(checkpoint: str, batch_id: int) -> list[str] | None:
 
 @contextmanager
 def _local_checkpoint_manager(spark, checkpoint_dir: str):
-    """Start a query on a schemeless or ``file:`` checkpoint with the
-    FileSystem-based checkpoint manager (rename is atomic on a local file
-    system, and Spark refuses two active queries on one checkpoint); other
-    schemes keep Spark's default. The query clones the session conf when
-    it is constructed, so the setting need only span ``start()``; the
-    previous value is restored."""
+    """Run a query on a schemeless or ``file:`` checkpoint under
+    ``_LOCAL_CHECKPOINT_CONFS``: the FileSystem-based checkpoint manager
+    (rename is atomic on a local file system, and Spark refuses two active
+    queries on one checkpoint) on Hadoop's raw local file system. Other
+    schemes keep Spark's defaults. Wrap the whole query, start to stop: the
+    offset and commit logs are built in ``start()``, but the file source
+    builds its log on the stream thread, after ``start()`` may have
+    returned. Each previous value is restored on exit, error or not.
+
+    While the block runs, other Spark work on the same session reads and
+    writes ``file:`` paths through an uncached ``RawLocalFileSystem`` too,
+    and writes no ``.crc`` files."""
     if _local_dir(checkpoint_dir) is None:
         yield
         return
-    old = spark.conf.get(_CHECKPOINT_MANAGER_CONF, None)
-    spark.conf.set(_CHECKPOINT_MANAGER_CONF, _FS_CHECKPOINT_MANAGER)
+    old = {key: spark.conf.get(key, None) for key in _LOCAL_CHECKPOINT_CONFS}
     try:
+        for key, value in _LOCAL_CHECKPOINT_CONFS.items():
+            spark.conf.set(key, value)
         yield
     finally:
-        if old is None:
-            spark.conf.unset(_CHECKPOINT_MANAGER_CONF)
-        else:
-            spark.conf.set(_CHECKPOINT_MANAGER_CONF, old)
+        for key, value in old.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def run_stream(
@@ -427,8 +450,11 @@ def run_stream(
     micro-batch (a raw out-of-band file, a bigger batch, a partitioned
     log's with its ``event_date`` column) gets the same filters in Spark
     and is handed over as Spark reads it. A local checkpoint's log
-    directories are created up front, and its files are written by the
-    FileSystem-based checkpoint manager (``_local_checkpoint_manager``).
+    directories are created up front, and for the whole query, start to
+    stop, its files (the file source's log included) are written by the
+    FileSystem-based checkpoint manager on Hadoop's raw local file system,
+    with no ``.crc`` files (``_local_checkpoint_manager``); other Spark work
+    on the session during the run goes through that file system too.
 
     from_head (bootstrap): on the FIRST start the current head id is
     recorded in the checkpoint directory and events at or below it are
@@ -532,23 +558,22 @@ def run_stream(
     # files' sizes, which are what Catalyst's estimate of ``read()`` sums.
     scan_bytes = getattr(spec.log, "scan_bytes", None)
     sizing = {"est_bytes": scan_bytes()} if scan_bytes else {"source_df": spec.log.read()}
-    with scaled_stream_shuffle(spark, **sizing):
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        with _local_checkpoint_manager(spark, checkpoint_dir):
-            query = writer.start()
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    with scaled_stream_shuffle(spark, **sizing), _local_checkpoint_manager(spark, checkpoint_dir):
+        query = writer.start()
         query.awaitTermination(timeout_sec)
-    if query.isActive:
-        query.stop()
-        if available_now:
-            # availableNow promises "consume to head then stop"; expiring
-            # the timeout mid-stream would silently hand callers a PARTIAL
-            # result (e.g. a rollup missing the tail batches). Fail loudly —
-            # the checkpoint keeps at-least-once intact for a retry.
-            raise TimeoutError(
-                f"run_stream(available_now=True) timed out after {timeout_sec}s "
-                "before reaching head; results would be partial"
-            )
+        if query.isActive:
+            query.stop()
+            if available_now:
+                # availableNow promises "consume to head then stop"; expiring
+                # the timeout mid-stream would silently hand callers a PARTIAL
+                # result (e.g. a rollup missing the tail batches). Fail loudly —
+                # the checkpoint keeps at-least-once intact for a retry.
+                raise TimeoutError(
+                    f"run_stream(available_now=True) timed out after {timeout_sec}s "
+                    "before reaching head; results would be partial"
+                )
     if query.exception() is not None:
         raise query.exception()
     return query

@@ -9,12 +9,15 @@ reference: ``DRIVER_WINDOW_ROWS = 0`` forces it for every micro-batch.
 
 from __future__ import annotations
 
+import contextlib
+import importlib
 import os
 import time
 from datetime import datetime, timedelta
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from reflex_spark.sources import event_log
 from reflex_spark.sources.event_log import EVENT_SCHEMA, EventLog, arrow_of, local_batch
@@ -29,7 +32,15 @@ from reflex_spark.streaming import (
     run,
 )
 from reflex_spark.streaming.materialize import MaterializedCounts
-from reflex_spark.streaming.run import _CHECKPOINT_MANAGER_CONF, _logged_files, run_stream
+from reflex_spark.streaming.run import (
+    _CHECKPOINT_MANAGER_CONF,
+    _FS_CHECKPOINT_MANAGER,
+    _LOCAL_CHECKPOINT_CONFS,
+    _logged_files,
+    run_stream,
+)
+
+run_module = importlib.import_module("reflex_spark.streaming.run")  # the package's ``run`` is the loop
 
 
 def _rows(n: int, tag: str, noop_every: int = 0) -> list[tuple[int, str]]:
@@ -361,3 +372,92 @@ def test_logged_files_only_for_a_micro_batch_that_is_one_source_batch(tmp_path):
     offsets(3, 3)
     source(3, "hdfs://nn/log/part-4.parquet")
     assert _logged_files(str(ckpt), 3) is None
+
+
+def _crc_files(root) -> list[str]:
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root) for d, _, names in os.walk(root) for f in names if f.endswith(".crc")
+    )
+
+
+def test_a_local_checkpoint_writes_no_crc_and_restores_the_session_confs(spark, tmp_path):
+    """For the whole query over a local checkpoint, the file source's log
+    included, files are written by the FileSystem-based manager on Hadoop's
+    raw local file system: no ``.crc`` anywhere under the checkpoint. Each
+    of the three session confs holds its earlier value afterwards, unset or
+    set, after a clean run, a consumer that raises and a timed-out follow."""
+    log = _log(spark, str(tmp_path), appends=2, noop_every=0)
+
+    def confs():
+        return {key: spark.conf.get(key, None) for key in _LOCAL_CHECKPOINT_CONFS}
+
+    def failing(df, meta):
+        raise RuntimeError("consumer failed")
+
+    unset = dict.fromkeys(_LOCAL_CHECKPOINT_CONFS)
+    earlier_set = {
+        _CHECKPOINT_MANAGER_CONF: "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager",
+        "fs.file.impl": "org.apache.hadoop.fs.LocalFileSystem",
+        "fs.file.impl.disable.cache": "false",
+    }
+    assert confs() == unset
+    try:
+        for name, earlier in (("unset", unset), ("set", earlier_set)):
+            for key, value in earlier.items():
+                if value is not None:
+                    spark.conf.set(key, value)
+            root = tmp_path / name
+            p, _ = _stream(spark, log, str(root), max_files=1)
+            assert p.served == [True, True]
+            assert sorted(r[0] for r in p.delivered) == list(range(1, 9))
+            assert _crc_files(root / "ckpt") == []
+            assert confs() == earlier
+
+            spec = Spec(log, MemCursorStore(), Consumer("failing", failing))
+            with pytest.raises(Exception, match="consumer failed"):
+                run_stream(spec, str(root / "failing-ckpt"))
+            assert _crc_files(root / "failing-ckpt") == []
+            assert confs() == earlier
+
+        idle = Spec(log, MemCursorStore(), Consumer("idle", lambda df, meta: None))
+        run_stream(idle, str(tmp_path / "follow-ckpt"), available_now=False, timeout_sec=0.5)
+        assert confs() == earlier_set
+    finally:
+        for key in _LOCAL_CHECKPOINT_CONFS:
+            spark.conf.unset(key)
+
+
+def test_a_checkpoint_written_with_crc_files_resumes(spark, tmp_path, monkeypatch):
+    """A checkpoint written with the checkpoint manager set across
+    ``start()`` only, so with ``.crc`` files and a ``sources/0`` written by
+    Spark's default manager, resumes under the whole-query settings: each
+    id arrives once, the resumed batches are served, and no ``.crc`` is
+    added."""
+    log = _log(spark, str(tmp_path), appends=2, n=3, noop_every=0)
+    p = _Probe(spark, str(tmp_path))
+    spec = Spec(log, MemCursorStore(), p.consumer, StreamOptions())
+    ckpt = str(tmp_path / "ckpt")
+    start = DataStreamWriter.start
+
+    def start_only(self, *a, **kw):
+        spark.conf.set(_CHECKPOINT_MANAGER_CONF, _FS_CHECKPOINT_MANAGER)
+        try:
+            return start(self, *a, **kw)
+        finally:
+            spark.conf.unset(_CHECKPOINT_MANAGER_CONF)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataStreamWriter, "start", start_only)
+        m.setattr(run_module, "_local_checkpoint_manager", lambda *a: contextlib.nullcontext())
+        run_stream(spec, ckpt, max_files_per_trigger=1)
+    written = _crc_files(ckpt)
+    assert {".metadata.crc", "offsets/.0.crc", "commits/.0.crc", "sources/0/.0.crc"} <= set(written)
+    assert p.served == [True, True]
+
+    log.append(make_events(spark, _rows(1, "late-"), start=EPOCH + timedelta(days=1)))
+    run_stream(spec, ckpt, max_files_per_trigger=1)
+    assert sorted(r[0] for r in p.delivered) == list(range(1, 8))
+    assert p.served == [True, True, True]
+    assert _crc_files(ckpt) == written
+    assert p.outcome()["watermark"] == 7
