@@ -259,6 +259,22 @@ def arrow_of(df: DataFrame) -> pa.Table | None:
     return vars(df).get(_ROWS_TAG)
 
 
+def rows_of(batch: DataFrame) -> pa.Table:
+    """A delivered batch's rows as Arrow: its served rows (``arrow_of``),
+    else one ``toArrow()`` collect in id order."""
+    rows = arrow_of(batch)
+    return rows if rows is not None else batch.orderBy("event_id").toArrow()
+
+
+def dense_prefix(rows: pa.Table, after: int) -> pa.Table:
+    """The leading id-ordered ``rows`` whose ids run ``after + 1, after +
+    2, …`` with no hole (a zero-copy slice): the dense-only guard of
+    ``read_after`` on driver-side rows."""
+    ids = rows["event_id"].to_numpy()
+    holes = np.flatnonzero(ids != after + 1 + np.arange(len(ids)))
+    return rows.slice(0, int(holes[0])) if holes.size else rows
+
+
 def _driver_appendable(schema: StructType, keys: list) -> bool:
     """Can pyarrow write exactly what the Spark path would: every event
     column at its canonical type, and plain sortable ordering columns?"""

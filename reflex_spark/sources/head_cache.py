@@ -6,28 +6,32 @@ from one load. The reference caps the cache at 10k events
 (defaultRCacheLimit), validates that loaded ids are consecutive
 (ErrConsecEvent), and re-initializes rather than bridging a gap.
 
-Spark translation — the data path stays distributed: the cached window is
-a Spark-cached DataFrame (executor memory); the driver holds only the
-``(lo, hi)`` id-range bookkeeping. A hit serves ``event_id > cursor`` off
-the cached blocks — zero storage LIST + scan, which at 100 TB is the
-whole cost of a head poll. One deliberate divergence from the reference:
-on a miss the window is *replaced*, not extended-and-trimmed row by row
-(extending a cached DataFrame would re-cache the union's blocks and
-double memory). Same bounded-memory guarantee, same hit condition for
-any consumer within one window of head; a consumer more than ``limit``
-events behind misses in both designs.
+The cached window is Arrow rows pinned on the driver. ``run()`` reads it
+through ``poll_window``, as it reads a bare log's head: a miss loads the
+window with ``EventLog.poll_window`` from the files the commit records
+name, and a hit slices it, both with no Spark job. Recorded files never
+change, so a cached window cannot go stale; appends only add ids past its
+tail, which the next read-through loads. Where the log has no driver
+window (an unrecorded file), ``run()`` scans through ``read_after``, which
+loads the window once with Spark. One deliberate divergence from the
+reference: on a miss the window is *replaced*, not extended-and-trimmed
+row by row. Same bounded memory, same hit condition for any consumer
+within one window of head.
 
-Cache integrity: read-through always loads with ``dense_only=True``, so a
-cached window never contains an id hole — a hit can never serve rows
-from beyond a gap, and after a gap fill the next poll (cursor at the
-dense head, wanted id past the cached hi) misses and reloads. That is
-the file-log equivalent of rcache's consecutive-id sanity check.
+Cache integrity: only a window's dense prefix is cached, so a hit never
+serves rows from beyond an id hole, and after a gap fill the next poll
+(cursor at the dense head, wanted id past the cached tail) misses and
+reloads — rcache's consecutive-id sanity check. A ``poll_window`` miss
+hands ``run()`` the rows as loaded, so its own dense check and gap
+detection see the hole as on a bare log.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from reflex_spark.sources.event_log import ARROW_SCHEMA, dense_prefix, local_batch
 
 
 class ErrConsecEvent(Exception):
@@ -37,7 +41,8 @@ class ErrConsecEvent(Exception):
 
 class HeadCache:
     """Drop-in wrapper for any EventLog-shaped source: pass
-    ``HeadCache(log)`` wherever a Spec takes a log.
+    ``HeadCache(log)`` wherever a Spec takes a log. Every attribute but
+    the two cached reads is the wrapped log's.
 
     ``disabled`` mirrors the reference's global DisableCache switch: all
     loads go straight through to the underlying log.
@@ -52,108 +57,72 @@ class HeadCache:
         self.limit = limit or self.DEFAULT_LIMIT
         self.hits = 0
         self.misses = 0
-        self._df: DataFrame | None = None
-        self._lo = 0  # cached id range, inclusive; meaningless when _df is None
-        self._hi = 0
+        self._window: tuple[int, pa.Table] | None = None  # (first id, dense rows)
 
-    # -- log surface passthrough ------------------------------------------
-
-    def head(self) -> int:
-        return self.log.head()
-
-    def read(self) -> DataFrame:
-        return self.log.read()
-
-    def read_stream(self, **kwargs) -> DataFrame:
-        return self.log.read_stream(**kwargs)
-
-    def append(self, events: DataFrame) -> int:
-        return self.log.append(events)
-
-    @property
-    def notifier(self):
-        return getattr(self.log, "notifier", None)
-
-    def detect_gap(self, after: int):
-        return self.log.detect_gap(after)
-
-    def emit_gap(self, gap) -> None:
-        self.log.emit_gap(gap)
-
-    @property
-    def _gap_listeners(self):
-        return getattr(self.log, "_gap_listeners", [])
-
-    # -- cache core --------------------------------------------------------
+    def __getattr__(self, name: str):
+        return getattr(self.log, name)
 
     def invalidate(self) -> None:
-        if self._df is not None:
-            self._df.unpersist()
-            self._df = None
+        self._window = None
 
-    def read_after(
-        self, after: int, limit: int | None = None, dense_only: bool = False
-    ) -> DataFrame:
-        """Serve the id window after ``after`` from cache when it lies
-        inside the cached range (reference maybeHit, rcache.go:83-115:
-        hit iff ``from`` ∈ [head, tail]; the client re-calls for rows past
-        the tail and that call reads through, advancing the cache)."""
-        want = after + 1
-        if (
-            not HeadCache.disabled
-            and self._df is not None
-            and self._lo <= want <= self._hi
-        ):
-            self.hits += 1
-            df = self._df.where(F.col("event_id") > after)
-            # orderBy before limit so a limited hit is always the lowest-id
-            # prefix of the dense cached window — without it, limit() may
-            # take an arbitrary subset across partitions, and a dense_only
-            # caller (the run loop's gap fallback re-enters this same hit
-            # path) would silently advance past skipped rows.
-            return df.orderBy("event_id").limit(limit) if limit else df
+    def _hit(self, after: int, limit: int | None) -> pa.Table | None:
+        """The cached rows after ``after`` when the window holds id
+        ``after + 1`` (reference maybeHit, rcache.go:83-115: hit iff
+        ``from`` ∈ [head, tail]; the client re-calls for rows past the tail
+        and that call reads through, advancing the cache)."""
+        window = self._window
+        if HeadCache.disabled or window is None:
+            return None
+        lo, rows = window
+        if not lo <= after + 1 < lo + rows.num_rows:
+            return None
+        self.hits += 1
+        return rows.slice(after + 1 - lo, limit)
+
+    def poll_window(self, after: int, limit: int | None = None) -> pa.Table | None:
+        """``EventLog.poll_window`` through the cache. A miss loads a full
+        cache window (not just the caller's batch) so that followers hit
+        (reference readThrough, rcache.go:117-152), caches its dense prefix
+        and returns its first ``limit`` rows as loaded. When the log will
+        not serve the cache-sized window from the driver, the caller's
+        window is served uncached; None where the log has no driver window
+        at all."""
+        rows = self._hit(after, limit)
+        if rows is not None:
+            return rows
         self.misses += 1
-        return self._read_through(after, limit)
-
-    def _read_through(self, after: int, limit: int | None) -> DataFrame:
-        """Load a full cache window (not just the caller's batch) so that
-        followers hit (reference readThrough, rcache.go:117-152).
-
-        The plain (non-dense) plan is tried first — a window with unique
-        ids > after is consecutive iff ``hi == after + n``, checked from
-        the same agg that does the bookkeeping — so the log's dense
-        truncation (an unpartitioned row_number window) is paid only when
-        a hole is actually present."""
-        window = max(limit or 0, self.limit)
-        fresh = self.log.read_after(after, window, dense_only=False)
+        poll_window = getattr(self.log, "poll_window", None)
+        if poll_window is None:
+            return None
         if HeadCache.disabled:
-            return fresh.limit(limit) if limit else fresh
+            return poll_window(after, limit)
+        rows = poll_window(after, max(limit or 0, self.limit))
+        if rows is None:
+            return poll_window(after, limit)
+        dense = dense_prefix(rows, after)
+        if dense.num_rows:  # an empty load keeps the current window
+            self._window = (after + 1, dense)
+        return rows.slice(0, limit)
 
-        def load_stats(df):
-            df = df.cache()
-            r = df.agg(
-                F.min("event_id").alias("lo"),
-                F.max("event_id").alias("hi"),
-                F.count(F.lit(1)).alias("n"),
-            ).collect()[0]
-            return df, r["lo"], r["hi"], r["n"]
-
-        fresh, lo, hi, n = load_stats(fresh)
-        if n and (lo != after + 1 or n != hi - lo + 1):
-            # hole in the window: retruncate to the contiguous prefix
-            fresh.unpersist()
-            fresh, lo, hi, n = load_stats(
-                self.log.read_after(after, window, dense_only=True)
-            )
-        if n == 0:
-            fresh.unpersist()
-            return fresh
-        if lo != after + 1 or n != hi - lo + 1:
-            # the log's dense_only contract is violated (custom log): fail
-            # loudly rather than cache a window with holes (reference
-            # ErrConsecEvent).
-            fresh.unpersist()
-            raise ErrConsecEvent(f"non-consecutive window after {after}: [{lo},{hi}] n={n}")
-        self.invalidate()
-        self._df, self._lo, self._hi = fresh, lo, hi
-        return fresh.limit(limit) if limit else fresh
+    def read_after(self, after: int, limit: int | None = None, dense_only: bool = False) -> DataFrame:
+        """The dense window after ``after`` as a local batch: ``run()``'s
+        scan path, taken where ``poll_window`` returns None. A hit comes off
+        the same pinned rows; a miss loads a cache window once with Spark
+        (``read_after(dense_only=True)``), whose ids must be consecutive,
+        else the log broke that contract (ErrConsecEvent)."""
+        if HeadCache.disabled:
+            self.misses += 1
+            return self.log.read_after(after, limit, dense_only)
+        rows = self._hit(after, limit)
+        if rows is None:
+            self.misses += 1
+            rows = self.log.read_after(after, max(limit or 0, self.limit), dense_only=True).toArrow()
+            rows = rows.select(ARROW_SCHEMA.names).cast(ARROW_SCHEMA)
+            n = rows.num_rows
+            if dense_prefix(rows, after).num_rows != n:
+                ids = rows["event_id"]
+                raise ErrConsecEvent(f"non-consecutive window after {after}: [{ids[0]},{ids[-1]}] n={n}")
+            if n:
+                self._window = (after + 1, rows)
+            rows = rows.slice(0, limit)
+        return local_batch(self.spark, rows)

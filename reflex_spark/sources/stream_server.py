@@ -14,6 +14,11 @@ Reference parity (server.go:49-107, client.go:16-35, reflexpb/reflex.proto):
   gRPC streams block on their 64KB window (server.go:46-48 note) — a slow
   consumer throttles the producer, nothing is buffered unboundedly.
 
+Each connection is a ``run()`` over the log from the request's cursor, so
+it reads the head as every consumer does: on the driver with no Spark job
+for a covered log, parked on the insert notifier when idle, and through
+the gap filler past an id hole. Events go on the wire from Arrow rows.
+
 Why a socket and not Spark-native: cross-service consumption at scale goes
 through the shared lake (any cluster reads the same EventLog path); this
 bridge is the reflex-parity peer-to-peer path for small control-plane
@@ -29,25 +34,31 @@ import base64
 import json
 import socket
 import threading
-import time
 from dataclasses import dataclass
 from datetime import datetime, timezone
 from typing import Any, Callable
 
-from reflex_spark.sources.event_log import EventLog
+import pyarrow as pa
+
+from reflex_spark.sources.event_log import ARROW_SCHEMA, EventLog, rows_of
+from reflex_spark.streaming.consumer import Consumer, ConsumerError
+from reflex_spark.streaming.cursors import MemCursorStore
+from reflex_spark.streaming.run import ErrHeadReached, ErrStopped, Spec, StreamOptions, run
+
+_GONE = (BrokenPipeError, ConnectionResetError)
 
 
-def _event_to_wire(row) -> dict[str, Any]:
-    """reflexpb.Event shape (proto fields 3-8; id is a string there)."""
-    ts = row["timestamp"]
-    return {
-        "id": str(row["event_id"]),
-        "type": row["event_type"],
-        "foreign_id": row["foreign_id"],
-        "timestamp": int(ts.replace(tzinfo=timezone.utc).timestamp() * 1_000_000),
-        "metadata": base64.b64encode(row["metadata"]).decode() if row["metadata"] else None,
-        "trace": base64.b64encode(row["trace"]).decode() if row["trace"] else None,
-    }
+def _wire_events(rows: pa.Table) -> list[dict[str, Any]]:
+    """Rows as reflexpb.Event shapes (proto fields 3-8; id is a string
+    there), timestamps as the stored epoch µs whatever the host's zone."""
+    rows = rows.select(ARROW_SCHEMA.names).cast(ARROW_SCHEMA)
+    rows = rows.set_column(3, "timestamp", rows["timestamp"].cast(pa.int64()))
+    b64 = lambda v: base64.b64encode(v).decode() if v else None  # noqa: E731
+    return [
+        {"id": str(r["event_id"]), "type": r["event_type"], "foreign_id": r["foreign_id"],
+         "timestamp": r["timestamp"], "metadata": b64(r["metadata"]), "trace": b64(r["trace"])}
+        for r in rows.to_pylist()
+    ]
 
 
 def wire_to_event(msg: dict[str, Any]) -> dict[str, Any]:
@@ -65,7 +76,7 @@ def wire_to_event(msg: dict[str, Any]) -> dict[str, Any]:
 class StreamServer:
     """Serve an EventLog's stream to remote consumers (reference Server).
 
-    One thread per connection; each runs the poll loop over the log and
+    One thread per connection; each is a ``run()`` over the log that
     writes events to the socket, blocking on the send buffer when the
     consumer is slow (backpressure). stop() is the graceful shutdown:
     live streams send an ErrStopped frame and close (server.go:31-42).
@@ -119,52 +130,46 @@ class StreamServer:
             self._threads.append(t)
 
     def _serve_conn(self, conn: socket.socket) -> None:
+        """One stream: a ``run()`` from the request's cursor whose consumer
+        writes each batch's events to the socket."""
         try:
             with conn, conn.makefile("rw") as f:
-                req = json.loads(f.readline())
-                opts = req.get("options") or {}
-                after = int(req.get("after") or 0)
-                if opts.get("fromHead") and after == 0:
-                    after = self.log.head()
-                to_head = bool(opts.get("toHead"))
-                lag = float(opts.get("lag") or 0.0)
-                while True:
-                    if self._stop.is_set():
-                        f.write(json.dumps({"error": "stopped"}) + "\n")
-                        f.flush()
-                        return
-                    rows = (
-                        self.log.read_after(after, self.batch_limit, dense_only=True)
-                        .orderBy("event_id")
-                        .collect()
+                try:
+                    req = json.loads(f.readline())
+                    opts = req.get("options") or {}
+                    options = StreamOptions(
+                        from_head=bool(opts.get("fromHead")),
+                        to_head=bool(opts.get("toHead")),
+                        lag_seconds=float(opts.get("lag") or 0.0),
+                        batch_limit=self.batch_limit,
+                        drop_noops=False,  # noops go on the wire
+                        poll_backoff=self.poll_backoff,
+                        stop=self._stop.is_set,
                     )
-                    if lag:
-                        # time.time() is the true epoch regardless of host
-                        # TZ; utcnow().timestamp() would re-interpret the
-                        # naive UTC datetime in the host zone and shift the
-                        # cutoff by the UTC offset.
-                        cutoff = time.time() - lag
-                        head_rows = []
-                        for r in rows:  # prefix-truncate at first too-recent
-                            if r["timestamp"].replace(tzinfo=timezone.utc).timestamp() > cutoff:
-                                break
-                            head_rows.append(r)
-                        rows = head_rows
-                    if not rows:
-                        if to_head:
-                            f.write(json.dumps({"error": "head_reached"}) + "\n")
-                            f.flush()
-                            return
-                        time.sleep(self.poll_backoff)
-                        continue
-                    for r in rows:
+                    cstore = MemCursorStore({"stream": int(req.get("after") or 0)})
+                except ValueError:
+                    return  # bad request: drop the stream
+
+                def send(batch, meta) -> None:
+                    for event in _wire_events(rows_of(batch)):
                         # write blocks on the TCP send buffer: backpressure
-                        f.write(json.dumps({"event": _event_to_wire(r)}) + "\n")
+                        f.write(json.dumps({"event": event}) + "\n")
                         self.sent_count += 1
                     f.flush()
-                    after = rows[-1]["event_id"]
-        except (BrokenPipeError, ConnectionResetError, json.JSONDecodeError, ValueError):
-            return  # client went away / bad request: drop the stream
+
+                try:
+                    run(Spec(self.log, cstore, Consumer("stream", send), options))
+                except ErrStopped:
+                    error = "stopped"
+                except ErrHeadReached:
+                    error = "head_reached"
+                f.write(json.dumps({"error": error}) + "\n")
+                f.flush()
+        except ConsumerError as exc:
+            if not isinstance(exc.__cause__, _GONE):
+                raise
+        except _GONE:
+            return  # the client went away: drop the stream
 
 
 @dataclass
@@ -200,8 +205,6 @@ class StreamClient:
         self._closed = False
 
     def recv(self) -> dict[str, Any]:
-        from reflex_spark.streaming.run import ErrHeadReached, ErrStopped
-
         if self._closed:
             raise ErrStopped("client closed")
         line = self._f.readline()
@@ -217,9 +220,12 @@ class StreamClient:
         return wire_to_event(msg["event"])
 
     def close(self) -> None:
+        """Close the connection now: the socket's own close waits for its
+        file object to close too."""
         if not self._closed:
             self._closed = True
             try:
+                self._f.close()
                 self._sock.close()
             except OSError:
                 pass
@@ -241,8 +247,6 @@ def run_remote(
     ErrHeadReached / ErrStopped propagate to the caller like run().
     Returns the last committed cursor.
     """
-    from reflex_spark.streaming.run import ErrHeadReached, ErrStopped
-
     after = int(cstore.get_cursor(name) or 0)
     client = StreamClient(host, port, after=after, options=options)
     try:

@@ -25,12 +25,15 @@ import time
 from collections.abc import Callable, Sequence
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from reflex_spark.sources.event_log import rows_of
 from reflex_spark.streaming.consumer import Consumer, row_consumer
-from reflex_spark.streaming.cursors import CursorStore
-from reflex_spark.streaming.run import Spec, StreamOptions, run
+from reflex_spark.streaming.cursors import CursorStore, MemCursorStore
+from reflex_spark.streaming.run import ErrStopped, Spec, StreamOptions, run
 
 
 # --- batch window (P1) ----------------------------------------------------
@@ -342,25 +345,28 @@ def await_event(
     timeout_sec: float = 30.0,
     poll_interval: float = 0.2,
 ) -> bool:
-    """Block until an event with foreign_id+type exists at/after the call
+    """Block until an event with foreign_id+type exists after the call
     (rpatterns/await.go:18-78): races a log watcher against an optional
-    state poller. Returns True if seen, False on timeout."""
-    start_head = log.head()
+    state poller. Returns True if seen, False on timeout. The watcher is a
+    ``run()`` from the head at call time that stops at the first match, when
+    ``poll_fn`` reports the state, or at the deadline."""
     deadline = time.monotonic() + timeout_sec
-    while time.monotonic() < deadline:
-        if poll_fn is not None and poll_fn():
-            return True
-        matched = (
-            log.read()
-            .where(
-                (F.col("event_id") > start_head)
-                & (F.col("foreign_id") == foreign_id)
-                & (F.col("event_type").isin(list(types)))
-            )
-            .limit(1)
-            .count()
-        )
-        if matched:
-            return True
-        time.sleep(poll_interval)
-    return False
+    seen = False
+
+    def watch(batch: DataFrame, meta: dict) -> None:
+        nonlocal seen
+        rows = rows_of(batch)
+        wanted = pc.is_in(rows["event_type"], pa.array(list(types), rows["event_type"].type))
+        seen = seen or bool(pc.any(pc.and_(pc.equal(rows["foreign_id"], foreign_id), wanted)).as_py())
+
+    def stop() -> bool:
+        nonlocal seen
+        seen = seen or (poll_fn is not None and bool(poll_fn()))
+        return seen or time.monotonic() >= deadline
+
+    options = StreamOptions(from_head=True, poll_backoff=poll_interval, stop=stop)
+    try:
+        run(Spec(log, MemCursorStore(), Consumer("await_event", watch), options))
+    except ErrStopped:
+        pass
+    return seen

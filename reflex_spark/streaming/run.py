@@ -25,7 +25,6 @@ from dataclasses import dataclass, field
 from typing import Any
 from urllib.parse import unquote, urlparse
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import functions as F
@@ -34,6 +33,7 @@ from reflex_spark.sources.event_log import (
     NOOP_FOREIGN_ID,
     NOOP_TYPE,
     EventLog,
+    dense_prefix,
     local_batch,
     without_noops,
 )
@@ -165,10 +165,7 @@ def _local_window(rows: pa.Table, cursor: int, opts: StreamOptions):
     (id-ordered, ids > cursor): ``_load_batch``'s dense-prefix and lag
     truncation, then (rows to deliver, count, max id, non-noop count)."""
     if opts.require_dense:
-        ids = rows["event_id"].to_numpy()
-        holes = np.flatnonzero(ids != cursor + 1 + np.arange(len(ids)))
-        if holes.size:
-            rows = rows.slice(0, int(holes[0]))
+        rows = dense_prefix(rows, cursor)
     if opts.lag_seconds:
         ts = rows["timestamp"]
         cutoff = pa.scalar(int((time.time() - opts.lag_seconds) * 1e6), ts.type)

@@ -4,6 +4,7 @@ import os
 import shutil
 import sys
 import tempfile
+import time
 
 import pytest
 
@@ -75,3 +76,26 @@ def spark():
         extra_conf={"spark.local.dir": tempfile.gettempdir()},
     )
     yield s
+
+
+def jobs_in(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` runs."""
+    sc, group = spark.sparkContext, f"count-jobs-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    time.sleep(0.5)  # let the listener bus record the last jobs
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def jobs_started(spark, fn) -> int:
+    """The number of Spark jobs outside any job group that start while
+    ``fn()`` runs, e.g. those of a server's threads: a thread does not
+    inherit its starter's job group, so ``jobs_in`` cannot see them."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    fn()
+    time.sleep(0.5)  # let the listener bus record the last jobs
+    return len(set(tracker.getJobIdsForGroup(None)) - before)

@@ -40,6 +40,7 @@ from reflex_spark.streaming import (
 )
 from reflex_spark.streaming.materialize import MaterializedCounts
 from reflex_spark.streaming.run import run_stream
+from tests.conftest import jobs_in
 
 _ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
@@ -294,27 +295,15 @@ def test_materialized_counts_local_batch_reads_stored_schema(spark, tmp_path, me
     assert got == {k: v for k, v in shuffle_rollup.items() if k != "driver_written"}
 
 
-def _jobs_in(spark, fn) -> int:
-    """The number of Spark jobs ``fn()`` runs."""
-    sc, group = spark.sparkContext, f"count-jobs-{time.monotonic_ns()}"
-    sc.setJobGroup(group, "count jobs")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    time.sleep(0.5)  # let the listener bus record the last jobs
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_driver_merge_job_counts(spark, tmp_path):
     """Under the threshold a local batch merges with no Spark job and a
     file-scan batch with at most one (the collect)."""
     mat = MaterializedCounts(spark, str(tmp_path / "rollup"), keys=["k"], value_col="v")
     local = _rollup_batch(spark, [1, 2], ["a", "b"], ["1", "2"])
-    assert _jobs_in(spark, lambda: mat.apply_batch(local, {})) == 0
+    assert jobs_in(spark, lambda: mat.apply_batch(local, {})) == 0
     scan = _rollup_batch(spark, [3, 4], ["a", "c"], ["3", "4"], str(tmp_path / "scan"))
-    assert _jobs_in(spark, lambda: mat.apply_batch(scan, {})) <= 1
-    assert _jobs_in(spark, lambda: mat.apply_batch(local, {})) == 0  # redelivered
+    assert jobs_in(spark, lambda: mat.apply_batch(scan, {})) <= 1
+    assert jobs_in(spark, lambda: mat.apply_batch(local, {})) == 0  # redelivered
     assert sorted((r["k"], r["n_events"]) for r in mat.read().collect()) == [("a", 2), ("b", 1), ("c", 1)]
 
 

@@ -11,13 +11,14 @@ from __future__ import annotations
 import glob
 import json
 import os
+import sys
 import threading
 import time
 
 import pytest
 
 from reflex_spark.sources import event_log
-from reflex_spark.sources.event_log import EVENT_SCHEMA, EventLog, Gap
+from reflex_spark.sources.event_log import EVENT_SCHEMA, EventLog, Gap, arrow_of
 from reflex_spark.sources.gapfill import fill_gaps
 from reflex_spark.sources.head_cache import ErrConsecEvent, HeadCache
 from reflex_spark.sources.memory import EPOCH, make_events, seed_log
@@ -30,6 +31,8 @@ from reflex_spark.streaming import (
     run,
 )
 from reflex_spark.streaming.notify import InMemNotifier, StubNotifier
+from reflex_spark.streaming.run import run_stream
+from tests.conftest import jobs_in
 
 
 def _write_raw(spark, path: str, ids: list[int], foreign_id: str = "x"):
@@ -224,3 +227,90 @@ def test_head_cache_rejects_non_consecutive_window(spark, tmp_path):
     cache = HeadCache(HoleyLog(log), limit=10)
     with pytest.raises(ErrConsecEvent):
         cache.read_after(0, 10)
+
+
+def test_run_over_head_cache_runs_no_spark_job(spark, tmp_path):
+    """On a covered log the cache loads its window with the log's driver
+    read and serves hits off the pinned rows: run() to head through it
+    runs no Spark job, and the batches are the served rows."""
+    log = seed_log(spark, str(tmp_path / "log"), [(1, f"u{i}") for i in range(30)])
+    cache = HeadCache(log, limit=100)
+    served = []
+    spec = Spec(cache, MemCursorStore(), Consumer("c", lambda df, m: served.append(arrow_of(df))),
+                StreamOptions(to_head=True, batch_limit=10))
+
+    def drain():
+        with pytest.raises(ErrHeadReached):
+            run(spec)
+
+    assert jobs_in(spark, drain) == 0
+    assert [i for rows in served for i in rows["event_id"].to_pylist()] == list(range(1, 31))
+    assert (cache.misses, cache.hits) == (2, 2)
+
+
+def test_head_cache_shared_by_concurrent_consumers(spark, tmp_path):
+    """More consumer threads than cores tail one cache whose window keeps
+    being replaced, under a short switch interval: each gets every id
+    once, in order."""
+    log = seed_log(spark, str(tmp_path / "log"), [(1, f"u{i}") for i in range(50)])
+    cache = HeadCache(log, limit=20)
+    got = {f"c{i}": [] for i in range(8)}
+
+    def consume(name):
+        sink = got[name]
+        spec = Spec(cache, MemCursorStore(), Consumer(name, lambda df, m: sink.extend(arrow_of(df)["event_id"].to_pylist())),
+                    StreamOptions(to_head=True, batch_limit=7))
+        with pytest.raises(ErrHeadReached):
+            run(spec)
+
+    threads = [threading.Thread(target=consume, args=(name,)) for name in got]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert got == {name: list(range(1, 51)) for name in got}
+
+def test_head_cache_never_serves_past_a_hole_on_the_driver_path(spark, tmp_path):
+    """A hole inside a recorded file: compaction folds ids 1-3 and a raw
+    id 5 into one record [1,5], so the log is covered and the cache loads
+    through the driver path. Only the dense prefix is cached, so no hit
+    serves an id past the hole before the filler closes it."""
+    log = seed_log(spark, str(tmp_path / "log"), [(1, f"u{i}") for i in range(3)])
+    _write_raw(spark, log.path, [5])  # id 4 missing
+    log.compact()
+    assert log.poll_window(0)["event_id"].to_pylist() == [1, 2, 3, 5]  # covered
+    fill_gaps(log, grace_seconds=0.1, recheck_interval=0.05)
+    cache = HeadCache(log, limit=100)
+    trace = []  # ("hit", ids) per cache hit, then "filled" once the hole is closed
+    log.listen_gaps(lambda gap: trace.append("filled"))  # runs after the filler
+
+    def poll_window(after, limit=None):
+        hits = cache.hits
+        rows = HeadCache.poll_window(cache, after, limit)
+        if cache.hits > hits:
+            trace.append(("hit", rows["event_id"].to_pylist()))
+        return rows
+
+    cache.poll_window = poll_window
+    assert _run_through(cache, "c", batch_limit=2) == [1, 2, 3, 5]
+    filled = trace.index("filled")
+    assert trace[:filled] and all(max(ids) <= 3 for _, ids in trace[:filled])
+    assert log.read().where("event_id = 4 AND foreign_id = '0'").count() == 1
+
+
+def test_run_stream_over_head_cache(spark, tmp_path):
+    """The cache is a drop-in log for run_stream too: every id once, in
+    order."""
+    log = seed_log(spark, str(tmp_path / "log"), [(1, f"u{i}") for i in range(3)])
+    log.append(make_events(spark, [(2, f"v{i}") for i in range(3)]))
+    got = []
+    spec = Spec(HeadCache(log), MemCursorStore(),
+                Consumer("s", lambda df, m: got.extend(r["event_id"] for r in df.select("event_id").collect())))
+    run_stream(spec, str(tmp_path / "ckpt"), max_files_per_trigger=1)
+    assert got == list(range(1, 7))

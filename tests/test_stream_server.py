@@ -3,9 +3,12 @@
 
 from __future__ import annotations
 
+import threading
+import time
+
 import pytest
 
-from reflex_spark.sources.memory import seed_log
+from reflex_spark.sources.memory import EPOCH, make_events, seed_log
 from reflex_spark.sources.stream_server import (
     StreamClient,
     StreamClientOptions,
@@ -14,6 +17,7 @@ from reflex_spark.sources.stream_server import (
 )
 from reflex_spark.streaming import ErrHeadReached, MemCursorStore
 from reflex_spark.streaming.run import ErrStopped
+from tests.conftest import jobs_started
 
 
 def test_stream_server_10k_backpressure(spark, tmp_path):
@@ -112,3 +116,65 @@ def test_stream_server_cursor_resume(spark, tmp_path):
         assert store.get_cursor("res") == 6
     finally:
         server.stop()
+
+
+def test_stream_server_wire_timestamp_is_the_stored_instant_off_utc(spark, tmp_path, monkeypatch):
+    """On a host whose local zone is not UTC, the wire carries the stored
+    instant on both read paths: rows served from the driver (a covered
+    log) and rows a Spark scan collects (after an unrecorded raw file)."""
+    log = seed_log(spark, str(tmp_path / "log"), [(1, "a")])
+    stored = log.poll_window(0)["timestamp"][0].as_py().replace(tzinfo=None)  # naive UTC
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    server = StreamServer(log)
+    try:
+        served = StreamClient(*server.address).recv()
+        spark.createDataFrame([(2, 1, "b", EPOCH, None, None)], log.read().schema).write.mode(
+            "append"
+        ).parquet(log.path)
+        assert log.poll_window(0) is None  # the raw file is unrecorded: Spark scan
+        scanned = StreamClient(*server.address).recv()
+        assert (served["event_id"], scanned["event_id"]) == (1, 1)
+        assert served["timestamp"] == scanned["timestamp"] == stored
+    finally:
+        server.stop()
+        monkeypatch.undo()
+        time.tzset()
+
+
+def test_stream_server_idle_stream_runs_no_spark_job(spark, tmp_path):
+    """A stream parked at the head of a covered log runs no Spark job, and
+    an append still reaches it."""
+    log = seed_log(spark, str(tmp_path / "log"), [(1, "a"), (1, "b")])
+    server = StreamServer(log)
+    try:
+        client = StreamClient(*server.address)
+        assert [client.recv()["event_id"] for _ in range(2)] == [1, 2]
+        assert jobs_started(spark, lambda: time.sleep(1.0)) == 0
+        log.insert("c", 1)
+        assert client.recv()["event_id"] == 3
+    finally:
+        server.stop()
+
+
+def test_stream_server_drops_a_stream_whose_client_went_away(spark, tmp_path, monkeypatch):
+    """A client that closes mid-stream makes the server's next write fail
+    inside the stream's consumer; the stream ends quietly, with no thread
+    exception."""
+    log = seed_log(spark, str(tmp_path / "log"), [(1, str(i)) for i in range(4000)])
+    log.append(make_events(spark, [(1, str(i)) for i in range(4000)]))
+    errors = []
+    monkeypatch.setattr(threading, "excepthook", errors.append)
+    server = StreamServer(log, batch_limit=500)
+    try:
+        client = StreamClient(*server.address)
+        assert client.recv()["event_id"] == 1
+        client.close()
+        deadline = time.monotonic() + 30
+        while any(t.is_alive() for t in server._threads) and time.monotonic() < deadline:
+            time.sleep(0.05)
+        assert not any(t.is_alive() for t in server._threads)
+        assert server.sent_count < 8000
+    finally:
+        server.stop()
+    assert errors == []

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import os
+import threading
 from datetime import datetime, timedelta
 
 import pytest
@@ -37,6 +38,7 @@ from reflex_spark.streaming.patterns import (
     shard_filter,
 )
 from reflex_spark.streaming.run import run_stream
+from tests.conftest import jobs_in
 
 
 def collecting_consumer(name: str, sink: list, **kwargs) -> Consumer:
@@ -356,6 +358,19 @@ def test_await_event(spark, tmp_path):
     t.join()
     # poller path: pollFn observing current state wins immediately
     assert await_event(log, "zzz", [9], poll_fn=lambda: True, timeout_sec=1.0)
+
+
+def test_await_event_timeout_runs_no_spark_job(spark, tmp_path):
+    """Waiting at the head of a covered log until the deadline runs no
+    Spark job; a non-matching event arriving meanwhile is read on the
+    driver too."""
+    log = seed_log(spark, str(tmp_path / "log"), [(1, "x")])
+    t = threading.Timer(0.3, lambda: log.insert("y", 2))
+    t.start()
+    found = []
+    assert jobs_in(spark, lambda: found.append(await_event(log, "y", [1], timeout_sec=1.0, poll_interval=0.1))) == 0
+    t.join()
+    assert found == [False]
 
 
 # --- structured streaming path -------------------------------------------
