@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
 from reflex_spark.operators.relational import top_k
+from reflex_spark.sources import commits
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -1478,9 +1479,9 @@ class IvfIndex:
     - ``_meta.json``  the LEDGER and the snapshot root: per-list row
       counts AND per-list data-file names, the next free list id, the
       live centroid generation, and the garbage awaiting vacuum. Its
-      atomic tmp+fsync+replace write is the COMMIT POINT of every
-      maintenance op — a reader resolving through one ledger read sees
-      the pre- or post-commit index, never a half-state.
+      durable replace (``commits.replace_json``) is the COMMIT POINT of
+      every maintenance op — a reader resolving through one ledger read
+      sees the pre- or post-commit index, never a half-state.
 
     Lifecycle and costs:
 
@@ -1526,12 +1527,12 @@ class IvfIndex:
     Object-store translation (the 100 TB deployment note — the sandbox
     control plane is POSIX-local, mirroring what ``rblob/doc.go:1-16``
     documents for the reference's bucket contract): ``_write_meta``'s
-    tmp+fsync+``os.replace`` commit becomes a conditional PUT
-    (``If-Match`` on the ledger object's ETag / generation — S3 2024+
-    conditional writes, GCS ``ifGenerationMatch``); ``_claim``'s
-    ``O_EXCL`` create becomes ``If-None-Match: *`` PUT on the claim
-    key; ``_scan_files``/``_vacuum_held`` directory listings become
-    prefix LIST calls; append's stage-then-``os.replace`` move becomes
+    durable replace becomes a conditional PUT (``If-Match`` on the
+    ledger object's ETag / generation — S3 2024+ conditional writes, GCS
+    ``ifGenerationMatch``); ``_claim``'s exclusive publish (a hard link
+    that refuses an existing name) becomes ``If-None-Match: *`` PUT on
+    the claim key; ``_scan_files``/``_vacuum_held`` directory listings
+    become prefix LIST calls; append's stage-then-``os.replace`` move becomes
     server-side COPY + DELETE (object stores have no rename), with the
     copied set still serving as the batch's exact file identity. The
     data plane is already pure Spark and carries over unchanged.
@@ -1590,59 +1591,25 @@ class IvfIndex:
             return json.load(f)
 
     def _write_meta(self, meta: dict) -> None:
-        import json
-        import os
-
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(meta, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._meta_path)
+        commits.replace_json(self._meta_path, meta)
 
     def list_counts(self) -> dict[int, int]:
         return {int(k): v for k, v in self._read_meta()["counts"].items()}
 
-    def _claim(self):
-        """Exclusive single-writer claim for the MAINTENANCE ops (build /
-        append / split / vacuum / repair): the ledger is a
-        read-modify-write file, so two concurrent writers would lose
-        counts or sweep each other's uncommitted output. Same O_EXCL
-        discipline as the blob sink's ``_writer.claim``. Probes take no
-        lock — they resolve everything through ONE committed ledger
-        snapshot, whose files survive at least until the next
-        maintenance op's deferred vacuum. A claim left by a crashed
-        writer refuses loudly until an operator removes it — the error
-        names the file."""
-        import contextlib
+    def _claim(self) -> commits.WriterClaim:
+        """The single-writer claim (``commits.WriterClaim``, as the blob
+        sink's) that MAINTENANCE ops hold for a ``with`` block: the ledger
+        is read-modify-write, so two concurrent writers would lose counts
+        or sweep each other's uncommitted output. Probes take no lock —
+        they resolve everything through ONE committed ledger snapshot,
+        whose files survive at least until the next maintenance op's
+        deferred vacuum. A crashed writer's claim refuses until removed."""
         import os
 
-        path = os.path.join(self.path, "_writer.claim")
-
-        @contextlib.contextmanager
-        def held():
-            try:
-                fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            except FileExistsError:
-                raise ValueError(
-                    f"another writer holds this index's claim ({path}): "
-                    "IvfIndex maintenance (build/append/split/vacuum) is "
-                    "single-writer — a concurrent writer would lose "
-                    "ledger counts or sweep uncommitted output. If that "
-                    "writer crashed, remove the claim file after "
-                    "confirming no maintenance job is live."
-                ) from None
-            try:
-                with os.fdopen(fd, "w", encoding="utf-8") as f:
-                    f.write(f"pid={os.getpid()}")
-                yield
-            finally:
-                try:
-                    os.remove(path)
-                except OSError:
-                    pass
-
-        return held()
+        return commits.WriterClaim(
+            os.path.join(self.path, "_writer.claim"),
+            "IvfIndex maintenance (build/append/split/compact/vacuum/repair)",
+        )
 
     def _vacuum_held(self, meta: dict) -> dict:
         """Deferred sweep, under the claim: (a) garbage parked by

@@ -1,12 +1,22 @@
-"""How a commit becomes visible: the one module that knows.
+"""How a control file becomes visible: the one module that knows.
 
 - **Exclusive publish** (``publish_exclusive``): a JSON file is written to
   a hidden temp file, then hard-linked to its name, so readers see no file
   or the whole file, and an existing name is never overwritten
   (``ConcurrentCommitError``). EventLog's records and TxTable's versions.
+- **Durable replace** (``replace_json``): the same temp file, fsynced and
+  renamed over the name: readers see the old file or the whole new one.
+  FileCursorStore's cursors, ``run_stream``'s ``bootstrap_head.json``,
+  TxTable's checkpoints, the blob sink's ``_SUCCESS``, IvfIndex's ledger.
+- **Writer claim** (``WriterClaim``): an exclusive publish that refuses a
+  second writer until released. The blob sink (constructor to
+  ``commit``/``abort``) and IvfIndex maintenance (a ``with`` block).
 - **Generation swap** (``swap_generation``): a directory is republished
   whole behind an atomically replaced symlink. ``EventLog.compact`` and
   ``MaterializedCounts``.
+
+Writers move their data files into place themselves; one of the above
+makes them visible.
 
 An EventLog record ``{seq, min_id, max_id, files, commit_ts}`` at
 ``_commits/<seq:08d>.json`` names the data files (relative to the log)
@@ -19,6 +29,7 @@ readers parse each record path once (``read_records``'s ``cache``). The
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -55,6 +66,58 @@ def publish_exclusive(path: str, obj) -> None:
         link_exclusive(tmp, path)  # the commit point
     finally:
         os.unlink(tmp)
+
+
+def replace_json(path: str, obj) -> None:
+    """Write ``obj`` as JSON at ``path``, replacing any file there. Readers
+    see the old file or the whole new one; the new one is fsynced before
+    the rename, and the temp file is removed on any error."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), prefix=".", suffix=".tmp")
+    try:
+        with os.fdopen(fd, "w") as f:
+            json.dump(obj, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)  # the commit point
+    except BaseException:
+        os.unlink(tmp)
+        raise
+
+
+class WriterClaim:
+    """The single-writer claim file at ``path`` for ``writer``. ``acquire``
+    publishes ``{"pid": ...}`` exclusively, or raises ValueError naming
+    the file, its holder and its age; a crashed writer's claim refuses
+    until removed by hand. ``release`` removes it; ``with`` does both."""
+
+    def __init__(self, path: str, writer: str):
+        self.path = path
+        self.writer = writer
+
+    def acquire(self) -> None:
+        try:
+            publish_exclusive(self.path, {"pid": os.getpid()})
+        except ConcurrentCommitError:
+            try:
+                age = max(0.0, time.time() - os.path.getmtime(self.path))
+                with open(self.path, encoding="utf-8") as f:
+                    holder = f.read().strip()
+            except OSError:
+                age, holder = -1.0, "?"
+            raise ValueError(
+                f"another writer holds the claim {self.path} (holder {holder!r}, "
+                f"age {age:.0f}s): {self.writer} is single-writer. If that writer "
+                "crashed, remove the claim file once no writer is live."
+            ) from None
+
+    def release(self) -> None:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(self.path)
+
+    __enter__ = acquire
+
+    def __exit__(self, *exc) -> None:
+        self.release()
 
 
 def publish(dirpath: str, seq: int, min_id: int, max_id: int, files: list[str]) -> None:

@@ -9,6 +9,8 @@ Reference parity (server.go:49-107, client.go:16-35, reflexpb/reflex.proto):
   b64 metadata/trace).
 - Graceful stop: ``Server.Stop()`` → every live stream terminates with an
   ``ErrStopped`` frame and new connections are refused (server.go:31-42).
+  A stream blocked on a client that stopped reading never reaches its
+  stop check; ``stop()`` shuts its socket down and drops it.
 - ``to_head`` exhaustion → an ``ErrHeadReached`` frame (options.go:27-39).
 - Backpressure: the server thread blocks on the TCP send buffer exactly as
   gRPC streams block on their 64KB window (server.go:46-48 note) — a slow
@@ -31,6 +33,7 @@ reproduced (no grpc dependency in this environment); the protocol semantics
 from __future__ import annotations
 
 import base64
+import contextlib
 import json
 import socket
 import threading
@@ -79,7 +82,8 @@ class StreamServer:
     One thread per connection; each is a ``run()`` over the log that
     writes events to the socket, blocking on the send buffer when the
     consumer is slow (backpressure). stop() is the graceful shutdown:
-    live streams send an ErrStopped frame and close (server.go:31-42).
+    live streams send an ErrStopped frame and close (server.go:31-42); a
+    stream still blocked on its client after the join timeout is dropped.
     """
 
     def __init__(
@@ -98,7 +102,7 @@ class StreamServer:
         self._sock.settimeout(0.1)
         self.host, self.port = self._sock.getsockname()[:2]
         self.sent_count = 0  # grpctest sentCounter parity
-        self._threads: list[threading.Thread] = []
+        self._threads: dict[threading.Thread, socket.socket] = {}  # live connections
         self._accept = threading.Thread(target=self._accept_loop, daemon=True)
         self._accept.start()
 
@@ -110,12 +114,17 @@ class StreamServer:
         """Graceful stop: streams end with ErrStopped (panics if called
         twice in the reference; idempotent here)."""
         self._stop.set()
-        try:
+        with contextlib.suppress(OSError):
             self._sock.close()
-        except OSError:
-            pass
-        for t in self._threads:
+        self._accept.join()
+        for t, conn in self._threads.items():
             t.join(timeout=5)
+            if t.is_alive():
+                # blocked writing to a client that stopped reading: the
+                # write raises and the stream ends as a went-away client
+                with contextlib.suppress(OSError):
+                    conn.shutdown(socket.SHUT_RDWR)
+                t.join(timeout=5)
 
     # -- internals ---------------------------------------------------------
 
@@ -127,7 +136,9 @@ class StreamServer:
                 continue
             t = threading.Thread(target=self._serve_conn, args=(conn,), daemon=True)
             t.start()
-            self._threads.append(t)
+            live = {c: s for c, s in self._threads.items() if c.is_alive()}
+            live[t] = conn
+            self._threads = live  # whole: readers iterate it unlocked
 
     def _serve_conn(self, conn: socket.socket) -> None:
         """One stream: a ``run()`` from the request's cursor whose consumer

@@ -255,7 +255,8 @@ class TxTable:
         """Materialize the full snapshot state at ``version`` so replay can
         start here. Best-effort and idempotent: the content for a given
         version is deterministic, so racing writers produce identical
-        files; temp+rename keeps readers from seeing a torn checkpoint."""
+        files; ``commits.replace_json`` keeps readers from seeing a torn
+        checkpoint."""
         files, schema, stats, dvs = self._snapshot_state(version)
         state = {
             "files": files,
@@ -263,11 +264,7 @@ class TxTable:
             "stats": stats,
             "dvs": dvs,
         }
-        target = os.path.join(self.log_dir, f"{version:020d}.checkpoint.json")
-        tmp = target + f".tmp{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, target)
+        commits.replace_json(os.path.join(self.log_dir, f"{version:020d}.checkpoint.json"), state)
 
     def truncate_log(self) -> list[int]:
         """Drop commit-log entries at or below the latest checkpoint (the

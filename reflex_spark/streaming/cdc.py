@@ -88,20 +88,12 @@ def publish_changes(
         table.spark, est_bytes=table.churn_bytes(from_version, to_version)
     ):
         ch = ch_plan.localCheckpoint()
-        # Coalesce (narrow, no shuffle) to a rows-derived width: ~50k
-        # change rows per task, growing with churn, capped at 4x cluster
-        # width — usually a no-op now; kept for estimate misses. The
-        # count doubles as the emptiness check, replacing the separate
-        # isEmpty job (events below is empty iff the feed is: every
-        # change row is exactly one insert or delete event).
+        # The count sizes _publish_events' coalesce and is the emptiness
+        # check (every change row is exactly one insert or delete event).
         n_rows = ch.count()
         if n_rows == 0:
             return log.head()
-        para = table.spark.sparkContext.defaultParallelism
-        target = max(1, min(n_rows // 50_000 + 1, para * 4))
-        if target < ch.rdd.getNumPartitions():
-            ch = ch.coalesce(target)
-        return _publish_events(table, log, ch, key_col, at)
+        return _publish_events(table, log, ch, n_rows, key_col, at)
 
 
 def publish_changes_many(
@@ -160,19 +152,22 @@ def publish_changes_many(
         for (ch, n_rows), (_f, _t, at) in zip(prepped, windows):
             if n_rows == 0:
                 continue
-            para = table.spark.sparkContext.defaultParallelism
-            target = max(1, min(n_rows // 50_000 + 1, para * 4))
-            if target < ch.rdd.getNumPartitions():
-                ch = ch.coalesce(target)
-            head = _publish_events(table, log, ch, key_col, at)
+            head = _publish_events(table, log, ch, n_rows, key_col, at)
     return head
 
 
 def _publish_events(
-    table: TxTable, log: EventLog, ch, key_col: str, at: datetime
+    table: TxTable, log: EventLog, ch, n_rows: int, key_col: str, at: datetime
 ) -> int:
-    """Type and append the checkpointed change feed (see publish_changes;
-    split out so the sized-shuffle context visibly spans the whole tail)."""
+    """Type and append the checkpointed change feed of ``n_rows`` rows
+    (see publish_changes; split out so the sized-shuffle context visibly
+    spans the whole tail). It is first coalesced (narrow, no shuffle) to
+    ~50k rows per task, capped at 4x cluster width: usually a no-op under
+    the sized shuffle, kept for estimate misses."""
+    para = table.spark.sparkContext.defaultParallelism
+    target = max(1, min(n_rows // 50_000 + 1, para * 4))
+    if target < ch.rdd.getNumPartitions():
+        ch = ch.coalesce(target)
     data_cols = [c for c in ch.columns if c != "_change_type"]
     ts = F.lit(at).cast("timestamp")
 

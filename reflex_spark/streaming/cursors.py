@@ -4,9 +4,10 @@ Parity notes:
 - Monotonic guard — a cursor set-back is rejected, mirroring the MySQL
   store's `WHERE cursor < ?` update + dup-key regression error
   (rsql/db.go:265-291).
-- FileCursorStore persists via atomic rename (crash-safe like the
-  reference's SQL txn); each set is durable, matching Spark's
-  commit-per-microbatch model (SURVEY.md §4).
+- FileCursorStore persists each set with ``commits.replace_json``
+  (fsync, then atomic rename; crash-safe like the reference's SQL txn):
+  a set that returned is on disk, matching Spark's commit-per-microbatch
+  model (SURVEY.md §4). A failed set keeps the previous cursor.
 - BufferedCursorStore is the reference's async flush buffer
   (rsql/cursorstable.go:43,169-230): sets coalesce in memory and reach
   the durable store at most once per flush interval, cutting cursor-write
@@ -27,10 +28,11 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 import threading
 import time
 from typing import Protocol
+
+from reflex_spark.sources import commits
 
 
 class CursorRegressionError(ValueError):
@@ -79,7 +81,7 @@ class MemCursorStore:
 
 
 class FileCursorStore:
-    """Durable cursor store: one JSON file per consumer, atomic rename."""
+    """Durable cursor store: one JSON file per consumer, replaced durably."""
 
     def __init__(self, path: str):
         self.path = path
@@ -99,10 +101,7 @@ class FileCursorStore:
     def set_cursor(self, consumer: str, cursor: Cursor) -> None:
         current = self.get_cursor(consumer)
         _check_monotonic(consumer, current, cursor)
-        fd, tmp = tempfile.mkstemp(dir=self.path)
-        with os.fdopen(fd, "w") as f:
-            json.dump({"cursor": cursor}, f)
-        os.replace(tmp, self._file(consumer))
+        commits.replace_json(self._file(consumer), {"cursor": cursor})
 
     def flush(self) -> None:
         pass

@@ -202,14 +202,9 @@ def ordered_by_key(df: DataFrame, n_partitions: int, key_col: str = "foreign_id"
 # --- best-effort (P5) and dead-letter (P6) -------------------------------
 
 
-def best_effort_consumer(
-    name: str,
-    fn: Callable[[dict], None],
-    retries: int = 2,
-) -> Consumer:
-    """Retry each event up to ``retries`` times, then log-and-skip — never
-    blocks the stream (rpatterns/besteffort.go:16-63). Failures are
-    counted in stats; successes/failures both advance the cursor."""
+def _retrying_rows(fn: Callable[[dict], None], retries: int):
+    """``row_consumer`` over ``fn`` tried up to ``retries + 1`` times per
+    row; the last failure marks the row failed."""
 
     def with_retries(row: dict) -> None:
         for attempt in range(retries + 1):
@@ -220,7 +215,19 @@ def best_effort_consumer(
                 if attempt == retries:
                     raise
 
-    transform = row_consumer(with_retries)
+    return row_consumer(with_retries)
+
+
+def best_effort_consumer(
+    name: str,
+    fn: Callable[[dict], None],
+    retries: int = 2,
+) -> Consumer:
+    """Retry each event up to ``retries`` times, then log-and-skip — never
+    blocks the stream (rpatterns/besteffort.go:16-63). Failures are
+    counted in stats; successes/failures both advance the cursor."""
+
+    transform = _retrying_rows(fn, retries)
     consumer = Consumer(name=name, fn=lambda df, meta: None)
 
     def consume_batch(df: DataFrame, meta: dict) -> None:
@@ -245,16 +252,7 @@ def dead_letter_consumer(
     MERGE analogue of rsql/db.go:300-339 (read side dedups by key keeping
     the latest attempt)."""
 
-    def with_retries(row: dict) -> None:
-        for attempt in range(retries + 1):
-            try:
-                fn(row)
-                return
-            except Exception:
-                if attempt == retries:
-                    raise
-
-    transform = row_consumer(with_retries)
+    transform = _retrying_rows(fn, retries)
     consumer = Consumer(name=name, fn=lambda df, meta: None)
 
     def consume_batch(df: DataFrame, meta: dict) -> None:

@@ -29,6 +29,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import functions as F
 
+from reflex_spark.sources import commits
 from reflex_spark.sources.event_log import (
     NOOP_FOREIGN_ID,
     NOOP_TYPE,
@@ -490,10 +491,7 @@ def run_stream(
                 head = json.load(f)["head"]
         else:
             head = spec.log.head()
-            tmp = head_file + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({"head": head}, f)
-            os.replace(tmp, head_file)  # a crash mid-write leaves no head file
+            commits.replace_json(head_file, {"head": head})  # a crash mid-write leaves no head file
     stream_plan = getattr(spec.log, "stream_plan", spec.log.read_stream)
     stream = stream_plan(max_files_per_trigger=max_files_per_trigger)
     read_files = getattr(spec.log, "read_files", None)

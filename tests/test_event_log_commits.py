@@ -4,6 +4,8 @@ A local input is appended on the driver with pyarrow and a non-local one
 with a Spark write; both must store the same thing. ``run()`` polls small
 windows from the commit records on the driver and falls back to the Spark
 scan otherwise; both must deliver exactly the ids the cursor commits.
+Control files other modules keep (cursors, ledgers, claims) become visible
+through the same commit module.
 """
 
 from __future__ import annotations
@@ -11,6 +13,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 import sys
 import threading
 import time
@@ -24,7 +27,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from reflex_spark.sources import event_log
+from reflex_spark.sources import commits, event_log
 from reflex_spark.sources.commits import ConcurrentCommitError
 from reflex_spark.sources.event_log import EVENT_SCHEMA, EventLog
 from reflex_spark.sources.memory import EPOCH, make_events, seed_log
@@ -32,6 +35,7 @@ from reflex_spark.streaming import (
     Consumer,
     ErrHeadReached,
     ErrStopped,
+    FileCursorStore,
     MemCursorStore,
     Spec,
     StreamOptions,
@@ -653,3 +657,77 @@ def test_concurrent_handles_append_each_row_once(spark, tmp_path):
     assert len(stored) == len(_stored(EventLog(spark, path)))  # no row twice
     assert stored == {"seed": 1, **landed}
     assert len(set(stored.values())) == len(stored)  # no id twice
+
+
+def _torn_dump(obj, f, *args, **kwargs):
+    f.write('{"tor')
+    raise OSError("injected: crash mid-dump")
+
+
+def _failed_fsync(fd):
+    raise OSError("injected: fsync failed")
+
+
+_WRITE_FAILURES = pytest.mark.parametrize(
+    "fail", [(json, "dump", _torn_dump), (os, "fsync", _failed_fsync)], ids=["dump", "fsync"]
+)
+
+
+@_WRITE_FAILURES
+def test_replace_json_that_fails_keeps_the_old_file_and_no_temp(tmp_path, monkeypatch, fail):
+    """A replace that fails mid-dump or at its fsync leaves the previous
+    file whole and no temp file beside it."""
+    path = str(tmp_path / "control.json")
+    commits.replace_json(path, {"v": 1})
+    with monkeypatch.context() as m:
+        m.setattr(*fail)
+        with pytest.raises(OSError, match="injected"):
+            commits.replace_json(path, {"v": 2})
+    with open(path) as f:
+        assert json.load(f) == {"v": 1}
+    assert os.listdir(tmp_path) == ["control.json"]
+    commits.replace_json(path, {"v": 2})
+    with open(path) as f:
+        assert json.load(f) == {"v": 2}
+
+
+@_WRITE_FAILURES
+def test_file_cursor_store_set_that_fails_keeps_the_previous_cursor(tmp_path, monkeypatch, fail):
+    """A cursor set is durable: one whose write fails, mid-dump or at the
+    fsync, raises and keeps the previous cursor, and the store's directory
+    holds only cursor files."""
+    store = FileCursorStore(str(tmp_path / "cursors"))
+    store.set_cursor("c", 5)
+    with monkeypatch.context() as m:
+        m.setattr(*fail)
+        with pytest.raises(OSError, match="injected"):
+            store.set_cursor("c", 9)
+    assert FileCursorStore(store.path).get_cursor("c") == 5
+    assert os.listdir(store.path) == ["c.json"]
+
+
+def test_writer_claim_refuses_a_second_writer_until_released(tmp_path):
+    """The refusal names the claim file, its holder and its age; release
+    lets the next writer in and ignores a claim already gone."""
+    claim = commits.WriterClaim(str(tmp_path / "_writer.claim"), "the test writer")
+    with claim:
+        with pytest.raises(ValueError, match=r'_writer\.claim \(holder .*"pid": \d+.*age \d+s\): the test writer is single-writer'):
+            claim.acquire()
+    assert os.listdir(tmp_path) == []
+    claim.acquire()
+    claim.release()
+    claim.release()
+
+
+def test_only_the_commit_module_makes_control_files_visible():
+    """fsync, exclusive creates, temp files, hard links and symlinks are
+    the means by which a control file becomes visible; only
+    ``sources/commits.py`` uses them."""
+    pkg = os.path.join(os.path.dirname(__file__), "..", "reflex_spark")
+    means = re.compile(r"os\.fsync|os\.O_EXCL|tempfile\.mkstemp|os\.link\(|os\.symlink\(")
+    users = set()
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        with open(path, encoding="utf-8") as f:
+            if means.search(f.read()):
+                users.add(os.path.relpath(path, pkg))
+    assert users == {os.path.join("sources", "commits.py")}

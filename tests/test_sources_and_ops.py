@@ -1278,7 +1278,7 @@ def test_poll_path_blob_index_is_jvm_side_under_cap(spark, tmp_path):
 
 
 def test_ivf_index_maintenance_is_single_writer(spark, tmp_path):
-    """append/maybe_split take an exclusive O_EXCL claim: the ledger is
+    """append/maybe_split take an exclusive claim: the ledger is
     read-modify-write and a split swaps partition dirs from a snapshot
     listing, so a second concurrent maintainer must refuse loudly (and a
     crashed writer's stale claim keeps refusing until removed)."""

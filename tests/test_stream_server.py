@@ -8,6 +8,7 @@ import time
 
 import pytest
 
+from reflex_spark.sources.event_log import EventLog, local_events
 from reflex_spark.sources.memory import EPOCH, make_events, seed_log
 from reflex_spark.sources.stream_server import (
     StreamClient,
@@ -177,4 +178,32 @@ def test_stream_server_drops_a_stream_whose_client_went_away(spark, tmp_path, mo
         assert server.sent_count < 8000
     finally:
         server.stop()
+    assert errors == []
+
+
+def test_stream_server_stop_drops_a_client_that_stopped_reading(spark, tmp_path, monkeypatch):
+    """A client that reads one event and then stops reading, without
+    closing, leaves its stream blocked on the full send buffer, short of
+    run()'s stop check. stop() still returns with no server thread alive:
+    the blocked write is broken and the stream is dropped quietly."""
+    n = 2000  # ~4 KB each: the unread stream exceeds the loopback buffers
+    log = EventLog(spark, str(tmp_path / "log"))
+    log.append(local_events(spark, [1] * n, [str(i) for i in range(n)], [EPOCH] * n, [b"m" * 4096] * n))
+    errors = []
+    monkeypatch.setattr(threading, "excepthook", errors.append)
+    server = StreamServer(log, batch_limit=500)
+    client = StreamClient(*server.address)
+    try:
+        assert client.recv()["event_id"] == 1
+        sent, deadline = -1, time.monotonic() + 60
+        while server.sent_count != sent and time.monotonic() < deadline:
+            sent = server.sent_count
+            time.sleep(1.0)
+        assert 0 < sent < n  # blocked on the client, not done
+        server.stop()
+        assert not server._accept.is_alive()
+        assert not any(t.is_alive() for t in server._threads)
+    finally:
+        server.stop()
+        client.close()
     assert errors == []
