@@ -34,11 +34,8 @@ from reflex_spark.queries import query
 from reflex_spark.queries.helpers import sql_dsum
 from reflex_spark.streaming import Consumer, ErrHeadReached, MemCursorStore, Spec, StreamOptions, run
 from reflex_spark.streaming.materialize import MaterializedCounts
-from reflex_spark.streaming.run import run_stream
-from reflex_spark.streaming.statestore import (
-    python_state_floor,
-    scaled_stream_shuffle,
-)
+from reflex_spark.streaming.run import run_query, run_stream
+from reflex_spark.streaming.statestore import python_state_floor
 from reflex_spark.tables import load_tables
 
 
@@ -413,26 +410,8 @@ def stream_watermark_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # constant at 100 TB. scaled_stream_shuffle derives the count from
         # the log's size (one partition per ~32 MB, capped at 4x cluster
         # width) and restores the session conf after the run.
-        with scaled_stream_shuffle(spark, log.read()):
-            q = (
-                agg.writeStream.outputMode("update")
-                .foreachBatch(merge)
-                .option("checkpointLocation", f"{base}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-        if q.isActive:
-            # Mirror run_stream (commit 6cd5e04): a query still active after
-            # the deadline means the rollup is PARTIAL — raise, never return
-            # partial results that would surface as a confusing hash mismatch.
-            q.stop()
-            raise TimeoutError(
-                "stream_watermark_rollup: availableNow query did not finish "
-                "within 120s; results would be partial"
-            )
-        if q.exception() is not None:
-            raise q.exception()
+        writer = agg.writeStream.outputMode("update").foreachBatch(merge)
+        run_query(spark, writer, f"{base}/ckpt", "stream_watermark_rollup", 120, log.read())
         out = sink.latest_per_key(["window_start"], ["n_events", "sum_value"])
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -755,23 +734,9 @@ def stream_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         # state fn is per-group Python — one partition would serialize
         # every group through a single worker (see python_state_floor —
         # cores-derived, r17).
-        with scaled_stream_shuffle(spark, ev, floor=python_state_floor(spark)):
-            q = (
-                agg.writeStream.outputMode("update")
-                .foreachBatch(sink.writer())
-                .option("checkpointLocation", f"{base}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(
-                "stream_stateful_sessions: availableNow query did not finish "
-                "within 120s; results would be partial"
-            )
-        if q.exception() is not None:
-            raise q.exception()
+        writer = agg.writeStream.outputMode("update").foreachBatch(sink.writer())
+        floor = python_state_floor(spark)
+        run_query(spark, writer, f"{base}/ckpt", "stream_stateful_sessions", 120, ev, floor=floor)
         return sink.latest_per_key(["user_id"], ["n_sessions", "n_events"])
     finally:
         parts.unpersist()  # idempotent; covers the exception path too
@@ -1014,20 +979,8 @@ def blob_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # data-sized state partitioning (see statestore module note);
         # deterministic across both phases, so the checkpoint-pinned
         # count the resumed phase restores matches what it derives
-        with scaled_stream_shuffle(spark, ev):
-            q = (
-                agg.writeStream.outputMode("update")
-                .foreachBatch(merge)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError("blob_stream_rollup phase did not finish in 120s")
-        if q.exception() is not None:
-            raise q.exception()
+        writer = agg.writeStream.outputMode("update").foreachBatch(merge)
+        run_query(spark, writer, ckpt, "blob_stream_rollup", 120, ev)
 
     try:
         run_phase(ev.where(F.col("day") <= cut))
@@ -1127,22 +1080,8 @@ def stream_dedup_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (r11: state-store commit cost scales with store count; r16:
         # derived from the log's size instead of a hard-coded 8 — at
         # 100 TB the same formula sizes UP with data volume).
-        with scaled_stream_shuffle(spark, log.read()):
-            q = (
-                deduped.writeStream.foreachBatch(merge)
-                .option("checkpointLocation", f"{base}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(
-                "stream_dedup_rollup: availableNow query did not finish "
-                "within 120s; results would be partial"
-            )
-        if q.exception() is not None:
-            raise q.exception()
+        writer = deduped.writeStream.foreachBatch(merge)
+        run_query(spark, writer, f"{base}/ckpt", "stream_dedup_rollup", 120, log.read())
         label_of = {code: lbl for lbl, code in code_of.items()}
         decode = F.create_map(
             *[F.lit(x) for code, lbl in sorted(label_of.items()) for x in (code, lbl)]
@@ -1250,22 +1189,8 @@ def stream_stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFram
         # join-state stores per batch x the partition count — derived from
         # the log size (r11 measured commit cost scaling with store count;
         # r16 replaced the hard-coded 8 with the size-derived count).
-        with scaled_stream_shuffle(spark, clog.read()):
-            q = (
-                joined.writeStream.foreachBatch(merge)
-                .option("checkpointLocation", f"{base}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(180)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(
-                "stream_stream_join_attribution: availableNow query did "
-                "not finish within 180s; results would be partial"
-            )
-        if q.exception() is not None:
-            raise q.exception()
+        writer = joined.writeStream.foreachBatch(merge)
+        run_query(spark, writer, f"{base}/ckpt", "stream_stream_join_attribution", 180, clog.read())
         out = sink.sum_per_key(["user_id"], {"n_pairs": "n"})
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -1435,23 +1360,8 @@ def stream_cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             # size the per-batch MERGE shuffles to the feed (statestore
             # module note); the stream itself is stateless, but every
             # foreachBatch merge pays the batch-side shuffle count
-            with scaled_stream_shuffle(spark, log.read()):
-                q = (
-                    log.read_stream(max_files_per_trigger=1)
-                    .writeStream.foreachBatch(apply_scd2)
-                    .option("checkpointLocation", f"{base_dir}/ckpt")
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination(timeout)
-            if q.isActive:
-                q.stop()
-                raise TimeoutError(
-                    "stream_cdc_scd2_history: availableNow query did not "
-                    f"finish within {timeout}s; results would be partial"
-                )
-            if q.exception() is not None:
-                raise q.exception()
+            writer = log.read_stream(max_files_per_trigger=1).writeStream.foreachBatch(apply_scd2)
+            run_query(spark, writer, f"{base_dir}/ckpt", "stream_cdc_scd2_history", timeout, log.read())
 
         run_phase(120)
         n_phase_a = len(data_batches)
@@ -1622,22 +1532,8 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "leftOuter",
         ).select("c_user", "p_user")
         # data-sized join-state partitioning (see statestore module note)
-        with scaled_stream_shuffle(spark, clog.read()):
-            q = (
-                joined.writeStream.foreachBatch(merge)
-                .option("checkpointLocation", f"{base}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(240)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(
-                "stream_stream_left_join: availableNow query did not "
-                "finish within 240s; results would be partial"
-            )
-        if q.exception() is not None:
-            raise q.exception()
+        writer = joined.writeStream.foreachBatch(merge)
+        run_query(spark, writer, f"{base}/ckpt", "stream_stream_left_join", 240, clog.read())
         # watermark-timing probe, resolved from the sink's batch ids
         # (distributed min/max over the rows that carried null padding)
         null_batches = sorted(
@@ -1776,23 +1672,8 @@ def stream_bottomk_quantiles_rollup(spark: SparkSession, sf_dir: str) -> DataFra
         )
         log.append(canon.where(F.col("__oid") > t2).drop("__oid"))
         # size the per-batch shuffles to the data (statestore module note)
-        with scaled_stream_shuffle(spark, log.read()):
-            q = (
-                log.read_stream(max_files_per_trigger=1)
-                .writeStream.foreachBatch(merge)
-                .option("checkpointLocation", f"{base}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(
-                "stream_bottomk_quantiles_rollup: availableNow query did "
-                "not finish within 120s; results would be partial"
-            )
-        if q.exception() is not None:
-            raise q.exception()
+        writer = log.read_stream(max_files_per_trigger=1).writeStream.foreachBatch(merge)
+        run_query(spark, writer, f"{base}/ckpt", "stream_bottomk_quantiles_rollup", 120, log.read())
     finally:
         shutil.rmtree(base, ignore_errors=True)
     if len(n_batches) != 3:
@@ -1950,22 +1831,8 @@ def stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "fullOuter",
         ).select("c_user", "p_user")
         # data-sized join-state partitioning (see statestore module note)
-        with scaled_stream_shuffle(spark, clog.read()):
-            q = (
-                joined.writeStream.foreachBatch(merge)
-                .option("checkpointLocation", f"{base}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(240)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(
-                "stream_stream_full_join: availableNow query did not "
-                "finish within 240s; results would be partial"
-            )
-        if q.exception() is not None:
-            raise q.exception()
+        writer = joined.writeStream.foreachBatch(merge)
+        run_query(spark, writer, f"{base}/ckpt", "stream_stream_full_join", 240, clog.read())
         # watermark-timing probe per side, from the sink's batch ids
         sunk = sink.read()
         click_null_batches = sorted(
@@ -2107,23 +1974,8 @@ def stream_hll_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pair in ((0, 1), (1, 2), (2, 0)):
             log.append(canon.where(F.col("__res").isin(*pair)).drop("__res"))
         # size the per-batch shuffles to the data (statestore module note)
-        with scaled_stream_shuffle(spark, log.read()):
-            q = (
-                log.read_stream(max_files_per_trigger=1)
-                .writeStream.foreachBatch(merge)
-                .option("checkpointLocation", f"{base}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(
-                "stream_hll_distinct_rollup: availableNow query did not "
-                "finish within 120s; results would be partial"
-            )
-        if q.exception() is not None:
-            raise q.exception()
+        writer = log.read_stream(max_files_per_trigger=1).writeStream.foreachBatch(merge)
+        run_query(spark, writer, f"{base}/ckpt", "stream_hll_distinct_rollup", 120, log.read())
     finally:
         shutil.rmtree(base, ignore_errors=True)
     if len(n_batches) != 3:
@@ -2268,22 +2120,8 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
             .select(F.col("foreign_id").cast("long").alias("user_id"))
         )
         # data-sized state partitioning (see statestore module note)
-        with scaled_stream_shuffle(spark, log.read()):
-            q = (
-                dd.writeStream.foreachBatch(sink.writer())
-                .option("checkpointLocation", f"{base}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(180)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(
-                "stream_dedup_within_watermark: availableNow query did not "
-                "finish within 180s; results would be partial"
-            )
-        if q.exception() is not None:
-            raise q.exception()
+        writer = dd.writeStream.foreachBatch(sink.writer())
+        run_query(spark, writer, f"{base}/ckpt", "stream_dedup_within_watermark", 180, log.read())
         got = (
             sink.read()
             .groupBy("user_id")
@@ -2395,23 +2233,8 @@ def stream_static_enrich_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         # data-sized state partitioning (see statestore module note)
-        with scaled_stream_shuffle(spark, log.read()):
-            q = (
-                enriched.writeStream.outputMode("update")
-                .foreachBatch(sink.writer())
-                .option("checkpointLocation", f"{base}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(180)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(
-                "stream_static_enrich_rollup: availableNow query did not "
-                "finish within 180s; results would be partial"
-            )
-        if q.exception() is not None:
-            raise q.exception()
+        writer = enriched.writeStream.outputMode("update").foreachBatch(sink.writer())
+        run_query(spark, writer, f"{base}/ckpt", "stream_static_enrich_rollup", 180, log.read())
         store = spark._jsparkSession.sharedState().statusStore()
         execs = store.executionsList()
         pinned = False
@@ -2748,23 +2571,8 @@ def stream_dim_pinning_contrast(spark: SparkSession, sf_dir: str) -> DataFrame:
         # size the per-batch aggregate shuffles to the data (the house
         # state-store sizing rule, §29, r16 scale-adaptive form — a plain
         # driver session defaults to 200)
-        with scaled_stream_shuffle(spark, log.read()):
-            q = (
-                log.read_stream(max_files_per_trigger=1)
-                .writeStream.foreachBatch(enrich_both)
-                .option("checkpointLocation", f"{base}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(180)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(
-                "stream_dim_pinning_contrast: availableNow query did not "
-                "finish within 180s"
-            )
-        if q.exception() is not None:
-            raise q.exception()
+        writer = log.read_stream(max_files_per_trigger=1).writeStream.foreachBatch(enrich_both)
+        run_query(spark, writer, f"{base}/ckpt", "stream_dim_pinning_contrast", 180, log.read())
         emitted = sink.read()
         if emitted.select("__bid").distinct().count() < 3:
             raise AssertionError("expected 3 micro-batches")
@@ -3125,23 +2933,8 @@ def blob_sink_stream_producer_rollup(spark: SparkSession, sf_dir: str) -> DataFr
             ).mode("append").save()
 
         # size the per-batch shuffles to the data (statestore module note)
-        with scaled_stream_shuffle(spark, log.read()):
-            q = (
-                log.read_stream(max_files_per_trigger=1)
-                .writeStream.foreachBatch(publish)
-                .option("checkpointLocation", f"{base}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(
-                "blob_sink_stream_producer_rollup: availableNow query did "
-                "not finish within 120s; results would be partial"
-            )
-        if q.exception() is not None:
-            raise q.exception()
+        writer = log.read_stream(max_files_per_trigger=1).writeStream.foreachBatch(publish)
+        run_query(spark, writer, f"{base}/ckpt", "blob_sink_stream_producer_rollup", 120, log.read())
 
         with open(f"{bucket}/_SUCCESS", encoding="utf-8") as f:
             manifest = _json.load(f)["blobs"]

@@ -15,8 +15,14 @@
   whole behind an atomically replaced symlink. ``EventLog.compact`` and
   ``MaterializedCounts``.
 
-Writers move their data files into place themselves; one of the above
-makes them visible.
+EventLog moves its data files into place with ``move_in``; other writers
+move theirs themselves. One of the above makes them visible.
+
+Each publish is durable when it returns: a file is fsynced before it is
+linked, renamed or swapped into place, and the directory that gains it
+right after. So a record never names a data file a power loss can take,
+and a record is on disk a directory fsync after it becomes visible, well
+before a consumer can deliver it and fsync a cursor past it.
 
 An EventLog record ``{seq, min_id, max_id, files, commit_ts}`` at
 ``_commits/<seq:08d>.json`` names the data files (relative to the log)
@@ -56,32 +62,78 @@ def link_exclusive(src: str, dest: str) -> None:
         raise ConcurrentCommitError(f"{dest} was published by another writer") from None
 
 
-def publish_exclusive(path: str, obj) -> None:
-    """Publish ``obj`` as JSON at ``path`` unless something is there
-    already (then ConcurrentCommitError, and nothing changes)."""
-    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), prefix=".", suffix=".tmp")
+def _fsync(path: str) -> None:
+    """fsync the file or directory at ``path``."""
+    fd = os.open(path, os.O_RDONLY)
     try:
-        with os.fdopen(fd, "w") as f:
-            json.dump(obj, f)
-        link_exclusive(tmp, path)  # the commit point
+        os.fsync(fd)
     finally:
-        os.unlink(tmp)
+        os.close(fd)
 
 
-def replace_json(path: str, obj) -> None:
-    """Write ``obj`` as JSON at ``path``, replacing any file there. Readers
-    see the old file or the whole new one; the new one is fsynced before
-    the rename, and the temp file is removed on any error."""
+def _fsync_tree(root: str) -> None:
+    """fsync every file and directory under ``root``, then ``root``."""
+    for d, _dirs, files in os.walk(root, topdown=False):
+        for name in files:
+            _fsync(os.path.join(d, name))
+        _fsync(d)
+
+
+def _durable_temp(path: str, obj) -> str:
+    """``obj`` as JSON in a hidden temp file beside ``path``, fsynced; the
+    temp file is removed on any error."""
     fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), prefix=".", suffix=".tmp")
     try:
         with os.fdopen(fd, "w") as f:
             json.dump(obj, f)
             f.flush()
             os.fsync(f.fileno())
+    except BaseException:
+        os.unlink(tmp)
+        raise
+    return tmp
+
+
+def publish_exclusive(path: str, obj) -> None:
+    """Publish ``obj`` as JSON at ``path`` unless something is there
+    already (then ConcurrentCommitError, and nothing changes). The file is
+    fsynced before it is linked, and its directory right after."""
+    tmp = _durable_temp(path, obj)
+    try:
+        link_exclusive(tmp, path)  # the commit point
+    finally:
+        os.unlink(tmp)
+    _fsync(os.path.dirname(path))
+
+
+def replace_json(path: str, obj) -> None:
+    """Write ``obj`` as JSON at ``path``, replacing any file there. Readers
+    see the old file or the whole new one; the new one is fsynced before
+    the rename and its directory right after, and the temp file is removed
+    on any error."""
+    tmp = _durable_temp(path, obj)
+    try:
         os.replace(tmp, path)  # the commit point
     except BaseException:
         os.unlink(tmp)
         raise
+    _fsync(os.path.dirname(path))
+
+
+def move_in(staged: str, root: str, files: list[str]) -> None:
+    """Rename each of ``files`` (paths relative to ``staged``) to the same
+    path under ``root``, durably: each file is fsynced before its rename,
+    and ``root`` and every directory a file lands in after the renames, so
+    a record published next never names a file a power loss can take."""
+    dirs = {root}
+    for f in files:
+        src, dest = os.path.join(staged, f), os.path.join(root, f)
+        _fsync(src)
+        os.makedirs(os.path.dirname(dest), exist_ok=True)
+        os.rename(src, dest)
+        dirs.add(os.path.dirname(dest))
+    for d in sorted(dirs, reverse=True):  # subdirectories before root
+        _fsync(d)
 
 
 class WriterClaim:
@@ -123,7 +175,9 @@ class WriterClaim:
 def publish(dirpath: str, seq: int, min_id: int, max_id: int, files: list[str]) -> None:
     """Publish EventLog record ``seq``; ConcurrentCommitError when another
     writer published that seq first."""
-    os.makedirs(dirpath, exist_ok=True)
+    if not os.path.isdir(dirpath):
+        os.makedirs(dirpath, exist_ok=True)
+        _fsync(os.path.dirname(dirpath))
     rec = {"seq": seq, "min_id": min_id, "max_id": max_id, "files": files, "commit_ts": time.time()}
     publish_exclusive(os.path.join(dirpath, f"{seq:08d}.json"), rec)
 
@@ -152,11 +206,14 @@ def swap_generation(path: str, write: Callable[[str], None]) -> None:
     sibling ``<path>.data.<id>``, the symlink at ``path`` is replaced to
     point at it, and every other ``<path>.data.*`` (the superseded
     generation, any a crash left unpublished) is removed. Converting a
-    plain directory leaves ``path`` absent for a moment: quiesce readers."""
+    plain directory leaves ``path`` absent for a moment: quiesce readers.
+    The new generation's files and directories are fsynced before the
+    swap, and ``parent`` after it."""
     parent, name = os.path.split(os.path.abspath(path))
     prefix = f"{name}.data."
     gen = prefix + uuid.uuid4().hex
     write(os.path.join(parent, gen))
+    _fsync_tree(os.path.join(parent, gen))
     link = os.path.join(parent, f".{name}.lnk")
     if os.path.lexists(link):
         os.remove(link)  # left by a crashed swap
@@ -164,6 +221,7 @@ def swap_generation(path: str, write: Callable[[str], None]) -> None:
     if os.path.isdir(path) and not os.path.islink(path):
         os.rename(path, os.path.join(parent, prefix + uuid.uuid4().hex))
     os.replace(link, path)  # the commit point
+    _fsync(parent)
     for d in os.listdir(parent):
         if d.startswith(prefix) and d != gen:
             shutil.rmtree(os.path.join(parent, d), ignore_errors=True)

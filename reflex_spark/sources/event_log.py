@@ -14,9 +14,9 @@ Reference parity (SURVEY.md §1.1-§1.2):
 One commit step for every writer (``EventLog._commit``): ``append`` (both
 paths), ``fill_noops`` and ``compact`` stage their data files under
 ``<log>/_staging/`` (the ``_`` prefix hides them from Spark's listing,
-DuckDB ``part-*`` globs and ``_snapshot``), stamp them with the logical
-mtime of the highest id they hold, then, under the handle's commit lock,
-rename them into place and publish one commit record
+DuckDB ``part-*`` globs and ``_snapshot``), then, under the handle's
+commit lock, stamp them one logical second past the previous commit's
+files, move them durably into place and publish one commit record
 ``_commits/<seq>.json`` = ``{seq, min_id, max_id, files, commit_ts}``
 (``sources.commits``). ``seq`` is always one past the log's last record,
 across compactions too. A crash before the rename leaves only invisible
@@ -291,9 +291,9 @@ def _read_events(path: str) -> pa.Table:
 
 
 #: Logical-mtime epoch of commit order (2001-09-09; any fixed epoch works —
-#: FileStreamSource ages files relative to the NEWEST file in the
-#: directory, not the wall clock, so a fixed base plus seconds-apart
-#: offsets never trips maxFileAge).
+#: FileStreamSource ages files relative to the NEWEST file it has seen, not
+#: the wall clock, so a fixed base plus seconds-apart offsets never trips
+#: maxFileAge).
 _MTIME_BASE = 1_000_000_000
 
 
@@ -303,11 +303,28 @@ def stamp_commit_order(paths, seq: int) -> None:
     Structured Streaming's file source processes files oldest-mtime first,
     so files stamped with strictly increasing ``seq`` replay in that order
     whatever the filesystem clock recorded — no ``sleep`` between writes,
-    and robust on coarse-mtime filesystems. The commit step passes the
-    highest id a commit holds, so file order == id order."""
+    and robust on coarse-mtime filesystems. The commit step passes one
+    past the previous commit's stamp (``_next_stamp``), so file order ==
+    id order."""
     t = float(_MTIME_BASE + seq)
     for p in paths:
         os.utime(p, (t, t))
+
+
+def _next_stamp(root: str, records: list[dict]) -> int:
+    """The ``stamp_commit_order`` seq of the next commit to a log whose
+    records are ``records``: one second past the mtime of the last
+    record's files, whatever stamped them, or 1 for the first commit.
+
+    One second per commit, not the commit's highest id: ext4 clamps any
+    mtime above 15032385535 (year 2446), so id-valued stamps would collide
+    past about 1.4e10 ids and the file source would fall back to path
+    order. Counting on from the previous stamp keeps a log stamped the old
+    way monotone too: a file stamped more than maxFileAge (7 days) behind
+    a stream's newest file is never read."""
+    if not records:
+        return 1
+    return int(os.path.getmtime(os.path.join(root, records[-1]["files"][0]))) - _MTIME_BASE + 1
 
 
 def _staging_dir(root: str) -> str:
@@ -499,11 +516,12 @@ class EventLog:
         return staged
 
     def _commit(self, staged: str, min_id: int, max_id: int, root: str | None = None, append: bool = False) -> None:
-        """The commit step of every writer. Stamp the data files staged
-        under ``staged`` at the logical mtime of ``max_id``; then, under the
-        commit lock, rename them into ``root`` (default: the log) at the
-        same relative paths and publish their record, whose seq is one past
-        the log's last record; then drop the staging directory.
+        """The commit step of every writer. Under the commit lock, stamp
+        the data files staged under ``staged`` one logical second past the
+        previous commit (``_next_stamp``), move them durably into ``root``
+        (default: the log) at the same relative paths and publish their
+        record, whose seq is one past the log's last record; then drop the
+        staging directory.
 
         An ``append`` whose ids a published record already holds renames
         nothing in. One that loses its seq to another handle between the
@@ -511,15 +529,12 @@ class EventLog:
         Either clears the head cache and raises ConcurrentCommitError."""
         root = root or self.path
         files = sorted(_visible_files(staged))
-        stamp_commit_order([os.path.join(staged, f) for f in files], max_id)
         with self._commit_lock:
             records = commits.read_records(self._commits_dir, self._records)
             lost = append and any(r["max_id"] >= min_id for r in records)
             if not lost:
-                for f in files:
-                    dest = os.path.join(root, f)
-                    os.makedirs(os.path.dirname(dest), exist_ok=True)
-                    os.rename(os.path.join(staged, f), dest)
+                stamp_commit_order([os.path.join(staged, f) for f in files], _next_stamp(self.path, records))
+                commits.move_in(staged, root, files)
                 seq = records[-1]["seq"] + 1 if records else 0
                 try:
                     commits.publish(os.path.join(root, commits.COMMITS_DIR), seq, min_id, max_id, files)
@@ -753,8 +768,8 @@ class EventLog:
         OPTIMIZE).
 
         Swap protocol: the rewrite goes through the commit step into a new
-        generation of the log — stamped at the logical mtime of its highest
-        id, so later appends keep sorting after it, and with one record
+        generation of the log — stamped one logical second past the last
+        commit, so later appends keep sorting after it, and with one record
         covering every id (out-of-band files are adopted) whose seq
         continues the log's — published by ``commits.swap_generation``:
         the symlink at ``self.path`` is replaced atomically, so concurrent

@@ -10,6 +10,9 @@
   cursor. ``Trigger.AvailableNow`` ≈ to-head, default trigger ≈ follow.
   Small micro-batches are read on the driver, as ``run()`` reads small
   poll windows.
+- ``run_query(...)`` — one streaming query from start to stop, the one
+  place a query is started and awaited: ``run_stream`` and the judged
+  stream queries run through it.
 - ``run_forever`` — supervision loop (rpatterns/run.go:16-36): retry with
   backoff, 100ms for expected errors, longer otherwise.
 """
@@ -38,6 +41,7 @@ from reflex_spark.sources.event_log import (
     local_batch,
     without_noops,
 )
+from reflex_spark.streaming import statestore
 from reflex_spark.streaming.consumer import Consumer
 from reflex_spark.streaming.cursors import CursorStore
 
@@ -402,9 +406,12 @@ def _local_checkpoint_manager(spark, checkpoint_dir: str):
     builds its log on the stream thread, after ``start()`` may have
     returned. Each previous value is restored on exit, error or not.
 
-    While the block runs, other Spark work on the same session reads and
-    writes ``file:`` paths through an uncached ``RawLocalFileSystem`` too,
-    and writes no ``.crc`` files."""
+    ``run_query`` applies it to every streaming query it runs: ``run_stream``
+    and the judged stream queries, whose state stores (stateful operators)
+    and foreachBatch sinks (parquet written by Spark) therefore also go
+    through this file system. While the block runs, other Spark work on the
+    same session reads and writes ``file:`` paths through an uncached
+    ``RawLocalFileSystem`` too, and writes no ``.crc`` files."""
     if _local_dir(checkpoint_dir) is None:
         yield
         return
@@ -447,12 +454,11 @@ def run_stream(
     consumer that reads the rows through ``arrow_of``. Any other
     micro-batch (a raw out-of-band file, a bigger batch, a partitioned
     log's with its ``event_date`` column) gets the same filters in Spark
-    and is handed over as Spark reads it. A local checkpoint's log
-    directories are created up front, and for the whole query, start to
-    stop, its files (the file source's log included) are written by the
-    FileSystem-based checkpoint manager on Hadoop's raw local file system,
-    with no ``.crc`` files (``_local_checkpoint_manager``); other Spark work
-    on the session during the run goes through that file system too.
+    and is handed over as Spark reads it. The query runs through
+    ``run_query``: a local checkpoint's files (the file source's log
+    included) are written by the FileSystem-based checkpoint manager on
+    Hadoop's raw local file system, with no ``.crc`` files, and a timed-out
+    ``available_now`` run raises TimeoutError.
 
     from_head (bootstrap): on the FIRST start the current head id is
     recorded in the checkpoint directory and events at or below it are
@@ -465,10 +471,10 @@ def run_stream(
     watermark (MaterializedCounts.apply_batch) would silently drop a
     lower-id batch delivered after a higher-id one. File order == id order
     holds by construction for every EventLog writer: the commit step
-    stamps a commit's files with the logical mtime of the highest id they
-    hold before renaming them in, and an unpartitioned append writes one
-    file. A raw out-of-band write into the log directory carries a
-    wall-clock mtime and breaks it; so would files of one commit with
+    stamps a commit's files one logical second past the previous commit's
+    before renaming them in, and an unpartitioned append writes one file.
+    A raw out-of-band write into the log directory carries a wall-clock
+    mtime and breaks it; so would files of one commit with
     interleaved ids (a partitioned append spanning dates) — key such a
     consumer's dedup on the delivered ids instead of the max-id
     watermark."""
@@ -477,12 +483,6 @@ def run_stream(
     local = _local_dir(checkpoint_dir)
     if opts.from_head and local is None:
         raise ValueError(f"run_stream(from_head=True) needs a local checkpoint, got {checkpoint_dir!r}")
-    if local is not None:
-        checkpoint_dir = local  # Spark and the handler read one directory
-        # Spark would create these through Hadoop's local file system,
-        # which forks a chmod for each directory it makes.
-        for logs in ("offsets", "commits", os.path.join("sources", "0")):
-            os.makedirs(os.path.join(local, logs), exist_ok=True)
     head = None
     if opts.from_head:
         head_file = os.path.join(local, "bootstrap_head.json")
@@ -491,6 +491,7 @@ def run_stream(
                 head = json.load(f)["head"]
         else:
             head = spec.log.head()
+            os.makedirs(local, exist_ok=True)
             commits.replace_json(head_file, {"head": head})  # a crash mid-write leaves no head file
     stream_plan = getattr(spec.log, "stream_plan", spec.log.read_stream)
     stream = stream_plan(max_files_per_trigger=max_files_per_trigger)
@@ -540,11 +541,6 @@ def run_stream(
                 time.sleep(wait)
         spec.consumer.consume(batch_df, {"batch_id": batch_id})
 
-    from reflex_spark.streaming.statestore import scaled_stream_shuffle
-
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
     # Size the per-batch shuffle count to the log (statestore module
     # note): any stateful operator downstream freezes one state store per
     # shuffle partition into the checkpoint, and foreachBatch's batch-side
@@ -553,21 +549,66 @@ def run_stream(
     # files' sizes, which are what Catalyst's estimate of ``read()`` sums.
     scan_bytes = getattr(spec.log, "scan_bytes", None)
     sizing = {"est_bytes": scan_bytes()} if scan_bytes else {"source_df": spec.log.read()}
+    return run_query(
+        spark,
+        stream.writeStream.foreachBatch(handle),
+        checkpoint_dir,
+        f"run_stream({spec.consumer.name})",
+        timeout_sec,
+        available_now=available_now,
+        **sizing,
+    )
+
+
+def run_query(
+    spark,
+    writer,
+    checkpoint: str,
+    name: str,
+    timeout_sec: float,
+    source_df=None,
+    *,
+    est_bytes: int | None = None,
+    floor: int = 1,
+    available_now: bool = True,
+):
+    """Run one streaming query from start to stop: the lifecycle every
+    streaming query in the package goes through, ``run_stream`` and the
+    judged stream queries alike.
+
+    ``writer`` is the query's ``writeStream`` with its sink (and output
+    mode) set; the checkpoint location and, for ``available_now``, the
+    availableNow trigger are set here. A schemeless or ``file:`` checkpoint
+    gets its log directories up front (Spark would create them through
+    Hadoop's local file system, which forks a ``chmod`` for each) and runs
+    under ``_local_checkpoint_manager``. The shuffle count is sized for the
+    whole run with ``scaled_stream_shuffle`` from ``source_df`` or
+    ``est_bytes``, at least ``floor``.
+
+    The query either consumes to head or raises: an availableNow query
+    still active after ``timeout_sec`` is stopped and raises TimeoutError
+    naming ``name`` (returning would hand the caller a partial result; the
+    checkpoint keeps at-least-once intact for a retry), and an exception
+    the query died of is re-raised. A follow-mode query (``available_now``
+    false) is stopped after ``timeout_sec``. Returns the stopped query."""
+    local = _local_dir(checkpoint)
+    if local is not None:
+        checkpoint = local
+        for logs in ("offsets", "commits", os.path.join("sources", "0")):
+            os.makedirs(os.path.join(local, logs), exist_ok=True)
+    writer = writer.option("checkpointLocation", checkpoint)
     if available_now:
         writer = writer.trigger(availableNow=True)
-    with scaled_stream_shuffle(spark, **sizing), _local_checkpoint_manager(spark, checkpoint_dir):
+    sized = statestore.scaled_stream_shuffle(spark, source_df=source_df, est_bytes=est_bytes, floor=floor)
+    with sized, _local_checkpoint_manager(spark, checkpoint):
         query = writer.start()
         query.awaitTermination(timeout_sec)
         if query.isActive:
             query.stop()
             if available_now:
-                # availableNow promises "consume to head then stop"; expiring
-                # the timeout mid-stream would silently hand callers a PARTIAL
-                # result (e.g. a rollup missing the tail batches). Fail loudly —
-                # the checkpoint keeps at-least-once intact for a retry.
                 raise TimeoutError(
-                    f"run_stream(available_now=True) timed out after {timeout_sec}s "
-                    "before reaching head; results would be partial"
+                    f"{name}: availableNow query did not finish within {timeout_sec}s; "
+                    "results would be partial"
                 )
     if query.exception() is not None:
         raise query.exception()

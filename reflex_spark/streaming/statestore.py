@@ -159,10 +159,11 @@ def scaled_stream_shuffle(
 ):
     """Run a streaming query under a data-sized shuffle-partition count.
 
-    Wrap the WHOLE stream lifetime (start + awaitTermination): the count is
-    captured into the checkpoint at the first batch, and foreachBatch's
-    batch-side jobs also run while the conf is set (their shuffles carry
-    the same micro-batch-sized data). The previous value is restored on
+    Wrap the WHOLE stream lifetime, start to stop, as ``run.run_query``
+    does for every streaming query: the count is captured into the
+    checkpoint at the first batch, and foreachBatch's batch-side jobs also
+    run while the conf is set (their shuffles carry the same
+    micro-batch-sized data). The previous value is restored on
     exit. Deterministic for a given source, so a query that restarts from
     its checkpoint (crash choreography) re-derives the same count."""
     n = stream_shuffle_partitions(spark, source_df, est_bytes=est_bytes, floor=floor)

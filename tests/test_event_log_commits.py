@@ -121,10 +121,10 @@ def test_append_paths_store_the_same_log(spark, tmp_path, monkeypatch):
             assert pf.schema.column(EVENT_SCHEMA.names.index("timestamp")).physical_type == "INT96"
             assert not pf.schema_arrow.field("event_id").nullable
             assert json.loads(pf.metadata.metadata[_ROW_METADATA]) == json.loads(EVENT_SCHEMA.json())
-        # the logical mtime of each append is BASE + the head it committed
+        # each append is stamped one logical second past the one before
         assert {os.path.getmtime(p) for p in _parts(log)} == {
-            float(event_log._MTIME_BASE + 12),
-            float(event_log._MTIME_BASE + 13),
+            float(event_log._MTIME_BASE + 1),
+            float(event_log._MTIME_BASE + 2),
         }
         got = duckdb.sql(
             f"SELECT event_id, foreign_id FROM read_parquet('{log.path}/part-*.parquet') ORDER BY 1"
@@ -717,6 +717,84 @@ def test_writer_claim_refuses_a_second_writer_until_released(tmp_path):
     claim.acquire()
     claim.release()
     claim.release()
+
+
+def _record_publish_calls(monkeypatch) -> list[tuple[str, str]]:
+    """Record each fsync (with the real path of its file descriptor),
+    link, rename and replace, in call order."""
+    calls: list[tuple[str, str]] = []
+    for name in ("link", "rename", "replace"):
+        real = getattr(os, name)
+
+        def recorded(src, dest, *a, _real=real, _name=name, **kw):
+            calls.append((_name, os.path.realpath(dest)))
+            return _real(src, dest, *a, **kw)
+
+        monkeypatch.setattr(os, name, recorded)
+    fsync = os.fsync
+
+    def recorded_fsync(fd):
+        calls.append(("fsync", os.readlink(f"/proc/self/fd/{fd}")))
+        return fsync(fd)
+
+    monkeypatch.setattr(os, "fsync", recorded_fsync)
+    return calls
+
+
+def test_a_publish_is_durable_in_order(spark, tmp_path, monkeypatch):
+    """Every publish fsyncs a file before it is renamed, linked or swapped
+    into place, and the directory that gains it right after: an append's
+    data file, then the log directory, then its record and the record
+    directory; a cursor file and its directory; a generation's files and
+    directories, then the directory of the swapped link."""
+    log = seed_log(spark, str(tmp_path / "log"), [(1, "a")])
+    root = os.path.realpath(log.path)
+    store = FileCursorStore(str(tmp_path / "cursors"))
+    store.set_cursor("c", 1)
+    batch = make_events(spark, [(2, "b")])
+    with monkeypatch.context() as m:
+        calls = _record_publish_calls(m)
+        log.append(batch)
+    staged = [c for c in calls if c[0] == "fsync" and "/_staging/" in c[1]]
+    assert len(staged) == 1 and staged[0][1].endswith(".parquet")
+    part = os.path.join(root, os.path.basename(staged[0][1]))
+    record = os.path.join(root, "_commits", "00000001.json")
+    temp = [c for c in calls if c[0] == "fsync" and c[1].startswith(os.path.join(root, "_commits", "."))]
+    assert calls == [
+        staged[0],
+        ("rename", part),
+        ("fsync", root),
+        *temp,
+        ("link", record),
+        ("fsync", os.path.join(root, "_commits")),
+    ]
+    assert len(temp) == 1
+
+    cursors = os.path.realpath(store.path)
+    with monkeypatch.context() as m:
+        calls = _record_publish_calls(m)
+        store.set_cursor("c", 2)
+    assert [c[0] for c in calls] == ["fsync", "replace", "fsync"]
+    assert calls[1:] == [("replace", os.path.join(cursors, "c.json")), ("fsync", cursors)]
+
+    def write(gen):
+        os.makedirs(os.path.join(gen, "sub"))
+        with open(os.path.join(gen, "sub", "f"), "w") as f:
+            f.write("x")
+
+    swapped = str(tmp_path / "swapped")
+    with monkeypatch.context() as m:
+        calls = _record_publish_calls(m)
+        commits.swap_generation(swapped, write)
+    gen = os.path.realpath(swapped)
+    parent = os.path.realpath(str(tmp_path))
+    assert calls == [
+        ("fsync", os.path.join(gen, "sub", "f")),
+        ("fsync", os.path.join(gen, "sub")),
+        ("fsync", gen),
+        ("replace", os.path.join(parent, "swapped")),
+        ("fsync", parent),
+    ]
 
 
 def test_only_the_commit_module_makes_control_files_visible():

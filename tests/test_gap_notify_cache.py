@@ -78,11 +78,12 @@ def test_gap_blocks_without_filler_and_fills_with(spark, tmp_path):
     noops = log.read().where("foreign_id = '0' AND event_type = 0").collect()
     assert [r["event_id"] for r in noops] == [4]
     # the fill went through the commit step: a record of exactly the
-    # filled id, naming a file stamped at its logical mtime
+    # filled id, naming a file stamped one logical second past the seed
+    # append's
     rec = json.load(open(max(glob.glob(os.path.join(log.path, "_commits", "*.json")))))
     assert (rec["min_id"], rec["max_id"]) == (4, 4)
     assert [os.path.getmtime(os.path.join(log.path, f)) for f in rec["files"]] == [
-        float(event_log._MTIME_BASE + 4)
+        float(event_log._MTIME_BASE + 2)
     ]
 
 

@@ -10,8 +10,10 @@ reference: ``DRIVER_WINDOW_ROWS = 0`` forces it for every micro-batch.
 from __future__ import annotations
 
 import contextlib
+import glob
 import importlib
 import os
+import re
 import time
 from datetime import datetime, timedelta
 
@@ -37,6 +39,7 @@ from reflex_spark.streaming.run import (
     _FS_CHECKPOINT_MANAGER,
     _LOCAL_CHECKPOINT_CONFS,
     _logged_files,
+    run_query,
     run_stream,
 )
 
@@ -461,3 +464,83 @@ def test_a_checkpoint_written_with_crc_files_resumes(spark, tmp_path, monkeypatc
     assert p.served == [True, True, True]
     assert _crc_files(ckpt) == written
     assert p.outcome()["watermark"] == 7
+
+
+def _runner_case(spark, tmp_path, name, batch, **run):
+    """``run_query`` over a one-append log's stream with ``batch`` as the
+    foreachBatch function; (its outcome, the session confs after it)."""
+    log = _log(spark, str(tmp_path / name), appends=1, noop_every=0)
+    try:
+        outcome = run_query(
+            spark, log.read_stream().writeStream.foreachBatch(batch), str(tmp_path / name / "ckpt"), name, **run
+        )
+    except Exception as exc:  # noqa: BLE001 — the outcome under test
+        outcome = exc
+    confs = {key: spark.conf.get(key, None) for key in (*_LOCAL_CHECKPOINT_CONFS, "spark.sql.shuffle.partitions")}
+    return outcome, confs
+
+
+def test_the_runner_stops_times_out_re_raises_and_restores_the_session(spark, tmp_path):
+    """An availableNow query past its timeout is stopped and raises
+    TimeoutError naming it; a follow-mode query is stopped at its timeout
+    and returned; an exception raised in foreachBatch is re-raised. After
+    each, the three checkpoint confs and the shuffle count are back."""
+    before = {**dict.fromkeys(_LOCAL_CHECKPOINT_CONFS), "spark.sql.shuffle.partitions": "7"}
+    old_partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try:
+        slow, confs = _runner_case(spark, tmp_path, "slow", lambda df, bid: time.sleep(2), timeout_sec=0.5)
+        assert isinstance(slow, TimeoutError) and "slow" in str(slow)
+        assert confs == before
+        assert not spark.streams.active
+
+        follow, confs = _runner_case(spark, tmp_path, "follow", lambda df, bid: None, timeout_sec=1, available_now=False)
+        assert not follow.isActive and follow.exception() is None
+        assert confs == before
+
+        def boom(df, bid):
+            raise RuntimeError("boom in foreachBatch")
+
+        failed, confs = _runner_case(spark, tmp_path, "failing", boom, timeout_sec=60)
+        assert "boom in foreachBatch" in str(failed)
+        assert confs == before
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old_partitions)
+
+
+def test_a_stateful_query_through_the_runner_writes_no_crc(spark, tmp_path):
+    """An update-mode aggregation run by ``run_query`` keeps its state
+    stores under the checkpoint, with no Hadoop ``.crc`` beside any file.
+    Spark's own checksum of each state file (``<file>.crc``, not hidden;
+    ``spark.sql.streaming.checkpoint.fileChecksum.enabled``) stays: Spark
+    verifies it on read."""
+    log = _log(spark, str(tmp_path), appends=2, noop_every=0)
+    counts: dict = {}
+
+    def keep(df, bid):
+        counts.update({r["foreign_id"]: r["n"] for r in df.collect()})
+
+    agg = log.read_stream(max_files_per_trigger=1).groupBy("foreign_id").agg(F.count(F.lit(1)).alias("n"))
+    ckpt = tmp_path / "ckpt"
+    run_query(spark, agg.writeStream.outputMode("update").foreachBatch(keep), str(ckpt), "stateful", 120, log.read())
+    assert sum(counts.values()) == 8
+    assert any(name.endswith(".delta") for _, _, names in os.walk(ckpt / "state") for name in names)
+    crc = _crc_files(ckpt)
+    assert [f for f in crc if os.path.basename(f).startswith(".")] == []
+    assert all(f.startswith("state/") and os.path.exists(ckpt / f[: -len(".crc")]) for f in crc)
+
+
+def test_only_the_runner_starts_and_awaits_a_streaming_query():
+    """A streaming writer's trigger and the wait on a query appear only in
+    ``streaming/run.py``, and the wait on one line: every query runs
+    through ``run_query``."""
+    pkg = os.path.join(os.path.dirname(__file__), "..", "reflex_spark")
+    means = re.compile(r"awaitTermination\(|\.trigger\(")
+    found = []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        with open(path, encoding="utf-8") as f:
+            for line in f:
+                for m in means.finditer(line):
+                    found.append((os.path.relpath(path, pkg), m.group()))
+    assert {p for p, _ in found} == {os.path.join("streaming", "run.py")}
+    assert [m for _, m in found].count("awaitTermination(") == 1

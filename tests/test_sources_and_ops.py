@@ -930,16 +930,18 @@ def test_stamp_commit_order_never_restamps_earlier_commits(spark, tmp_path):
             assert after[p] == big, f"{name}: earlier commit re-stamped"
         new = set(after) - set(first)
         assert new and all(
-            after[p] == float(_MTIME_BASE + 10) for p in new
-        ), f"{name}: new files carry this commit's logical mtime"
+            after[p] == big + 1 for p in new
+        ), f"{name}: new files carry this commit's logical mtime, one second past the last commit's"
 
 
 def test_stamp_commit_order_is_monotonic_across_appends(spark, tmp_path):
     """Three appends → three strictly increasing logical mtime groups
-    (BASE + head), so the file stream source replays them in commit
+    (BASE + 1, 2, 3), so the file stream source replays them in commit
     order regardless of filesystem clock granularity — for Spark-path
     (non-local input) and driver-path (local input) appends alike."""
     from reflex_spark.sources.memory import make_events
+
+    from reflex_spark.sources.event_log import _MTIME_BASE
 
     for name, as_input in (("spark", lambda df: df.repartition(2)), ("driver", lambda df: df)):
         log = EventLog(spark, str(tmp_path / name))
@@ -951,6 +953,34 @@ def test_stamp_commit_order_is_monotonic_across_appends(spark, tmp_path):
             seen |= fresh
             groups.append({os.path.getmtime(p) for p in fresh})
         assert max(groups[0]) < min(groups[1]) <= max(groups[1]) < min(groups[2]), name
+        assert groups == [{float(_MTIME_BASE + k)} for k in (1, 2, 3)], name
+
+
+def test_commit_stamps_stay_below_the_ext4_mtime_ceiling_past_2e10_ids(spark, tmp_path):
+    """ext4 clamps an mtime above 15032385535, so stamps valued by event id
+    would all read back equal past about 1.4e10 ids, and the file source
+    would order those commits by path. Appends to a log whose ids are past
+    2e10 (after a raw out-of-band file) get stamps below that ceiling that
+    increase strictly per commit, on both append paths."""
+    from reflex_spark.sources.event_log import EVENT_SCHEMA
+    from reflex_spark.sources.memory import EPOCH, make_events
+
+    ext4_max_mtime = 15_032_385_535
+    far = 20_000_000_000
+    for name, as_input in (("spark", lambda df: df.repartition(2)), ("driver", lambda df: df)):
+        log = EventLog(spark, str(tmp_path / name))
+        spark.createDataFrame([(far, 1, "raw", EPOCH, None, None)], EVENT_SCHEMA).write.parquet(log.path)
+        seen = _data_files(log.path)
+        stamps = []
+        for k in range(3):
+            head = log.append(as_input(make_events(spark, [(1, f"x{k}_{i}") for i in range(2)])))
+            fresh = _data_files(log.path) - seen
+            seen |= fresh
+            stamps.append({os.path.getmtime(p) for p in fresh})
+        assert head == far + 6, name
+        assert all(len(group) == 1 for group in stamps), name
+        flat = [min(group) for group in stamps]
+        assert flat[0] < flat[1] < flat[2] < ext4_max_mtime, name
 
 
 def test_compact_stamps_output_into_logical_mtime_domain(spark, tmp_path):
@@ -958,8 +988,8 @@ def test_compact_stamps_output_into_logical_mtime_domain(spark, tmp_path):
     real-clock mtimes (~1.7e9) that sort AFTER every logical stamp
     (BASE + seq ~ 1.0e9) — a file-source stream started after
     compact + append would replay the newer appends FIRST, breaking the
-    file-order == id-order contract. The compacted output is stamped at
-    BASE + head-at-compaction, so post-compaction appends keep sorting
+    file-order == id-order contract. The compacted output is stamped one
+    logical second past the last append, so post-compaction appends keep sorting
     strictly after it; ids and rows are kept and stay continuous; the
     head cache is invalidated defensively; the compacted log stays
     recorded."""
@@ -976,7 +1006,7 @@ def test_compact_stamps_output_into_logical_mtime_domain(spark, tmp_path):
     assert log._head_cache is None  # defensive invalidation
     assert rows() == before
     compacted = {p: os.path.getmtime(p) for p in _data_files(log.path)}
-    assert all(m == float(_MTIME_BASE + 8) for m in compacted.values())
+    assert all(m == float(_MTIME_BASE + 3) for m in compacted.values())
 
     log.append(make_events(spark, [(1, f"c{i}") for i in range(4)]))
     assert log.head() == 12  # ids continuous across compaction
