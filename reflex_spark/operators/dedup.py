@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from reflex_spark.tables import plan_bytes
+
 DEFAULT_SHINGLE = 3
 DEFAULT_NUM_HASHES = 16
 DEFAULT_BANDS = 4
@@ -84,10 +86,7 @@ def _spread_target(df: DataFrame, sweet_spot: int = 8, bytes_per_task: int = 32 
     task per ~32MB of input) up to 4× cluster parallelism. No count() job:
     the estimate comes free from the optimized plan's statistics."""
     para = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        est_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # stats unavailable (e.g. local relation oddities)
-        est_bytes = 0
+    est_bytes = plan_bytes(df) or 0  # no stats: the small-input sweet spot
     return _spread_target_for(est_bytes, para, sweet_spot, bytes_per_task)
 
 

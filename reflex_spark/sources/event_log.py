@@ -55,6 +55,7 @@ import threading
 import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
+from datetime import datetime, timezone
 
 import numpy as np
 import pyarrow as pa
@@ -628,12 +629,12 @@ class EventLog:
         """Insert one event (reference EventsTable.Insert,
         rsql/eventstable.go:226-246). Noop inserts are rejected like
         rsql/eventstable.go:231-233. The event goes in as a local
-        DataFrame, so ``append`` takes its driver path."""
+        DataFrame, so ``append`` takes its driver path. The default
+        ``timestamp`` is now, as an aware UTC datetime; a naive one is local
+        wall-clock time (``local_events``)."""
         if foreign_id == NOOP_FOREIGN_ID and event_type == NOOP_TYPE:
             raise ValueError("noop event insert not allowed")
-        from datetime import datetime, timezone
-
-        ts = timestamp or datetime.now(timezone.utc).replace(tzinfo=None)
+        ts = timestamp or datetime.now(timezone.utc)
         return self.append(local_events(self.spark, [event_type], [foreign_id], [ts], [metadata]))
 
     # -- consumer side ----------------------------------------------------
@@ -690,44 +691,26 @@ class EventLog:
 
     def listen_gaps(self, fn: Callable[[Gap], None]) -> None:
         """Register a gap listener (reference EventsTable.ListenGaps,
-        rsql/eventstable.go:289-304). The poll run loop calls
-        ``detect_gap``/``emit_gap`` when a dense read stalls; listeners
-        (e.g. the noop filler from ``sources.gapfill.fill_gaps``) unblock
-        the stream."""
+        rsql/eventstable.go:289-304). The poll run loop calls ``emit_gap``
+        when the window it read starts past its cursor; listeners (e.g. the
+        noop filler from ``sources.gapfill.fill_gaps``) unblock the
+        stream."""
         self._gap_listeners.append(fn)
 
     def emit_gap(self, gap: Gap) -> None:
         for fn in self._gap_listeners:
             fn(gap)
 
-    def detect_gap(self, after: int) -> Gap | None:
-        """Is the id right after ``after`` missing while later ids exist?
-
-        One ids-only agg (column-pruned, predicate pushed): the poll loop
-        calls this only when a dense read returns empty, so steady-state
-        polling pays nothing. All mid-window holes eventually become
-        holes-at-cursor (the loop consumes the dense prefix first), so
-        checking at the cursor is complete."""
-        row = (
-            self.read()
-            .where(F.col("event_id") > after)
-            .agg(F.min("event_id").alias("m"))
-            .collect()[0]
-        )
-        if row["m"] is not None and row["m"] > after + 1:
-            return Gap(prev=after, next=row["m"])
-        return None
-
     def missing_ids(self, gap: Gap) -> list[int]:
         """Ids in (prev, next) not yet committed (a writer may land files
-        during the filler's grace wait)."""
-        present = {
-            r["event_id"]
-            for r in self.read()
-            .where((F.col("event_id") > gap.prev) & (F.col("event_id") < gap.next))
-            .select("event_id")
-            .collect()
-        }
+        during the filler's grace wait). The present ids come from the
+        driver window after ``prev`` (``poll_window``), or from a Spark scan
+        where the log has none."""
+        rows = self.poll_window(gap.prev, gap.next - gap.prev - 1)
+        if rows is None:
+            inside = (F.col("event_id") > gap.prev) & (F.col("event_id") < gap.next)
+            rows = self.read().where(inside).select("event_id").toArrow()
+        present = set(rows["event_id"].to_pylist())
         return [i for i in range(gap.prev + 1, gap.next) if i not in present]
 
     def fill_noops(self, ids: list[int]) -> int:
@@ -745,9 +728,7 @@ class EventLog:
         fill = sorted(set(ids) & set(still_missing))
         if not fill:
             return 0
-        from datetime import datetime, timezone
-
-        ts = datetime.now(timezone.utc).replace(tzinfo=None)
+        ts = datetime.now(timezone.utc)
         df = self.spark.createDataFrame(
             [(i, NOOP_TYPE, NOOP_FOREIGN_ID, ts, None, None) for i in fill],
             EVENT_SCHEMA,

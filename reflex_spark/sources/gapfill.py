@@ -22,6 +22,9 @@ writes noops for the survivors via ``EventLog.fill_noops`` — which
 re-checks once more immediately before its commit, the analogue of the
 reference tolerating ErrDupEntry when a racing writer got there first
 (gapfill.go:86-90).
+Detection reads nothing more: ``run()`` emits ``Gap(cursor, first id)``
+from the window it polled. On a covered log the re-checks read the commit
+records' driver window, so an episode runs one Spark job, the noop write.
 """
 
 from __future__ import annotations

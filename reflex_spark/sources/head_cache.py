@@ -13,7 +13,9 @@ name, and a hit slices it, both with no Spark job. Recorded files never
 change, so a cached window cannot go stale; appends only add ids past its
 tail, which the next read-through loads. Where the log has no driver
 window (an unrecorded file), ``run()`` scans through ``read_after``, which
-loads the window once with Spark. One deliberate divergence from the
+loads the window once with Spark; when that load is empty it hands
+``run()`` the log's own ``read_after`` instead, so a hole right after the
+cursor shows ``run()`` its far edge. One deliberate divergence from the
 reference: on a miss the window is *replaced*, not extended-and-trimmed
 row by row. Same bounded memory, same hit condition for any consumer
 within one window of head.
@@ -23,7 +25,7 @@ serves rows from beyond an id hole, and after a gap fill the next poll
 (cursor at the dense head, wanted id past the cached tail) misses and
 reloads — rcache's consecutive-id sanity check. A ``poll_window`` miss
 hands ``run()`` the rows as loaded, so its own dense check and gap
-detection see the hole as on a bare log.
+check (the window's first id) see the hole as on a bare log.
 """
 
 from __future__ import annotations
@@ -109,7 +111,9 @@ class HeadCache:
         scan path, taken where ``poll_window`` returns None. A hit comes off
         the same pinned rows; a miss loads a cache window once with Spark
         (``read_after(dense_only=True)``), whose ids must be consecutive,
-        else the log broke that contract (ErrConsecEvent)."""
+        else the log broke that contract (ErrConsecEvent). A miss that
+        loads nothing (the head, or a hole at ``after + 1``) returns the
+        log's own ``read_after``, so ``run()`` sees a hole's far edge."""
         if HeadCache.disabled:
             self.misses += 1
             return self.log.read_after(after, limit, dense_only)
@@ -119,10 +123,11 @@ class HeadCache:
             rows = self.log.read_after(after, max(limit or 0, self.limit), dense_only=True).toArrow()
             rows = rows.select(ARROW_SCHEMA.names).cast(ARROW_SCHEMA)
             n = rows.num_rows
+            if not n:
+                return self.log.read_after(after, limit, dense_only)
             if dense_prefix(rows, after).num_rows != n:
                 ids = rows["event_id"]
                 raise ErrConsecEvent(f"non-consecutive window after {after}: [{ids[0]},{ids[-1]}] n={n}")
-            if n:
-                self._window = (after + 1, rows)
+            self._window = (after + 1, rows)
             rows = rows.slice(0, limit)
         return local_batch(self.spark, rows)

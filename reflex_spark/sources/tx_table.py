@@ -55,7 +55,7 @@ from pyspark.sql.types import StructType
 from reflex_spark.operators.upsert import latest_by_key
 from reflex_spark.sources import commits
 from reflex_spark.sources.commits import ConcurrentCommitError
-from reflex_spark.tables import empty_df
+from reflex_spark.tables import empty_df, plan_bytes
 
 
 _BLOOM_M = 65536  # bits per per-file Bloom (8 KiB packed)
@@ -585,11 +585,8 @@ class TxTable:
         blanket coalesce in the write path collapsed it to 1 and changed
         the judged result. Catalyst's estimate over-approximates for join
         outputs, which errs toward more files — the safe direction."""
-        try:
-            est = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:  # stats unavailable (RDD-backed plans)
+        est = plan_bytes(df)
+        if est is None:
             return df
         para = self.spark.sparkContext.defaultParallelism
         target = max(1, min(-(-est // self.TARGET_FILE_BYTES), para * 4))

@@ -65,7 +65,7 @@ from pyspark.sql.types import (
 
 from reflex_spark.sources import commits
 from reflex_spark.sources.event_log import arrow_of
-from reflex_spark.tables import write_spark_parquet
+from reflex_spark.tables import plan_bytes, write_spark_parquet
 
 _WATERMARK_FILE = "_watermark.json"  # "_" prefix → invisible to parquet scans
 
@@ -93,11 +93,6 @@ _NARROW_INTS = (pa.int8(), pa.int16(), pa.int32())
 #: ``foreign_id``), then ``n_events`` and ``sum_value`` (decimals of at
 #: most 18 digits are stored as a long).
 _DEFAULT_SIZE = {IntegerType: 4, LongType: 8, StringType: 20, DecimalType: 8}
-
-
-def _plan_bytes(df: DataFrame) -> int:
-    """Catalyst's optimized-plan size estimate for ``df`` (no job runs)."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def _groupable(schema: StructType, keys: list[str]) -> bool:
@@ -165,7 +160,7 @@ class MaterializedCounts:
         return StructType(fields)
 
     def _served_bytes(self, fresh_rows: int, schema: StructType) -> int:
-        """``_plan_bytes`` of a served batch's merge input, computed as
+        """``plan_bytes`` of a served batch's merge input, computed as
         Catalyst computes it: the fresh rows become a local relation of
         (8 + default size of each column) bytes a row, and the rollup scan
         counts its visible files' bytes."""
@@ -220,7 +215,8 @@ class MaterializedCounts:
         with the Spark shuffle."""
         fresh, cols, rows, merged = self._merge_input(batch, ledger)
         schema = merged.schema  # what the Spark merge writes (no job)
-        on_driver = _plan_bytes(rows) <= DRIVER_MERGE_BYTES and _groupable(schema, self.keys)
+        est = plan_bytes(rows)
+        on_driver = est is not None and est <= DRIVER_MERGE_BYTES and _groupable(schema, self.keys)
 
         picked = fresh.select(F.col("event_id").alias(_EVENT_ID), *cols)
         got = None

@@ -37,6 +37,7 @@ from reflex_spark.sources.event_log import (
     NOOP_FOREIGN_ID,
     NOOP_TYPE,
     EventLog,
+    Gap,
     dense_prefix,
     local_batch,
     without_noops,
@@ -44,6 +45,7 @@ from reflex_spark.sources.event_log import (
 from reflex_spark.streaming import statestore
 from reflex_spark.streaming.consumer import Consumer
 from reflex_spark.streaming.cursors import CursorStore
+from reflex_spark.streaming.notify import StubNotifier
 
 
 class ErrHeadReached(Exception):
@@ -89,7 +91,6 @@ class StreamOptions:
     batch_limit: int = 1000  # WithEventLookupLimit (rsql/db.go:27)
     drop_noops: bool = True  # noop filter (rsql/loader.go:64-94)
     poll_backoff: float = 0.2  # WithEventsBackoff (scaled for tests)
-    require_dense: bool = True  # gap detection (rsql/loader.go:96-134)
     stop: Callable[[], bool] | None = None  # graceful stop signal (→ ErrStopped)
 
 
@@ -139,10 +140,13 @@ def _load_batch(spec: Spec, after: int, dense: bool = False):
 
 def _scan_window(spec: Spec, cursor: int):
     """The Spark scan path of a poll: the cached window after the cursor
-    and its (count, max id, non-noop count) from one agg job."""
+    and its (count, max id, non-noop count, first id) from one agg job;
+    a first id past ``cursor + 1`` counts 0 rows (no dense prefix). With
+    ``lag_seconds`` the agg sees the lag-truncated window, so a hole's far
+    edge shows once its event is older than the lag."""
     window = _load_batch(spec, cursor).cache()
     try:
-        aggs = [F.max("event_id").alias("m"), F.count(F.lit(1)).alias("n")]
+        aggs = [F.min("event_id").alias("lo"), F.max("event_id").alias("m"), F.count(F.lit(1)).alias("n")]
         if spec.options.drop_noops:
             # only reference the noop columns when filtering is on:
             # adapted tables without foreign_id stream fine with
@@ -152,7 +156,10 @@ def _scan_window(spec: Spec, cursor: int):
             )
             aggs.append(F.count(F.when(~is_noop, 1)).alias("n_real"))
         row = window.agg(*aggs).collect()[0]
-        if spec.options.require_dense and row["n"] and row["m"] != cursor + row["n"]:
+        first = row["lo"]
+        if row["n"] and first > cursor + 1:
+            return window, 0, None, 0, first
+        if row["n"] and row["m"] != cursor + row["n"]:
             # Hole inside the window (a reader racing a mid-commit
             # multi-file append): fall back to the dense-truncated plan so
             # only the contiguous prefix is delivered.
@@ -162,15 +169,16 @@ def _scan_window(spec: Spec, cursor: int):
     except BaseException:
         window.unpersist()
         raise
-    return window, row["n"], row["m"], row["n_real"] if spec.options.drop_noops else row["n"]
+    return window, row["n"], row["m"], row["n_real"] if spec.options.drop_noops else row["n"], first
 
 
 def _local_window(rows: pa.Table, cursor: int, opts: StreamOptions):
     """The driver path of a poll over ``EventLog.poll_window``'s rows
     (id-ordered, ids > cursor): ``_load_batch``'s dense-prefix and lag
-    truncation, then (rows to deliver, count, max id, non-noop count)."""
-    if opts.require_dense:
-        rows = dense_prefix(rows, cursor)
+    truncation, then (rows to deliver, count, max id, non-noop count,
+    first id). The first id is read before the lag truncation."""
+    first = rows["event_id"][0].as_py() if rows.num_rows else None
+    rows = dense_prefix(rows, cursor)
     if opts.lag_seconds:
         ts = rows["timestamp"]
         cutoff = pa.scalar(int((time.time() - opts.lag_seconds) * 1e6), ts.type)
@@ -181,7 +189,7 @@ def _local_window(rows: pa.Table, cursor: int, opts: StreamOptions):
     m = rows["event_id"][-1].as_py() if n else None
     if opts.drop_noops:
         rows = _drop_noops(rows)
-    return rows, n, m, rows.num_rows
+    return rows, n, m, rows.num_rows, first
 
 
 def _drop_noops(rows: pa.Table) -> pa.Table:
@@ -208,9 +216,12 @@ def run(spec: Spec, max_batches: int | None = None) -> int:
     landing mid-batch cannot grow it. The batch's JVM DataFrame is built
     on the consumer's first Spark use of it; a consumer that reads the
     rows through ``arrow_of`` (``MaterializedCounts.apply_batch``) never
-    builds it. Otherwise the
-    poll scans with Spark (``_load_batch`` + one agg job), and the batch
-    is bounded by the max id the cursor will commit.
+    builds it. Otherwise the poll scans with Spark (``_load_batch`` + one
+    agg job), and the batch is bounded by the max id the cursor will
+    commit. Either way only the dense prefix is delivered, and a window
+    starting past ``cursor + 1`` names the hole ``Gap(cursor, first id)``
+    for the log's gap listeners (reference gap detector,
+    rsql/loader.go:96-134).
     """
     name = spec.consumer.name
     cursor = spec.cstore.get_cursor(name)
@@ -218,9 +229,12 @@ def run(spec: Spec, max_batches: int | None = None) -> int:
         cursor = spec.log.head()
         spec.cstore.set_cursor(name, cursor)
 
-    notifier = getattr(spec.log, "notifier", None)
+    # Parked polls wait on the insert notifier (G4): an append wakes them
+    # at once; the backoff is only the fallback for out-of-process writers.
+    notifier = getattr(spec.log, "notifier", None) or StubNotifier()
     poll_window = getattr(spec.log, "poll_window", None)
     batches = 0
+    emitted = None  # the last gap handed to the listeners
     try:
         while max_batches is None or batches < max_batches:
             if spec.options.stop is not None and spec.options.stop():
@@ -229,7 +243,7 @@ def run(spec: Spec, max_batches: int | None = None) -> int:
             # and the wait fires the already-registered event, so the
             # waiter wakes immediately (reference ch := notifier.C() before
             # the head re-check — no lost wakeups).
-            sub = notifier.subscribe() if notifier is not None else None
+            sub = notifier.subscribe()
             window = None
             try:
                 try:
@@ -241,41 +255,24 @@ def run(spec: Spec, max_batches: int | None = None) -> int:
                 except FileNotFoundError:
                     continue  # a file went away under the read (compaction): re-poll
                 if rows is not None:
-                    # a hole can only explain an empty window if rows exist
-                    gap_possible = rows.num_rows > 0
-                    rows, n, m, n_real = _local_window(rows, cursor, spec.options)
+                    rows, n, m, n_real, first = _local_window(rows, cursor, spec.options)
                 else:
-                    gap_possible = True
-                    window, n, m, n_real = _scan_window(spec, cursor)
+                    window, n, m, n_real, first = _scan_window(spec, cursor)
                 if n == 0:
-                    # Empty dense read: either true head, or the stream is
-                    # stuck behind an id hole. With gap listeners attached
-                    # (sources.gapfill.fill_gaps), detect and emit — the
-                    # filler unblocks the next poll (reference ListenGaps /
-                    # FillGaps, rsql/gapfill.go:26-40). Detection is one
-                    # ids-only agg and runs only on empty polls.
-                    if (
-                        spec.options.require_dense
-                        and gap_possible
-                        and getattr(spec.log, "_gap_listeners", None)
-                    ):
-                        gap = spec.log.detect_gap(cursor)
-                        if gap is not None:
-                            spec.log.emit_gap(gap)
-                            if spec.log.detect_gap(cursor) is not None:
-                                # listener declined to fill — back off so a
-                                # non-filling listener cannot busy-spin us
-                                time.sleep(spec.options.poll_backoff)
-                            continue  # re-poll the (now fillable) window
+                    # Empty dense read: the head, or a hole whose far edge is
+                    # the window's first id. Listeners get the gap and it is
+                    # re-polled at once; a gap still open then is emitted
+                    # again only after a backoff or wake-up (no busy-spin).
+                    if first is not None and first > cursor + 1 and getattr(spec.log, "_gap_listeners", None):
+                        gap = Gap(prev=cursor, next=first)
+                        if gap == emitted:
+                            sub.wait(spec.options.poll_backoff)
+                        emitted = gap
+                        spec.log.emit_gap(gap)
+                        continue
                     if spec.options.to_head:
                         raise ErrHeadReached(f"{name} reached head at {cursor}")
-                    if sub is not None:
-                        # Park on the insert notifier (G4): an append wakes
-                        # us instantly; the backoff is only the fallback
-                        # for out-of-process writers.
-                        sub.wait(spec.options.poll_backoff)
-                    else:
-                        time.sleep(spec.options.poll_backoff)
+                    sub.wait(spec.options.poll_backoff)
                     continue
                 n_deliver = n_real if spec.options.drop_noops else n
                 if n_deliver:
@@ -298,8 +295,7 @@ def run(spec: Spec, max_batches: int | None = None) -> int:
             finally:
                 if window is not None:
                     window.unpersist()
-                if sub is not None:
-                    notifier.unsubscribe(sub)
+                notifier.unsubscribe(sub)
     finally:
         spec.cstore.flush()
     return cursor

@@ -28,6 +28,8 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
+from reflex_spark.tables import plan_bytes
+
 PROVIDERS = {
     # Spark's default: in-memory maps + snapshot/delta files. Bounded by
     # executor heap; the right choice only when total state is small.
@@ -122,7 +124,6 @@ def stream_shuffle_partitions(
     source_df=None,
     *,
     est_bytes: int | None = None,
-    bytes_per_partition: int = STREAM_BYTES_PER_PARTITION,
     floor: int = 1,
 ) -> int:
     """Scale-adaptive ``spark.sql.shuffle.partitions`` for a stateful
@@ -136,12 +137,7 @@ def stream_shuffle_partitions(
     if env:
         return max(1, int(env))
     if est_bytes is None and source_df is not None:
-        try:
-            est_bytes = int(
-                source_df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:  # stats unavailable (local relations, RDD sources)
-            est_bytes = 0
+        est_bytes = plan_bytes(source_df) or 0  # no stats: size as empty
     if est_bytes is not None and est_bytes >= (1 << 61):
         # Catalyst's unknown-stats sentinel (defaultSizeInBytes is
         # Long.MaxValue; plan-tree sums over it overflow past it). Don't
@@ -149,7 +145,7 @@ def stream_shuffle_partitions(
         # clamping a possibly-huge source to the floor.
         return int(spark.conf.get("spark.sql.shuffle.partitions"))
     para = spark.sparkContext.defaultParallelism
-    by_size = -(-(est_bytes or 0) // bytes_per_partition)  # ceil
+    by_size = -(-(est_bytes or 0) // STREAM_BYTES_PER_PARTITION)  # ceil
     return max(1, min(floor, para), min(by_size, para * 4))
 
 

@@ -2,8 +2,9 @@
 
 Tables (TESTDATA.md): region nation customer supplier part orders lineitem
 events documents embeddings — one parquet file each under a scale-factor dir.
-Also the shared table helpers: a zero-partition ``empty_df`` and
-``write_spark_parquet``, the driver-side write of a Spark-footed file.
+Also the shared table helpers: a zero-partition ``empty_df``,
+``write_spark_parquet``, the driver-side write of a Spark-footed file, and
+``plan_bytes``, Catalyst's size estimate of a plan.
 """
 
 from __future__ import annotations
@@ -74,6 +75,15 @@ def empty_df(spark: SparkSession, schema) -> DataFrame:
     ``emptyRDD()`` has no partitions at all: jobs over it schedule zero
     tasks and unions with it add nothing."""
     return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+
+
+def plan_bytes(df: DataFrame) -> int | None:
+    """Catalyst's optimized-plan size estimate for ``df`` (no job runs);
+    None when the plan has no statistics (e.g. an RDD-backed plan)."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # noqa: BLE001 — any py4j failure means no estimate
+        return None
 
 
 def write_spark_parquet(spark: SparkSession, columns: list, schema: StructType, directory: str) -> None:

@@ -11,15 +11,21 @@ Usage::
     python tests/driver_verify.py --window          # the judged 50
     python tests/driver_verify.py --entry           # smoke entry(spark)
 
-Exit code 0 iff every requested check passes.
+Exit code 0 iff every requested check passes. It runs from any working
+directory: the repository root is this script's parent directory, and it
+goes on ``PYTHONPATH`` before the session starts, so the Python workers
+Spark forks (foreachBatch handlers, UDFs) import ``reflex_spark`` too.
 """
 
 from __future__ import annotations
 
 import argparse
 import importlib.util
+import os
 import sys
 import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> int:
@@ -30,6 +36,9 @@ def main() -> int:
     ap.add_argument("--entry", action="store_true", help="also smoke entry(spark)")
     args = ap.parse_args()
 
+    # before the session starts: its JVM, and the workers it forks,
+    # inherit this environment
+    os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
     from pyspark.sql import SparkSession
 
     spark = (
@@ -37,13 +46,11 @@ def main() -> int:
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
-    )
+    spec = importlib.util.spec_from_file_location("__spark_entry__", os.path.join(ROOT, "__spark_entry__.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from tests.oracle_harness import compare, run_oracle
 
     failures: list[str] = []

@@ -43,6 +43,7 @@ from reflex_spark.streaming import (
     run,
 )
 from reflex_spark.streaming.materialize import MaterializedCounts
+from reflex_spark.tables import plan_bytes
 from reflex_spark.streaming.run import run_stream
 from tests.conftest import jobs_in
 
@@ -356,7 +357,7 @@ def _served_merge_bytes(mat: MaterializedCounts, batch) -> tuple[int, int]:
     _, _, rows, merged = mat._merge_input(batch, ledger)
     assert schema == merged.schema
     fresh = mat._fresh_rows(event_log.arrow_of(batch), ledger.get("max_event_id"))
-    return mat._served_bytes(fresh.num_rows, schema), materialize._plan_bytes(rows)
+    return mat._served_bytes(fresh.num_rows, schema), plan_bytes(rows)
 
 
 @pytest.mark.parametrize(
@@ -809,3 +810,22 @@ def test_only_the_commit_module_makes_control_files_visible():
             if means.search(f.read()):
                 users.add(os.path.relpath(path, pkg))
     assert users == {os.path.join("sources", "commits.py")}
+
+
+def test_insert_and_fill_noops_stamp_now_on_a_non_utc_host(spark, tmp_path, monkeypatch):
+    """``insert`` and ``fill_noops`` stamp the current instant whatever the
+    host's zone: a naive UTC wall time would be read back as local time,
+    hours off, and held inside any ``lag_seconds``."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        log = EventLog(spark, str(tmp_path / "log"))
+        log.insert("a", 1)
+        assert log.fill_noops([2]) == 1
+        now = time.time()
+        stored = log.read().selectExpr("event_id", "unix_micros(timestamp) AS us").orderBy("event_id").collect()
+        assert [r["event_id"] for r in stored] == [1, 2]
+        assert all(abs(r["us"] / 1e6 - now) < 60 for r in stored), [r["us"] / 1e6 - now for r in stored]
+    finally:
+        monkeypatch.undo()
+        time.tzset()

@@ -25,6 +25,7 @@ from reflex_spark.sources.memory import EPOCH, make_events, seed_log
 from reflex_spark.streaming import (
     Consumer,
     ErrHeadReached,
+    ErrStopped,
     MemCursorStore,
     Spec,
     StreamOptions,
@@ -315,3 +316,45 @@ def test_run_stream_over_head_cache(spark, tmp_path):
                 Consumer("s", lambda df, m: got.extend(r["event_id"] for r in df.select("event_id").collect())))
     run_stream(spec, str(tmp_path / "ckpt"), max_files_per_trigger=1)
     assert got == list(range(1, 7))
+
+
+@pytest.mark.parametrize("covered, most_jobs", [(True, 1), (False, 16)])
+def test_gap_episode_is_found_from_the_window_run_read(spark, tmp_path, covered, most_jobs):
+    """run() names a hole from the window it polled: on a covered log
+    (compaction folds ids 1-3 and a raw id 5 into one record) the whole
+    episode (detect, grace re-checks, fill, deliver) runs one Spark job,
+    the noop file's write; a Spark-scanned log pays its scans."""
+    log = seed_log(spark, str(tmp_path / "log"), [(1, f"u{i}") for i in range(3)])
+    _write_raw(spark, log.path, [5])  # id 4 missing
+    if covered:
+        log.compact()
+    fill_gaps(log, grace_seconds=0.2, recheck_interval=0.05)
+    spec = Spec(log, MemCursorStore(), Consumer("c", lambda df, m: None),
+                StreamOptions(to_head=True, batch_limit=10))
+
+    def drain():
+        with pytest.raises(ErrHeadReached):
+            run(spec)
+
+    jobs = jobs_in(spark, drain)
+    assert jobs == most_jobs if covered else jobs <= most_jobs
+    assert spec.cstore.get_cursor("c") == 5
+    assert log.read().where("event_id = 4 AND foreign_id = '0'").count() == 1
+
+
+def test_gap_left_open_is_re_emitted_once_per_backoff(spark, tmp_path):
+    """A listener that does not fill the hole gets the same gap again no
+    faster than once per poll backoff, and a to_head run standing at the
+    open gap keeps waiting instead of reporting the head."""
+    log = seed_log(spark, str(tmp_path / "log"), [(1, f"u{i}") for i in range(3)])
+    _write_raw(spark, log.path, [5])  # id 4 missing
+    log.compact()
+    emits = []
+    log.listen_gaps(lambda gap: emits.append((time.monotonic(), gap)))
+    spec = Spec(log, MemCursorStore(), Consumer("c", lambda df, m: None),
+                StreamOptions(to_head=True, poll_backoff=0.2, stop=lambda: len(emits) >= 4))
+    with pytest.raises(ErrStopped):
+        run(spec)
+    assert {gap for _, gap in emits} == {Gap(prev=3, next=5)}
+    assert all(b - a >= 0.19 for (a, _), (b, _) in zip(emits, emits[1:]))
+    assert spec.cstore.get_cursor("c") == 3

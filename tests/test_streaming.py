@@ -28,6 +28,7 @@ from reflex_spark.streaming.cursors import CursorRegressionError
 from reflex_spark.streaming.patterns import (
     AckConsumer,
     await_event,
+    batch_spec,
     best_effort_consumer,
     bootstrap_spec,
     dead_letter_consumer,
@@ -88,6 +89,29 @@ def test_run_consumes_all_and_advances_cursor(spark, tmp_path, monkeypatch):
             run(spec)
         assert seen == [1, 2, 3, 4, 5, 6, 7]
         assert store.get_cursor("c1") == 7
+
+
+def test_batch_spec_flushes_flush_len_events_then_sets_the_cursor(spark, tmp_path):
+    """P1 batch window: each flush is one consume call of ``flush_len``
+    events (the last one short), and the cursor is set after each flush."""
+    log = seed_log(spark, str(tmp_path / "log"), [(1, str(i)) for i in range(7)])
+    sets = []
+
+    class Store(MemCursorStore):
+        def set_cursor(self, consumer, cursor):
+            sets.append(cursor)
+            super().set_cursor(consumer, cursor)
+
+    store, flushes = Store(), []
+
+    def consume_batch(df, meta):
+        flushes.append(([r["event_id"] for r in df.select("event_id").collect()], store.get_cursor("b")))
+
+    spec = batch_spec(log, store, "b", consume_batch, flush_len=3, to_head=True)
+    with pytest.raises(ErrHeadReached):
+        run(spec)
+    assert flushes == [([1, 2, 3], 0), ([4, 5, 6], 3), ([7], 6)]
+    assert sets == [3, 6, 7]
 
 
 def test_run_resumes_from_cursor(spark, tmp_path):
